@@ -328,6 +328,7 @@ class FeatureRegistry:
         self._persisted = False
         self._access_log: list[dict[str, Any]] = []
         self._seq = 0
+        self._version = 0  # bumped by every append to the value log
         self._lock = threading.Lock()
 
     # -- registration (ref :253-330) ------------------------------------
@@ -610,6 +611,7 @@ class FeatureRegistry:
             row["seq"] = self._seq
             self._seq += 1
             self._buffer.append(tuple(row[n] for n in VALUES_SCHEMA.fieldNames()))
+            self._version += 1
 
     def materialize_derived_feature(
         self,
@@ -671,6 +673,16 @@ class FeatureRegistry:
             .parquet(f"{self.storage_dir}/feature_values")
         )
         self._persisted = True
+        with self._lock:
+            self._version += 1
+
+    @property
+    def values_version(self) -> int:
+        """Counter of appends to the value log (both ingest paths).
+        Readers that derive state from :meth:`values_df` compare it to
+        the version they built from; :meth:`flush` only moves rows from
+        the buffer to disk, so it leaves the version alone."""
+        return self._version
 
     def flush(self) -> None:
         """Persist buffered driver-side rows (append-only blind write)."""

@@ -3,13 +3,14 @@ freshness, metrics.
 
 Re-expresses /root/reference/src/serving/feature_server.py as Spark plans:
 
-- Online store (ref :203 ``dict[store_key → {...}]``) → a *latest-value*
-  wide table maintained by merge-upsert (stores.LatestStore), persisted +
-  cached; point-gets are filters on the cached table (OP-3).  The
-  reference's 100 ms online SLA (ref :105) is out of reach for a Spark job
-  per request — the cached-table read is the documented mitigation
-  (SURVEY.md §4.2); a production deployment exports this table to a KV
-  store.
+- Online store (ref :203 ``dict[store_key → {...}]``) → a driver-resident
+  view ``entity_id → feature_id → latest row``.  One Spark query
+  (latest_per_key over the value log, fetched as Arrow) builds it at the
+  first read after the log changes; every other LRU miss is a dict lookup
+  (OP-3), inside the reference's 100 ms online SLA (ref :105).  The first
+  read after a write pays the rebuild.  The latest table must fit in
+  driver memory; larger tables are exported to a KV table instead
+  (stores.export_online_kv / kv_point_get).
 - Offline store (ref :204 append-only list) → append-only long table
   shared with the registry (system of record, bitemporal).
 - get_point_in_time_features (ref :355-408, O(spine×values×features)
@@ -17,9 +18,8 @@ Re-expresses /root/reference/src/serving/feature_server.py as Spark plans:
   operators.pit.point_in_time_pivot (join + multi-feature conditional
   max_by — 2 shuffles total, independent of feature count), wide output
   with {name}__timestamp companions (OP-16 + OP-12 fused).
-- LRU cache + TTL (ref :136-176) → driver-side LRU over collected vectors
-  (request-level concern, not a data-plane operator), plus Spark-side
-  ``.cache()`` of the online table.
+- LRU cache + TTL (ref :136-176) → driver-side LRU over assembled
+  vectors (request-level concern, not a data-plane operator).
 - Metrics (ref :111-133, :481-493) → counters + a request-latency log
   aggregated with avg/percentile_approx (OP-22/23/25).
 """
@@ -58,9 +58,10 @@ class ServingMode(str, Enum):
     naming the engine path each mode maps to:
 
     - ``ONLINE``: low-latency single-entity reads —
-      :meth:`FeatureServer.get_online_features` over the cached
-      latest-value table, or :func:`stores.kv_point_get` against the
-      exported KV table (OP-3).
+      :meth:`FeatureServer.get_online_features`, a dict lookup in the
+      driver-resident latest-value view, or :func:`stores.kv_point_get`
+      against the exported KV table when the view would not fit in driver
+      memory (OP-3).
     - ``OFFLINE``: batch/historical —
       :meth:`FeatureServer.get_offline_features` and the point-in-time
       training joins (:meth:`FeatureServer.get_point_in_time_features`,
@@ -120,6 +121,20 @@ class FeatureVector:
         return out
 
 
+#: the online view: entity_id → feature_id → latest row
+_OnlineIndex = dict[str, dict[str, dict[str, Any]]]
+
+
+def _withhold(vec: FeatureVector, names: list[str]) -> FeatureVector:
+    """``vec`` with ``names`` null-filled, on copies of its dicts (the LRU
+    may share the originals)."""
+    if names:
+        vec.features = {**vec.features, **dict.fromkeys(names)}
+        vec.timestamps = {**vec.timestamps, **dict.fromkeys(names)}
+        vec.freshness = {**vec.freshness, **dict.fromkeys(names, "expired")}
+    return vec
+
+
 class _LRUCache:
     """Request-level LRU with TTL (ref feature_server.py:136-176)."""
 
@@ -165,31 +180,50 @@ class FeatureServer:
         self.spark = registry.spark
         self.config = config or ServingConfig()
         self._cache = _LRUCache(self.config.cache_max_size, self.config.cache_ttl_seconds)
-        self._online_cache: DataFrame | None = None
+        #: (registry values_version it was built from, online index)
+        self._view: tuple[int, _OnlineIndex] | None = None
         self._latencies: list[float] = []
         self._requests = 0
         self._stale_served = 0
 
     # -- online path (ref :206-288, OP-3) --------------------------------
 
+    #: the columns an online row needs: the key, the event time and every
+    #: value slot (the slot a feature reads depends on its declared type)
+    _VIEW_COLUMNS = ["entity_id", "feature_id", "event_timestamp"] + sorted(
+        set(SLOT_FOR.values())
+    )
+
     def _online_latest(self) -> DataFrame:
-        """Latest-value table per (feature, entity) — the online store.
-        Cached (ref's LRU analog at the table level); invalidated on write."""
-        if self._online_cache is None:
-            values = self.registry.values_df()
-            latest = latest_per_key(
-                values,
-                ["feature_id", "entity_id"],
-                "event_timestamp",
-                tiebreak=["created_timestamp", "seq"],
-            )
-            self._online_cache = latest.cache()
-        return self._online_cache
+        """Latest-value row per (feature, entity), as a plan over the
+        registry's value log."""
+        return latest_per_key(
+            self.registry.values_df(),
+            ["feature_id", "entity_id"],
+            "event_timestamp",
+            tiebreak=["created_timestamp", "seq"],
+        )
+
+    def _online_view(self) -> _OnlineIndex:
+        """The online store (ref :203): ``entity_id → feature_id → row``
+        in driver memory.  Built by one Spark query at the first read after
+        the value log changed (the registry's ``values_version``), so an
+        LRU miss is a dict lookup.  The whole latest table must fit in
+        driver memory; larger tables go through stores.export_online_kv."""
+        view = self._view
+        version = self.registry.values_version
+        if view is not None and view[0] == version:
+            return view[1]
+        index: _OnlineIndex = {}
+        table = self._online_latest().select(*self._VIEW_COLUMNS).toArrow()
+        for row in table.to_pylist():
+            index.setdefault(row["entity_id"], {})[row["feature_id"]] = row
+        self._view = (version, index)
+        return index
 
     def invalidate_online_cache(self) -> None:
-        if self._online_cache is not None:
-            self._online_cache.unpersist()
-            self._online_cache = None
+        """Drop the online view; the next read rebuilds it."""
+        self._view = None
 
     def _cache_key(self, entity_type: str, entity_id: str, names: list[str]) -> str:
         # Entity prefix stays plain so invalidate_entity can prefix-match
@@ -208,48 +242,45 @@ class FeatureServer:
         user_id: str | None = None,
         user_roles: list[str] | None = None,
     ) -> FeatureVector:
-        """Ref :206-288: LRU probe → point-get on the latest table →
-        freshness classification → null-fill for missing names."""
+        """Ref :206-288: PHI access check → LRU probe → online-view lookup
+        → freshness classification → null-fill for missing names.
+
+        The LRU holds vectors without regard to the caller, so the access
+        check runs on every request: a PHI feature the caller's roles do
+        not cover is nulled (and audited as ``access_denied``), on a hit
+        as well as on a miss, as in FeatureRegistry.get_feature_vector."""
         t0 = time.monotonic()
         self._requests += 1
+        by_name = {
+            f.name: f
+            for f in self.registry.list_features(entity_type=entity_type)
+            if f.name in feature_names
+        }
+        denied = []
+        for name, feature in by_name.items():
+            try:
+                self.registry._check_access(feature, user_id, user_roles)
+            except PermissionError:
+                denied.append(name)
         key = self._cache_key(entity_type, entity_id, feature_names)
         cached = self._cache.get(key)
         if cached is not None:
-            vec = FeatureVector(**cached)
+            vec = _withhold(FeatureVector(**cached), denied)
             vec.cache_hit = True
             vec.latency_ms = (time.monotonic() - t0) * 1000
             vec.retrieved_at = _utcnow()
             self._record_latency(vec.latency_ms)
             return vec
 
-        by_name = {
-            f.name: f
-            for f in self.registry.list_features(entity_type=entity_type)
-            if f.name in feature_names
-        }
-        wanted_ids = {f.feature_id: f for f in by_name.values()}
-        rows = []
-        if wanted_ids:
-            rows = (
-                self._online_latest()
-                .where(
-                    (F.col("entity_id") == str(entity_id))
-                    & F.col("feature_id").isin(list(wanted_ids))
-                )
-                .collect()
-            )
+        found = self._online_view().get(str(entity_id), {}) if by_name else {}
         now = _utcnow()
         features: dict[str, Any] = {}
         timestamps: dict[str, datetime | None] = {}
         fresh: dict[str, str] = {}
-        found = {}
-        for r in rows:
-            feature = wanted_ids[r["feature_id"]]
-            found[feature.name] = r
         for name in feature_names:
             feature = by_name.get(name)
-            r = found.get(name)
-            if feature is None or r is None:
+            r = found.get(feature.feature_id) if feature is not None else None
+            if r is None:
                 # null-fill path (ref :520-527)
                 features[name] = None
                 timestamps[name] = None
@@ -285,6 +316,7 @@ class FeatureServer:
                 "freshness": vec.freshness,
             },
         )
+        vec = _withhold(vec, denied)
         vec.latency_ms = (time.monotonic() - t0) * 1000
         self._record_latency(vec.latency_ms)
         return vec
@@ -430,9 +462,10 @@ class FeatureServer:
         features: dict[str, Any],
         timestamp: datetime | None = None,
     ) -> None:
-        """Dual write: append to the offline (long) store via the registry,
-        invalidate online caches (ref :410-455).  The online table is
-        re-derived from the system of record — online/offline consistency
+        """Dual write: append to the offline (long) store via the registry
+        and drop the entity's LRU entries (ref :410-455).  The append bumps
+        the registry's ``values_version``, so the next read re-derives the
+        online view from the system of record — online/offline consistency
         by construction."""
         ts = timestamp or _utcnow()
         for name, value in features.items():
@@ -441,7 +474,6 @@ class FeatureServer:
                 feature.feature_id, entity_id, value, event_timestamp=ts
             )
         self._cache.invalidate_entity(f"{entity_type}:{entity_id}:")
-        self.invalidate_online_cache()
 
     # -- metrics (ref :111-133, :481-493, OP-22..25) -----------------------
 
@@ -475,8 +507,8 @@ class FeatureServer:
         self._cache.misses = 0
 
     def freshness_report(self, now: datetime | None = None) -> DataFrame:
-        """OP-47: freshness classification over the whole online table —
-        a plan, not a loop (when() CASE per SURVEY.md OP-36)."""
+        """OP-47: freshness classification over the whole latest-value
+        table — a plan, not a loop (when() CASE per SURVEY.md OP-36)."""
         now = now or _utcnow()
         return self._online_latest().select(
             "feature_id",
