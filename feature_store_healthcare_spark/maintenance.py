@@ -16,13 +16,12 @@ schedule.  At 100 TB:
 
 from __future__ import annotations
 
-import math
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from feature_store_healthcare_spark.operators.similarity import _col_sql
+from feature_store_healthcare_spark.sqlgen import double_lit, ident, var
 
 
 def _utcnow() -> datetime:
@@ -155,55 +154,23 @@ def incremental_agg(
         elif s == "hist":
             if hist_lo is None or hist_hi is None or not hist_hi > hist_lo:
                 raise ValueError("hist spec needs hist_lo < hist_hi bounds")
+            # one parsed SQL string: the 50-cell sum list built through
+            # the Column API measured 0.61 s / ~2.2k py4j commands per call
             width = (hist_hi - hist_lo) / hist_bins
-            # one parsed SQL string instead of a ~6·bins py4j Column loop
-            # (r15 opt, the similarity._dot / covariance-cells mechanism;
-            # guide §5 driver work): building the 50-cell when-chain
-            # through the Column API measured 0.61 s / ~2.2k py4j
-            # commands PER CALL; the parsed text yields the identical
-            # expression tree in one round trip.  Column fallback kept.
-            vs = _col_sql(v)
-            if vs is not None and all(
-                math.isfinite(x) for x in (hist_lo, hist_hi, width)
-            ):
-                idx_sql = (
-                    f"LEAST(GREATEST(FLOOR((CAST(({vs}) AS DOUBLE) - "
-                    f"{float(hist_lo)!r}D) / {width!r}D), 0), {hist_bins - 1})"
-                )
-                cells = ", ".join(
-                    f"sum(CASE WHEN {idx_sql} = {i} THEN 1 ELSE 0 END)"
-                    for i in range(hist_bins)
-                )
-                aggs.append(
-                    F.expr(
-                        f"struct(array({cells}) AS counts, "
-                        f"{float(hist_lo)!r}D AS lo, "
-                        f"{float(hist_hi)!r}D AS hi)"
-                    ).alias("state_hist")
-                )
-            else:
-                idx = F.least(
-                    F.greatest(
-                        F.floor(
-                            (v.cast("double") - F.lit(hist_lo)) / F.lit(width)
-                        ),
-                        F.lit(0),
-                    ),
-                    F.lit(hist_bins - 1),
-                )
-                counts = F.array(
-                    *[
-                        F.sum(F.when(idx == i, 1).otherwise(0)).alias(f"__b{i}")
-                        for i in range(hist_bins)
-                    ]
-                )
-                aggs.append(
-                    F.struct(
-                        counts.alias("counts"),
-                        F.lit(float(hist_lo)).alias("lo"),
-                        F.lit(float(hist_hi)).alias("hi"),
-                    ).alias("state_hist")
-                )
+            idx_sql = (
+                f"LEAST(GREATEST(FLOOR((CAST({ident(value_col)} AS DOUBLE) - "
+                f"{double_lit(hist_lo)}) / {double_lit(width)}), 0), {hist_bins - 1})"
+            )
+            cells = ", ".join(
+                f"sum(CASE WHEN {idx_sql} = {i} THEN 1 ELSE 0 END)"
+                for i in range(hist_bins)
+            )
+            aggs.append(
+                F.expr(
+                    f"struct(array({cells}) AS counts, "
+                    f"{double_lit(hist_lo)} AS lo, {double_lit(hist_hi)} AS hi)"
+                ).alias("state_hist")
+            )
         else:
             raise ValueError(f"unsupported mergeable spec: {s}")
     return batch.groupBy(*keys).agg(*aggs)
@@ -261,67 +228,36 @@ def merge_agg_states(
     return e.join(b, on=cond, how="full_outer").select(*out_keys, *merged)
 
 
-def _hist_quantile_sql(state: str, q: float) -> str:
-    """SQL text twin of :func:`_hist_quantile` over the state column
-    expression ``state`` — operator-for-operator the same tree the
-    Column/lambda construction builds (r15 opt: the two lambda folds
-    cost 0.37 s / ~1.3k py4j commands per finalize call; the parsed
-    text is one round trip)."""
-    c = f"({state}).counts"
-    lo, hi = f"({state}).lo", f"({state}).hi"
+def _hist_quantile_sql(q: float) -> str:
+    """Quantile ``q`` of the histogram state ``state_hist``: walk the
+    cumulative counts to the target rank, linear-interpolate inside the
+    bucket (error ≤ one bucket width).  Pure array HOF, evaluated per
+    state row at read time; parsed from text because the Column/lambda
+    build cost ~1.3k py4j commands per finalize call."""
+    state = ident("state_hist")
+    i, a, x, acc, b = var("i"), var("a"), var("x"), var("acc"), var("b")
+    c = f"{state}.counts"
+    lo, hi = f"{state}.lo", f"{state}.hi"
     width = f"(({hi} - {lo}) / size({c}))"
-    total = f"aggregate({c}, CAST(0 AS BIGINT), (a, x) -> a + x)"
-    target = f"({float(q)!r}D * CAST({total} AS DOUBLE))"
+    total = f"aggregate({c}, CAST(0 AS BIGINT), ({a}, {x}) -> {a} + {x})"
+    target = f"({double_lit(q)} * CAST({total} AS DOUBLE))"
     indexed = (
         f"transform(sequence(0, size({c}) - 1), "
-        f"i -> struct(i AS i, element_at({c}, i + 1) AS c))"
+        f"{i} -> struct({i} AS i, element_at({c}, {i} + 1) AS c))"
     )
     acc0 = "struct(CAST(0.0 AS DOUBLE) AS cum, CAST(NULL AS DOUBLE) AS ans)"
-    cnt = "CAST(b.c AS DOUBLE)"
+    cnt = f"CAST({b}.c AS DOUBLE)"
     est = (
-        f"({lo} + (CAST(b.i AS DOUBLE) + ({target} - acc.cum) / {cnt}) "
+        f"({lo} + (CAST({b}.i AS DOUBLE) + ({target} - {acc}.cum) / {cnt}) "
         f"* {width})"
     )
     step = (
-        f"(acc, b) -> struct(acc.cum + {cnt} AS cum, "
-        f"CASE WHEN acc.ans IS NULL AND (acc.cum + {cnt}) >= {target} "
-        f"AND {cnt} > 0 THEN LEAST({est}, {hi}) ELSE acc.ans END AS ans)"
+        f"({acc}, {b}) -> struct({acc}.cum + {cnt} AS cum, "
+        f"CASE WHEN {acc}.ans IS NULL AND ({acc}.cum + {cnt}) >= {target} "
+        f"AND {cnt} > 0 THEN LEAST({est}, {hi}) ELSE {acc}.ans END AS ans)"
     )
     out = f"aggregate({indexed}, {acc0}, {step})"
     return f"CASE WHEN {total} > 0 THEN COALESCE(({out}).ans, {hi}) END"
-
-
-def _hist_quantile(state: F.Column, q: float) -> F.Column:
-    """Approximate quantile from a fixed-edge histogram state: walk the
-    cumulative counts to the target rank, linear-interpolate inside the
-    bucket (the classic equi-width quantile estimate; error ≤ one bucket
-    width).  Pure array HOF — evaluated per state row at read time."""
-    counts = state["counts"]
-    lo, hi = state["lo"], state["hi"]
-    bins = F.size(counts)
-    width = (hi - lo) / bins
-    total = F.aggregate(counts, F.lit(0).cast("bigint"), lambda a, x: a + x)
-    target = F.lit(q) * total.cast("double")
-    indexed = F.transform(
-        F.sequence(F.lit(0), bins - 1),
-        lambda i: F.struct(i.alias("i"), F.element_at(counts, i + 1).alias("c")),
-    )
-    acc0 = F.struct(
-        F.lit(0.0).alias("cum"), F.lit(None).cast("double").alias("ans")
-    )
-
-    def step(acc, b):
-        cnt = b["c"].cast("double")
-        new_cum = acc["cum"] + cnt
-        hit = acc["ans"].isNull() & (new_cum >= target) & (cnt > 0)
-        est = lo + (b["i"].cast("double") + (target - acc["cum"]) / cnt) * width
-        return F.struct(
-            new_cum.alias("cum"),
-            F.when(hit, F.least(est, hi)).otherwise(acc["ans"]).alias("ans"),
-        )
-
-    out = F.aggregate(indexed, acc0, step)
-    return F.when(total > 0, F.coalesce(out["ans"], hi))
 
 
 def finalize_agg_states(
@@ -347,14 +283,8 @@ def finalize_agg_states(
     if "state_hll" in have:
         cols.append(F.hll_sketch_estimate("state_hll").alias("n_distinct_est"))
     if "state_hist" in have:
-        state_sql = _col_sql(F.col("state_hist"))
         for q in quantiles:
-            name = f"p{int(round(q * 100))}"
-            if state_sql is not None and math.isfinite(float(q)):
-                qcol = F.expr(_hist_quantile_sql(state_sql, q))
-            else:
-                qcol = _hist_quantile(F.col("state_hist"), q)
-            cols.append(qcol.alias(name))
+            cols.append(F.expr(_hist_quantile_sql(q)).alias(f"p{int(round(q * 100))}"))
     return states.select(*cols)
 
 

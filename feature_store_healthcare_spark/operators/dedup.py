@@ -36,6 +36,7 @@ from feature_store_healthcare_spark.caching import (
     data_version,
     release_local_checkpoint,
 )
+from feature_store_healthcare_spark.sqlgen import ident, string_lit, var
 
 #: One-entry persisted-plan caches (see caching.PlanCache): each call site
 #: that persists a corpus- or delta-sized intermediate releases its
@@ -55,11 +56,6 @@ def release_dedup_caches(blocking: bool = False) -> None:
     for cache in (_BAND_CACHE, _SHINGLE_CACHE, _CHUNK_CACHE, _DELTA_BAND_CACHE):
         cache.release(blocking=blocking)
     _JACCARD_GUARD_MEMO.clear()
-
-
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """OP-48: drop exact duplicates on ``cols`` (all columns when None)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
 
 
 def exact_dedup_keep_min(df: DataFrame, dup_cols: list[str], id_col: str) -> DataFrame:
@@ -96,38 +92,27 @@ def shingles(
     groupBy + join back (the set size is known BEFORE the explode — don't
     re-derive it after).
     """
-    from feature_store_healthcare_spark.operators.similarity import _col_sql
-
-    tokens = F.split(normalize_text(text_col), " ")
-    # one parsed SQL string instead of the lambda-transform py4j chatter
-    # (r15 opt, the similarity._dot mechanism): same tree — the token
-    # subtree is spliced twice exactly as the Column version references
-    # it twice.  Column fallback below.
-    ts = _col_sql(tokens)
-    if ts is not None:
-        ngrams = F.expr(
-            f"transform(sequence(0, greatest(size({ts}) - {int(n)}, 0)), "
-            f"i -> array_join(slice({ts}, i + 1, {int(n)}), ' '))"
-        )
-    else:
-        ngrams = F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(0))),
-            lambda i: F.array_join(F.slice(tokens, i + 1, n), " "),
-        )
-    # Docs shorter than n tokens yield a single (short) shingle — keep it.
-    # NULL text yields NO row: without the filter, size(NULL)=-1 walks the
-    # NULL chain to a single NULL shingle per NULL-text doc, every such
-    # doc gets the IDENTICAL degenerate signature/band key, and k NULL
-    # docs explode into O(k²) mutual LSH candidates (1M scraped rows with
-    # missing text → ~5e11 pairs) that cluster_survivors then collapses
-    # to one survivor.  The Arrow kernel already emits nothing for NULL
-    # text, so this is also what makes the documented family parity true.
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
+    # One parsed SQL string over the tokens projected into a reserved
+    # column: the text splices only names (no regex literal, no user
+    # column a lambda can capture).  Docs shorter than n tokens yield a
+    # single (short) shingle — keep it.  NULL text yields NO row (NULL
+    # array, which explode drops): unguarded, size(NULL) walks to one
+    # NULL shingle per NULL-text doc, all with the IDENTICAL degenerate
+    # band key — k such docs become O(k²) mutual LSH candidates.  The
+    # Arrow kernel also emits nothing for NULL text (family parity).
+    toks, i = ident("__sg_tokens"), var("i")
+    ngrams = F.expr(
+        f"CASE WHEN {toks} IS NOT NULL THEN "
+        f"transform(sequence(0, greatest(size({toks}) - {int(n)}, 0)), "
+        f"{i} -> array_join(slice({toks}, {i} + 1, {int(n)}), {string_lit(' ')})) END"
+    )
     arr = F.array_distinct(ngrams) if distinct else ngrams
-    cols = [F.col(id_col)]
+    id_c = F.col(id_col)
+    cols = [id_c]
     if size_col is not None:
         cols.append(F.size(arr).alias(size_col))
-    return df.where(c.isNotNull()).select(*cols, F.explode(arr).alias("shingle"))
+    tokens = F.split(normalize_text(text_col), " ").alias("__sg_tokens")
+    return df.select(id_c, tokens).select(*cols, F.explode(arr).alias("shingle"))
 
 
 def minhash_signatures(
@@ -164,16 +149,17 @@ def minhash_signatures(
     portable builder and the explicit xxhash64-family builder.
     """
     sh = shingles(df, id_col, text_col, n=n)
-    # each min-hash aggregate as ONE parsed SQL string (r15 opt): the
-    # k-way Column loop cost ~8 py4j round trips per seed per call;
-    # the text parses to the identical tree (int seed literals, same
-    # substring/md5/concat shapes — results bit-equal, test-pinned).
+    # each min-hash aggregate as one parsed SQL string: the Column loop
+    # cost ~8 py4j round trips per seed per call
+    shingle = ident("shingle")
     aggs = []
     for h in range(num_hashes):
         if portable:
-            elem_sql = f"substring(md5(concat('{int(h)}:', shingle)), 1, 16)"
+            elem_sql = (
+                f"substring(md5(concat({string_lit(f'{h}:')}, {shingle})), 1, 16)"
+            )
         else:
-            elem_sql = f"xxhash64({int(h)}, shingle)"
+            elem_sql = f"xxhash64({int(h)}, {shingle})"
         aggs.append(F.expr(f"min({elem_sql})").alias(f"mh_{h}"))
     return sh.groupBy(id_col).agg(*aggs)
 
@@ -1120,19 +1106,17 @@ def _banded_signatures(
     (multi-key joins over a single-column bucket layout don't engage
     Spark's bucketed-scan planning)."""
     rows_per_band = num_hashes // bands
-    # the band-entry array as ONE parsed SQL string (r15 opt): the
-    # per-band struct/md5/cast Column loop cost ~0.2 s per call of pure
-    # py4j chatter; the text parses to the identical tree (int band
-    # literal, '|'-joined string casts — digests bit-equal, test-pinned).
+    # the band-entry array as one parsed SQL string: the per-band
+    # struct/md5/cast Column loop cost ~0.2 s of py4j round trips per call
     entries = []
     for b in range(bands):
         cols_sql = ", ".join(
-            f"CAST(mh_{b * rows_per_band + i} AS STRING)"
+            f"CAST({ident(f'mh_{b * rows_per_band + i}')} AS STRING)"
             for i in range(rows_per_band)
         )
         entries.append(
-            f"struct({int(b)} AS band, "
-            f"md5(concat_ws('|', '{int(b)}', {cols_sql})) AS bkey)"
+            f"struct({int(b)} AS band, md5(concat_ws("
+            f"{string_lit('|')}, {string_lit(str(b))}, {cols_sql})) AS bkey)"
         )
     return sig.select(
         F.col(id_col), F.explode(F.expr(f"array({', '.join(entries)})")).alias("b")

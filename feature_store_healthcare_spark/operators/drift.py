@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_store_healthcare_spark.caching import PlanCache, data_version
+from feature_store_healthcare_spark.sqlgen import ident, var
 
 #: One-entry persisted-plan caches for the tiny per-key statistic frames
 #: that are referenced TWICE inside one returned plan (psi/ks: the
@@ -337,15 +338,15 @@ def robust_outliers(
     v = F.col(value_col).cast("double")
     med = _MAD_MEDIAN_CACHE.get_or_persist(
         df.groupBy(*keys).agg(
-            F.expr(f"cast(percentile({value_col}, 0.5) as double)").alias("__med")
+            F.expr(f"cast(percentile({ident(value_col)}, 0.5) as double)").alias("__med")
         ),
         version=data_version(df),
     )
     with_med = df.join(F.broadcast(med), keys)
     mad = with_med.groupBy(*keys).agg(
-        F.expr(f"cast(percentile(abs({value_col} - __med), 0.5) as double)").alias(
-            "__mad"
-        )
+        F.expr(
+            f"cast(percentile(abs({ident(value_col)} - __med), 0.5) as double)"
+        ).alias("__mad")
     )
     # ANSI mode: guard the division itself (a `when` around a consuming
     # aggregate does not stop the divide-by-zero from evaluating)
@@ -391,9 +392,11 @@ def equidepth_bins(
     """
     keys = list(keys)
     fracs = ", ".join(str(i / nbins) for i in range(1, nbins))
+    x = var("x")
     edges = df.groupBy(*keys).agg(
         F.expr(
-            f"transform(percentile({value_col}, array({fracs})), x -> cast(x as double))"
+            f"transform(percentile({ident(value_col)}, array({fracs})), "
+            f"{x} -> cast({x} as double))"
         ).alias("__edges")
     )
     v = F.col(value_col).cast("double")
@@ -550,10 +553,10 @@ def winsorize(
     out_col = out_col or f"{value_col}_wins"
     fences = df.groupBy(*keys).agg(
         F.expr(
-            f"cast(percentile({value_col}, {p_lo}) as double)"
+            f"cast(percentile({ident(value_col)}, {p_lo}) as double)"
         ).alias("__f_lo"),
         F.expr(
-            f"cast(percentile({value_col}, {p_hi}) as double)"
+            f"cast(percentile({ident(value_col)}, {p_hi}) as double)"
         ).alias("__f_hi"),
     )
     v = F.col(value_col).cast("double")

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from feature_store_healthcare_spark.sqlgen import double_lit
+
 #: md5-prefix width for arm assignment (same convention as operators.sampling)
 _PREFIX = 8
 
@@ -147,25 +149,24 @@ def logistic_regression_fit(
     d = len(feature_cols)
     # lazy: the FIRST step's aggregate job materializes (and truncates)
     # the projected feature table — an eager checkpoint plus a dedicated
-    # count() were two extra full-scan jobs per fit (r14 opt); n rides
-    # step 1's aggregate instead.
+    # count() were two extra full-scan jobs per fit; n rides step 1's
+    # aggregate instead.
     state = feats.select(
         *[F.col(c).cast("double").alias(f"__x{j + 1}") for j, c in enumerate(feature_cols)],
         F.col(label_col).cast("double").alias("__y"),
     ).localCheckpoint(eager=False)
-    dec = lambda c: F.sum(c.cast("decimal(30,10)")).cast("double")  # noqa: E731
     if n_iters < 1 and state.count() == 0:  # no step-1 aggregate to ride
         raise ValueError("logistic_regression_fit: empty feature table")
 
     n = None  # read off step 1's aggregate
     w = [0.0] * (d + 1)
     rows: list[tuple] = []
-    # try/finally (r14 ADVICE #4): the empty-table ValueError below and
-    # any mid-loop failure must release the checkpointed feature blocks
-    # too, not just the success path
+    # try/finally: the empty-table ValueError below and any mid-loop
+    # failure must release the checkpointed feature blocks too, not just
+    # the success path
     try:
         for step in range(1, n_iters + 1):
-            aggs = _logreg_step_aggs(w, d, dec, with_count=n is None)
+            aggs = _logreg_step_aggs(w, d, with_count=n is None)
             g = state.agg(*aggs).collect()[0]
             if n is None:
                 n = g["__n"]
@@ -179,9 +180,7 @@ def logistic_regression_fit(
             )
     finally:
         # the trajectory is driver-local — the checkpointed feature
-        # blocks have no readers left; free them now (they previously
-        # leaked for the session's lifetime — and on error paths until
-        # the r15 finally)
+        # blocks have no readers left; free them now
         release_local_checkpoint(state)
     schema = "step int, logloss double, " + ", ".join(
         f"w{j} double" for j in range(d + 1)
@@ -189,60 +188,27 @@ def logistic_regression_fit(
     return spark.createDataFrame(rows, schema)
 
 
-def _logreg_step_aggs(w: list[float], d: int, dec, with_count: bool) -> list[Column]:
+def _logreg_step_aggs(w: list[float], d: int, with_count: bool) -> list[Column]:
     """One GD step's aggregate list — gradient per weight, loss, and
     (step 1 only) the row count.
 
-    Built as ONE parsed SQL string per aggregate (round-15; the
-    similarity._dot mechanism from r14): the Column-API construction
-    cost ~(d+2)·40 py4j round trips PER STEP, pure driver chatter.  The
-    text yields the identical expression tree — double literals carry
-    the ``D`` suffix and ``repr``'s shortest round-trip digits, the z
-    chain keeps the same left-associated operand order — so plans and
-    results are bit-identical (plan-equality pinned in
-    tests/test_experiment.py).  Falls back to the Column loop when a
-    weight is non-finite (no SQL literal form)."""
-    import math
+    Each aggregate is one parsed SQL string: the Column-API construction
+    cost ~(d+2)·40 py4j round trips per step.  The text keeps the
+    left-associated z chain ``w0 + w1*x1 + ... + wd*xd`` and writes the
+    weights as exact double literals (:func:`sqlgen.double_lit`)."""
+    z = double_lit(w[0]) + "".join(
+        f" + ({double_lit(w[j + 1])} * __x{j + 1})" for j in range(d)
+    )
+    p = f"round(1.0D / (1.0D + exp(- ({z}))), 6)"
+    pc = f"least(greatest({p}, {double_lit(1e-6)}), {double_lit(1.0 - 1e-6)})"
+    resid = f"({p} - __y)"
 
-    y = F.col("__y")
-    if all(math.isfinite(x) for x in w):
-        lit = lambda v: repr(float(v)) + "D"  # noqa: E731
-        z = lit(w[0]) + "".join(
-            f" + ({lit(w[j + 1])} * __x{j + 1})" for j in range(d)
-        )
-        p = f"round(1.0D / (1.0D + exp(- ({z}))), 6)"
-        pc = f"least(greatest({p}, {lit(1e-6)}), {lit(1.0 - 1e-6)})"
-        resid = f"({p} - __y)"
-        dec_sql = (
-            lambda c, alias: F.expr(  # noqa: E731
-                f"cast(sum(cast({c} as decimal(30,10))) as double)"
-            ).alias(alias)
-        )
-        aggs = [dec_sql(resid, "g0")]
-        aggs += [
-            dec_sql(f"({resid} * __x{j + 1})", f"g{j + 1}") for j in range(d)
-        ]
-        aggs.append(
-            dec_sql(
-                f"- ((__y * ln({pc})) + ((1.0D - __y) * ln(1.0D - {pc})))", "__l"
-            )
-        )
-    else:
-        z = F.lit(w[0])
-        for j in range(d):
-            z = z + F.lit(w[j + 1]) * F.col(f"__x{j + 1}")
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-        pc = F.least(F.greatest(p, F.lit(1e-6)), F.lit(1.0 - 1e-6))
-        resid = p - y
-        aggs = [dec(resid).alias("g0")]
-        aggs += [
-            dec(resid * F.col(f"__x{j + 1}")).alias(f"g{j + 1}") for j in range(d)
-        ]
-        aggs.append(
-            dec(-(y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc))).alias(
-                "__l"
-            )
-        )
+    def dec(c: str, alias: str) -> Column:
+        return F.expr(f"cast(sum(cast({c} as decimal(30,10))) as double)").alias(alias)
+
+    aggs = [dec(resid, "g0")]
+    aggs += [dec(f"({resid} * __x{j + 1})", f"g{j + 1}") for j in range(d)]
+    aggs.append(dec(f"- ((__y * ln({pc})) + ((1.0D - __y) * ln(1.0D - {pc})))", "__l"))
     if with_count:
         aggs.append(F.count(F.lit(1)).alias("__n"))
     return aggs

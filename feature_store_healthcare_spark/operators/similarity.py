@@ -35,6 +35,7 @@ from feature_store_healthcare_spark.caching import (
     PlanCache,
     data_version,
 )
+from feature_store_healthcare_spark.sqlgen import ident
 
 #: One-entry cache for embedding_near_dup_pairs' inline-built LSH index
 #: (same lifecycle policy as the dedup module's caches — see
@@ -50,61 +51,37 @@ def release_similarity_caches(blocking: bool = False) -> None:
     _COSINE_GUARD_MEMO.clear()
 
 
-def _col_sql(c: Column) -> str | None:
-    """Best-effort SQL text of a column reference (Spark-4 classic
-    ``ColumnNode.sql`` — internal surface, hence the None fallback).
-    Used to build the unrolled dot/distance expressions as ONE parsed
-    SQL string instead of ~4·dim py4j round trips: constructing the
-    64-term unrolled dot through the Python Column API measured ~1.5 s
-    of pure driver↔JVM chatter PER EXPRESSION (r14 opt round), while the
-    parsed string yields the identical expression tree in ~10 ms."""
-    try:
-        return c._jc.node().sql()
-    except Exception:
-        return None
-
-
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Left-to-right sequential product sum — deterministic accumulation
-    order, double precision.
+def _dot(a: str, b: str, dim: int | None = None) -> Column:
+    """Left-to-right sequential product sum of array columns ``a`` and
+    ``b`` (names) — deterministic accumulation order, double precision.
 
     ``dim=None``: higher-order-function fold (works for any length, but
     Spark evaluates HOF lambdas interpreted — no codegen).  ``dim=n``:
     statically unrolled n-term sum — same arithmetic in the same order
     (bit-identical result), but a plain expression tree the codegen path
     can compile.  ~1.5-2× faster on 64-dim brute-force scans.  The
-    unrolled tree is built as one parsed SQL string (:func:`_col_sql`):
-    the optimized plan is identical to the Column-API loop (r14
-    plan-diff verified), only the ~4·dim-round-trip construction cost
-    goes away."""
-    if dim is not None:
-        sa, sb = _col_sql(a), _col_sql(b)
-        if sa is not None and sb is not None:
-            # parenthesize the spliced column text (r14 ADVICE): a
-            # compound expression's .sql() may not self-parenthesize, and
-            # an unwrapped subscript would bind to its last token —
-            # silently wrong scores.  Parens leave the parsed tree (and
-            # plan) identical for the bare references every current call
-            # site passes.
-            return F.expr(
-                " + ".join(
-                    f"(CAST(({sa})[{i}] AS DOUBLE) * CAST(({sb})[{i}] AS DOUBLE))"
-                    for i in range(dim)
-                )
-            )
-        total = a[0].cast("double") * b[0].cast("double")
-        for i in range(1, dim):
-            total = total + a[i].cast("double") * b[i].cast("double")
-        return total
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    unrolled tree is parsed from one SQL string: assembling it through
+    the Column API measured ~1.5 s of py4j round trips per expression,
+    the parsed text ~10 ms for the identical tree."""
+    if dim is None:
+        prods = F.zip_with(
+            F.col(a), F.col(b), lambda x, y: x.cast("double") * y.cast("double")
+        )
+        return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    sa, sb = ident(a), ident(b)
+    return F.expr(
+        " + ".join(
+            f"(CAST({sa}[{i}] AS DOUBLE) * CAST({sb}[{i}] AS DOUBLE))"
+            for i in range(dim)
+        )
+    )
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
+def _norm(a: str, dim: int | None = None) -> Column:
     return F.sqrt(_dot(a, a, dim=dim))
 
 
-def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine_similarity(a: str, b: str, dim: int | None = None) -> Column:
     return _dot(a, b, dim=dim) / (_norm(a, dim=dim) * _norm(b, dim=dim))
 
 
@@ -165,16 +142,16 @@ def cosine_topk(
     """
     q = queries.select(
         F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qv")
-    ).withColumn("__qn", _norm(F.col("__qv"), dim=dim))
+    ).withColumn("__qn", _norm("__qv", dim=dim))
     c = corpus.select(
         F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cv")
-    ).withColumn("__cn", _norm(F.col("__cv"), dim=dim))
+    ).withColumn("__cn", _norm("__cv", dim=dim))
     pairs = F.broadcast(q).crossJoin(c)
     if exclude_self:
         pairs = pairs.where(F.col("__qid") != F.col("__cid"))
     scored = pairs.withColumn(
         "cosine",
-        _dot(F.col("__qv"), F.col("__cv"), dim=dim) / (F.col("__qn") * F.col("__cn")),
+        _dot("__qv", "__cv", dim=dim) / (F.col("__qn") * F.col("__cn")),
     )
     # one per-query window: measured FASTER than the salted two-phase
     # top-k here (pair materialization dominates, the per-query sort does
@@ -245,12 +222,12 @@ def rp_lsh_topk(
     planes = random_hyperplanes(dim, n_planes, seed)
     c = (
         corpus.select(F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cv"))
-        .withColumn("__cn", _norm(F.col("__cv"), dim=dim))
+        .withColumn("__cn", _norm("__cv", dim=dim))
         .withColumn("__bucket", _bucket_bits(F.col("__cv"), planes))
     )
     q = (
         queries.select(F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qv"))
-        .withColumn("__qn", _norm(F.col("__qv"), dim=dim))
+        .withColumn("__qn", _norm("__qv", dim=dim))
         .withColumn("__qbucket", _bucket_bits(F.col("__qv"), planes))
     )
     if multiprobe:
@@ -264,7 +241,7 @@ def rp_lsh_topk(
         cand = cand.where(F.col("__qid") != F.col("__cid"))
     scored = cand.withColumn(
         "cosine",
-        _dot(F.col("__qv"), F.col("__cv"), dim=dim) / (F.col("__qn") * F.col("__cn")),
+        _dot("__qv", "__cv", dim=dim) / (F.col("__qn") * F.col("__cn")),
     ).dropDuplicates(["__qid", "__cid"])
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
     return (
@@ -296,7 +273,7 @@ def lsh_bucket_corpus(
     planes = random_hyperplanes(dim, n_planes, seed)
     return (
         corpus.select(F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("v"))
-        .withColumn("n", _norm(F.col("v"), dim=dim))
+        .withColumn("n", _norm("v", dim=dim))
         .withColumn("bucket", _bucket_bits(F.col("v"), planes))
     )
 
@@ -360,7 +337,7 @@ def embedding_near_dup_pairs(
     return (
         cand.withColumn(
             "cosine",
-            _dot(F.col("va"), F.col("vb"), dim=dim) / (F.col("na") * F.col("nb")),
+            _dot("va", "vb", dim=dim) / (F.col("na") * F.col("nb")),
         )
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -416,7 +393,7 @@ def cosine_pairs_exact(
     unbounded driver broadcast.  True/False pins the strategy (a pinned
     ``force=True`` call runs with zero guard overhead — no count at all).
     """
-    norm = _norm(F.col(corpus_vec), dim=dim)
+    norm = _norm(corpus_vec, dim=dim)
     a = corpus.select(
         F.col(corpus_id).alias("id_a"),
         F.col(corpus_vec).alias("__va"),
@@ -450,7 +427,7 @@ def cosine_pairs_exact(
             broadcast_build = n <= 1_000_000
     build = F.broadcast(b) if broadcast_build else b
     pairs = a.join(build, on=F.col("id_a") < F.col("id_b"))
-    cos = _dot(F.col("__va"), F.col("__vb"), dim=dim) / (
+    cos = _dot("__va", "__vb", dim=dim) / (
         F.col("__na") * F.col("__nb")
     )
     if round_decimals is not None:
@@ -551,7 +528,7 @@ def kmeans_refine_centroids(
     unit = (
         corpus.select(F.col(corpus_vec).alias("__cv"))
         .where(F.size("__cv") == dim)
-        .withColumn("__cn", _norm(F.col("__cv"), dim=dim))
+        .withColumn("__cn", _norm("__cv", dim=dim))
         .where(F.col("__cn") > 0)
     )
     cents = centroids
@@ -629,7 +606,7 @@ def ivf_assign(
     dim = len(centroids[0][1]) if centroids else None
     return (
         corpus.select(F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cv"))
-        .withColumn("__cn", _norm(F.col("__cv"), dim=dim))
+        .withColumn("__cn", _norm("__cv", dim=dim))
         .withColumn(
             "__list", F.element_at(_nearest_centroids(F.col("__cv"), centroids, 1), 1)
         )
@@ -705,7 +682,7 @@ def ivf_topk(
     )
     q = (
         queries.select(F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qv"))
-        .withColumn("__qn", _norm(F.col("__qv"), dim=dim))
+        .withColumn("__qn", _norm("__qv", dim=dim))
         .select(
             "__qid",
             "__qv",
@@ -718,7 +695,7 @@ def ivf_topk(
         cand = cand.where(F.col("__qid") != F.col("__cid"))
     scored = cand.withColumn(
         "cosine",
-        _dot(F.col("__qv"), F.col("__cv"), dim=dim) / (F.col("__qn") * F.col("__cn")),
+        _dot("__qv", "__cv", dim=dim) / (F.col("__qn") * F.col("__cn")),
     )
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
     return (
@@ -986,11 +963,11 @@ def ivf_topk_from_index(
             for lst in lists
         ],
         schema,
-    ).withColumn("__qn", _norm(F.col("__qv"), dim=dim))
+    ).withColumn("__qn", _norm("__qv", dim=dim))
     cand = F.broadcast(qdf).join(scan, on="__list")
     if exclude_self:
         cand = cand.where(F.col("__qid") != F.col("__cid"))
-    cos = _dot(F.col("__qv"), F.col("__cv"), dim=dim) / (
+    cos = _dot("__qv", "__cv", dim=dim) / (
         F.col("__qn") * F.col("__cn")
     )
     if round_decimals is not None:
@@ -1338,16 +1315,16 @@ def pca_topk(
     qv = queries.select(
         F.col(query_id).alias("__qid"),
         F.col("embedding").alias("__qv"),
-    ).withColumn("__qn", _norm(F.col("__qv"), dim=dim))
+    ).withColumn("__qn", _norm("__qv", dim=dim))
     # corpus-side norm: read the build-time __n when the projected corpus
     # carries one (stored index — same unrolled expression at build, so
     # values are bit-identical), else compute it here (live path)
     c_norm = (
         F.col("__n")
         if projected_corpus is not None and "__n" in projected_corpus.columns
-        else _norm(F.col("embedding"), dim=dim)
+        else _norm("embedding", dim=dim)
     )
-    cos = _dot(F.col("__qv"), F.col("embedding"), dim=dim) / (
+    cos = _dot("__qv", "embedding", dim=dim) / (
         F.col("__qn") * c_norm
     )
     if round_decimals is not None:
@@ -1410,7 +1387,7 @@ def build_pca_index(
         F.col(corpus_id).alias("__cid"),
         "__p",
         F.col(emb_col).alias("embedding"),
-        _norm(F.col(emb_col), dim=dim).alias("__n"),
+        _norm(emb_col, dim=dim).alias("__n"),
     ).hint("rebalance").write.mode("overwrite").parquet(path)
     spark = corpus.sparkSession
     rows = [("comp", i, [float(x) for x in comps[i]]) for i in range(len(comps))]
@@ -1470,7 +1447,7 @@ def append_pca_index(
         F.col(corpus_id).alias("__cid"),
         "__p",
         F.col(emb_col).alias("embedding"),
-        _norm(F.col(emb_col), dim=dim).alias("__n"),
+        _norm(emb_col, dim=dim).alias("__n"),
     ).write.mode("append").parquet(path)
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from feature_store_healthcare_spark.caching import release_local_checkpoint
 from feature_store_healthcare_spark.operators.dedup import normalize_text
+from feature_store_healthcare_spark.sqlgen import ident, string_lit, var
 
 # Tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -270,80 +271,33 @@ def bpe_merge_candidates(
     return head.withColumn("rank", F.row_number().over(w))
 
 
-def _sql_str(s: str) -> str:
-    """A Spark SQL string literal for ``s``, valid in BOTH parser modes
-    (r14 ADVICE #5): quotes escape by doubling (``''`` — accepted by the
-    lexer whether or not ``spark.sql.parser.escapedStringLiterals`` is
-    set), and backslashes double only in the default mode where ``\\``
-    is an escape character (with escapedStringLiterals=true a backslash
-    is literal and doubling it would corrupt the symbol)."""
-    from pyspark.sql import SparkSession
-
-    escaped_literals = False
-    sess = SparkSession.getActiveSession()
-    if sess is not None:
-        escaped_literals = (
-            sess.conf.get(
-                "spark.sql.parser.escapedStringLiterals", "false"
-            ).lower()
-            == "true"
-        )
-    if not escaped_literals:
-        s = s.replace("\\", "\\\\")
-    return "'" + s.replace("'", "''") + "'"
-
-
 def _merge_pair_fold_sql(syms_sql: str, a: str, b: str) -> str:
-    """SQL text of one merge-rule fold over the symbol-array expression
-    ``syms_sql`` — see :func:`_merge_pair_fold`.  Built as text so a
-    chain of rules (``bpe_encode``'s per-pass loop, the trainer's
-    per-round merge) costs one parse instead of dozens of py4j round
-    trips per rule (the similarity._dot finding, r14 opt)."""
-    la, lb = _sql_str(a), _sql_str(b)
+    """SQL text applying merge rule ``(a, b) -> a+b`` to the symbol-array
+    expression ``syms_sql``, greedy left-to-right and non-overlapping
+    (``("a","a")`` on ``aaa`` yields ``[aa, a]``) — the ONE JVM-side
+    ``aggregate`` fold shared by :func:`bpe_train` (per training round)
+    and :func:`bpe_encode` (per rule pass), so the encoder reproduces the
+    trainer's segmentation by construction.  No Python UDF: the fold is
+    a higher-order function over the symbol array.  Text, so a chain of
+    rules nests into one parse instead of dozens of py4j round trips per
+    rule."""
+    la, lb = string_lit(a), string_lit(b)
+    acc, x = var("acc"), var("x")
     return (
-        f"aggregate({syms_sql}, cast(array() as array<string>), (acc, x) -> "
-        f"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = {la} "
-        f"AND x = {lb} "
-        f"THEN concat(slice(acc, 1, size(acc) - 1), "
-        f"array(concat(element_at(acc, -1), x))) "
-        f"ELSE concat(acc, array(x)) END)"
+        f"aggregate({syms_sql}, cast(array() as array<string>), ({acc}, {x}) -> "
+        f"CASE WHEN size({acc}) > 0 AND element_at({acc}, -1) = {la} "
+        f"AND {x} = {lb} "
+        f"THEN concat(slice({acc}, 1, size({acc}) - 1), "
+        f"array(concat(element_at({acc}, -1), {x}))) "
+        f"ELSE concat({acc}, array({x})) END)"
     )
 
 
-def _merge_pair_fold(syms, a: str, b: str):
-    """Apply merge rule ``(a, b) -> a+b`` to a symbol array, greedy
-    left-to-right and non-overlapping (``("a","a")`` on ``aaa`` yields
-    ``[aa, a]``) — the ONE JVM-side ``aggregate`` fold shared by
-    :func:`bpe_train` (per training round) and :func:`bpe_encode` (per
-    rule pass), so the encoder reproduces the trainer's segmentation by
-    construction.  No Python UDF: the fold is a codegen'd higher-order
-    function over the symbol array.  ``syms`` may be a Column (its SQL
-    text is recovered) or a SQL string."""
-    if isinstance(syms, str):
-        return F.expr(_merge_pair_fold_sql(syms, a, b))
-    try:
-        syms_sql = syms._jc.node().sql()
-    except Exception:
-        # Column-API fallback (internal ColumnNode surface unavailable)
-        return F.aggregate(
-            syms,
-            F.expr("cast(array() as array<string>)"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a))
-                & (x == F.lit(b)),
-                F.concat(
-                    F.slice(acc, F.lit(1), F.size(acc) - 1),
-                    F.array(F.concat(F.element_at(acc, -1), x)),
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-    return F.expr(_merge_pair_fold_sql(syms_sql, a, b))
-
-
-def _char_syms(col) -> "F.Column":
-    """A word as its character-symbol array — round 0 of any BPE state."""
-    return F.expr(f"transform(sequence(1, length({col})), i -> substr({col}, i, 1))")
+def _char_syms(col: str) -> "F.Column":
+    """Word column ``col`` as its character-symbol array — round 0 of
+    any BPE state."""
+    c, i = ident(col), var("i")
+    return F.expr(f"transform(sequence(1, length({c})), {i} -> substr({c}, {i}, 1))")
 
 
 def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFrame:
@@ -389,11 +343,10 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select("cnt", _char_syms("w").alias("syms"))
     )
-    # lazy checkpoints (r14 opt): each round's pair-count COLLECT is the
-    # job that materializes (and truncates) the round's re-segmented
-    # vocab state — an eager checkpoint would run one extra full
-    # vocab-table job per round just to write the same blocks the collect
-    # computes anyway.  One job per merge round instead of two; results
+    # lazy checkpoints: each round's pair-count COLLECT is the job that
+    # materializes (and truncates) the round's re-segmented vocab state —
+    # an eager checkpoint would run one extra full vocab-table job per
+    # round just to write the same blocks the collect computes anyway.  One job per merge round instead of two; results
     # bit-identical (integer counts, same fold).
     state = words.localCheckpoint(eager=False)
     prev = None  # the checkpoint superseded by `state`, released once
@@ -431,7 +384,7 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFrame:
         rules.append((step, a, b, a + b, c))
         if step == n_merges:
             break  # the last rule needs no re-segmentation pass
-        merged = _merge_pair_fold(F.col("syms"), a, b)
+        merged = F.expr(_merge_pair_fold_sql(ident("syms"), a, b))
         prev = state
         state = state.select("cnt", merged.alias("syms")).localCheckpoint(
             eager=False
@@ -439,10 +392,9 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFrame:
     out = spark.createDataFrame(
         rules, "step int, lhs string, rhs string, merged string, pair_count bigint"
     )
-    # ride the driver-local rules along on the frame (r15 opt):
-    # bpe_encode(merges=<trainer output>) was paying an orderBy+collect
-    # job on this LocalRelation only to recover the very list the loop
-    # above just built.  Plain Python attribute: any DERIVED frame loses
+    # ride the driver-local rules along on the frame: bpe_encode(merges=
+    # <trainer output>) would otherwise pay an orderBy+collect job on this
+    # LocalRelation only to recover the very list the loop above built.  Plain Python attribute: any DERIVED frame loses
     # it (correct — a filtered/unioned merge table must be re-collected),
     # and the values are identical by construction (rules appends in
     # step order, the exact order the collect's orderBy("step") yields).
@@ -467,7 +419,7 @@ def bpe_encode(
     ``(id_col, tokens array<string>, n_words, n_tokens)``.
 
     Semantics: rules are applied as SEQUENTIAL greedy left-to-right
-    passes in step order — the same :func:`_merge_pair_fold` the trainer
+    passes in step order — the same :func:`_merge_pair_fold_sql` the trainer
     runs per round, so encoding the training corpus reproduces the
     trainer's final segmentation bit-for-bit (test-pinned).  (Canonical
     BPE encoders apply the lowest-rank pair present in each word
@@ -509,8 +461,8 @@ def bpe_encode(
         raise ValueError(f"bpe_encode: rules_per_pass must be >= 1, got {rules_per_pass}")
     if isinstance(merges, DataFrame):
         # the trainer's own output carries its rules driver-side — skip
-        # the per-encode orderBy+collect job (r15 opt; values identical,
-        # see bpe_train).  Any other merge-table frame is collected.
+        # the per-encode orderBy+collect job (values identical, see
+        # bpe_train).  Any other merge-table frame is collected.
         rules = getattr(merges, "_fshs_bpe_rules", None)
         if rules is None:
             rules = [(r.lhs, r.rhs) for r in merges.orderBy("step").collect()]
@@ -527,7 +479,7 @@ def bpe_encode(
     for start in range(0, len(rules), rules_per_pass):
         # chain the pass's folds as ONE parsed SQL string (linear text
         # growth, one py4j call per pass instead of dozens per rule)
-        col_sql = "syms"
+        col_sql = ident("syms")
         for a, b in rules[start : start + rules_per_pass]:
             col_sql = _merge_pair_fold_sql(col_sql, a, b)
         seg = seg.select("w", F.expr(col_sql).alias("syms"))

@@ -53,6 +53,7 @@ from feature_store_healthcare_spark.operators.pit import (
     point_in_time_pivot,
 )
 from feature_store_healthcare_spark.sources import load_table
+from feature_store_healthcare_spark.sqlgen import ident
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1409,14 +1410,11 @@ def embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = emb.select(F.col("vec_id").alias("__cid"), F.col("embedding").alias("__cv"))
     pairs = F.broadcast(qq).crossJoin(cc).where(F.col("__qid") != F.col("__cid"))
     # dim=64: the unrolled codegen form — bit-identical to the HOF fold
-    # (same products, same left-to-right order; oracle-reverified r14),
-    # built as one parsed SQL string so construction is ~10 ms, not ~1.5 s
-    # of py4j chatter (see similarity._dot)
+    # (same products, same left-to-right order), built as one parsed SQL
+    # string (see similarity._dot)
     scored = pairs.withColumn(
         "cosine",
-        F.round(
-            similarity.cosine_similarity(F.col("__qv"), F.col("__cv"), dim=64), 4
-        ),
+        F.round(similarity.cosine_similarity("__qv", "__cv", dim=64), 4),
     )
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
     return (
@@ -3592,8 +3590,8 @@ def _corr_oracle() -> str:
     # Moments accumulate in plain double: correlation is scale-free
     # (|corr| <= 1) and the final value is rounded to 6 decimals, which
     # absorbs the ~1e-12 cross-engine summation-order noise.  Measured 6×
-    # faster than decimal(25,6) accumulation with identical rounded output
-    # (tools/bench_corr_variants.py).
+    # faster than decimal(25,6) accumulation at sf0.1, with identical
+    # rounded output.
     sums = ["COUNT(*) AS n"]
     for c in _CORR_COLS:
         sums.append(f"SUM(CAST({c} AS DOUBLE)) AS s_{c}")
@@ -3623,7 +3621,7 @@ def feature_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     faster than decimal — codegen-vectorized); the final correlation is
     scale-free, so rounding it to 6 decimals makes the output independent
     of partitioning/summation order (verified identical to the exact
-    decimal path at sf0.1, tools/bench_corr_variants.py)."""
+    decimal path at sf0.1)."""
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count("*").alias("n")]
     for c in _CORR_COLS:
@@ -4439,13 +4437,10 @@ def _cosine_rank20(emb: DataFrame) -> DataFrame:
         .crossJoin(cc)
         .where(F.concat(F.lit("q"), F.col("__cid").cast("string")) != F.col("__qid"))
     )
-    # dim=64: unrolled codegen form, bit-identical to the HOF fold (r14 —
-    # oracle-reverified; construction is one parsed SQL string)
+    # dim=64: unrolled codegen form, bit-identical to the HOF fold
     cos_scored = pairs.withColumn(
         "cosine",
-        F.round(
-            similarity.cosine_similarity(F.col("__qv"), F.col("__cv"), dim=64), 4
-        ),
+        F.round(similarity.cosine_similarity("__qv", "__cv", dim=64), 4),
     )
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
     return (
@@ -6017,12 +6012,11 @@ def embedding_covariance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified; the windows here shuffle ~74 rows, the corpus once)."""
     d = 8
     emb = load_table(spark, sf_dir, "embeddings")
-    xs = [f"CAST(embedding[{i}] AS DOUBLE)" for i in range(d)]
+    xs = [f"CAST({ident('embedding')}[{i}] AS DOUBLE)" for i in range(d)]
     # (i, j, xi*xj) pair terms; (k, -1) AND (-1, k) mirrored sum terms
     # (so both the i- and the j-partition window can see dimension k's
-    # sum); (-1, -1, 1) count.  Built as ONE parsed SQL string — the
-    # Column-API loop was ~370 py4j round trips of construction per call
-    # (the similarity._dot finding, r14); the analyzed tree is identical.
+    # sum); (-1, -1, 1) count.  One parsed SQL string: the Column-API
+    # loop was ~370 py4j round trips of construction per call.
     cell = "named_struct('i', {i}, 'j', {j}, 'term', CAST({t} AS DECIMAL(30,12)))"
     cells = F.expr(
         "array("

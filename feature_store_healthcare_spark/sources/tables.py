@@ -109,9 +109,10 @@ def _spread(df: DataFrame, spark: SparkSession, path: str, name: str) -> DataFra
 _SCHEMA_MEMO: BoundedMemo = BoundedMemo(maxsize=256)
 
 
-#: directories with more entries than this skip the memo entirely (live
-#: inference): the stamp scan is O(entries) per call, and past a few
-#: thousand files the ~170 ms inference it would save no longer wins.
+#: datasets with more entries than this (both stamped levels together)
+#: skip the memo entirely (live inference): the stamp scan is
+#: O(entries) per call, and past a few thousand files the ~170 ms
+#: inference it would save no longer wins.
 _STAMP_MAX_ENTRIES = 4096
 
 
@@ -119,24 +120,30 @@ def _path_stamp(path: str):
     """Identity stamp for the memo key.  A plain file is (size,
     mtime_ns).  For a DIRECTORY dataset the directory's own stat is not
     enough — rewriting a part-file in place under the same name moves
-    neither the dir size nor (on coarse clocks) its mtime (r14 ADVICE
-    #3) — so fold in the entry count and the newest entry's
-    (mtime_ns, name, size).  ``None`` = don't memoize this path."""
+    neither the dir size nor (on coarse clocks) its mtime — so fold in
+    the entry count and the newest entry's (mtime_ns, relative name,
+    size) over the top level and one level of subdirectories (partition
+    directories such as ``k=0/`` or ``__list=3/``).  ``None`` = don't
+    memoize this path."""
     import stat as stat_mod
 
     st = os.stat(path)
     if not stat_mod.S_ISDIR(st.st_mode):
         return (st.st_size, st.st_mtime_ns)
     n, newest = 0, (0, "", 0)
-    with os.scandir(path) as it:
-        for e in it:
-            n += 1
-            if n > _STAMP_MAX_ENTRIES:
-                return None
-            s = e.stat()
-            cand = (s.st_mtime_ns, e.name, s.st_size)
-            if cand > newest:
-                newest = cand
+    todo = [(path, "")]
+    while todo:
+        d, prefix = todo.pop()
+        with os.scandir(d) as it:
+            for e in it:
+                n += 1
+                if n > _STAMP_MAX_ENTRIES:
+                    return None
+                s = e.stat()
+                name = prefix + e.name
+                newest = max(newest, (s.st_mtime_ns, name, s.st_size))
+                if not prefix and e.is_dir():
+                    todo.append((e.path, name + "/"))
     return (st.st_size, st.st_mtime_ns, n, newest)
 
 

@@ -483,15 +483,16 @@ class TestLogisticScore:
 
 
 def test_logreg_step_aggs_sql_path_equals_column_fallback(spark):
-    """r15: the GD step's aggregates are built as parsed SQL (the
-    similarity._dot mechanism) — the analyzed tree must equal the
-    Column-API fallback exactly, including repr-round-tripped double
-    literals, and release must fire on the empty-table error path."""
+    """The GD step's aggregates are parsed from SQL text — the analyzed
+    tree must equal a Column-API build of the same formula exactly,
+    including repr-round-tripped double literals, and non-finite weights
+    must evaluate like the Column build does."""
     import math
 
     from pyspark.sql import functions as F
 
     from feature_store_healthcare_spark.operators import experiment
+    from feature_store_healthcare_spark.sqlgen import double_lit
 
     df = spark.range(8).select(
         (F.col("id") * 0.1).alias("__x1"),
@@ -499,26 +500,37 @@ def test_logreg_step_aggs_sql_path_equals_column_fallback(spark):
         (F.col("id") % 2).cast("double").alias("__y"),
     )
     dec = lambda c: F.sum(c.cast("decimal(30,10)")).cast("double")  # noqa: E731
+
+    def fb(w):
+        y = F.col("__y")
+        z = F.lit(w[0])
+        for j in range(2):
+            z = z + F.lit(w[j + 1]) * F.col(f"__x{j + 1}")
+        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+        pc = F.least(F.greatest(p, F.lit(1e-6)), F.lit(1.0 - 1e-6))
+        resid = p - y
+        aggs = [dec(resid).alias("g0")]
+        aggs += [dec(resid * F.col(f"__x{j + 1}")).alias(f"g{j + 1}") for j in range(2)]
+        aggs.append(
+            dec(-(y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc))).alias(
+                "__l"
+            )
+        )
+        return aggs + [F.count(F.lit(1)).alias("__n")]
+
     # a weight with full 17-significant-digit repr exercises the literal
     # round-trip; 1e-06 exercises exponent-form double literals
     w = [0.125, -1.0 / 3.0, 1e-06]
-    sql_aggs = experiment._logreg_step_aggs(w, 2, dec, with_count=True)
-    y = F.col("__y")
-    z = F.lit(w[0])
-    for j in range(2):
-        z = z + F.lit(w[j + 1]) * F.col(f"__x{j + 1}")
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-    pc = F.least(F.greatest(p, F.lit(1e-6)), F.lit(1.0 - 1e-6))
-    resid = p - y
-    fb = [dec(resid).alias("g0")]
-    fb += [dec(resid * F.col(f"__x{j + 1}")).alias(f"g{j + 1}") for j in range(2)]
-    fb.append(
-        dec(-(y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc))).alias("__l")
-    )
-    fb.append(F.count(F.lit(1)).alias("__n"))
+    sql_aggs = experiment._logreg_step_aggs(w, 2, with_count=True)
     a = df.agg(*sql_aggs)._jdf.queryExecution().analyzed()
-    b = df.agg(*fb)._jdf.queryExecution().analyzed()
+    b = df.agg(*fb(w))._jdf.queryExecution().analyzed()
     assert a.sameResult(b)
-    # non-finite weights must take the fallback (no SQL literal form)
-    nf = experiment._logreg_step_aggs([math.nan, 0.0, 0.0], 2, dec, with_count=False)
-    assert len(nf) == 4  # g0..g2 + loss; construction must not raise
+    # non-finite literals evaluate to their values; a NaN weight makes z
+    # NaN, so the gradient sums are NULL (NaN has no decimal form) exactly
+    # as in the Column build
+    lits = spark.range(1).select(*[F.expr(double_lit(x)) for x in (math.nan, -math.inf)])
+    assert math.isnan(lits.first()[0]) and lits.first()[1] == -math.inf
+    nan_w = [math.nan, 0.0, 0.0]
+    got = df.agg(*experiment._logreg_step_aggs(nan_w, 2, with_count=True)).collect()[0]
+    assert got == df.agg(*fb(nan_w)).collect()[0]
+    assert got.g0 is None and math.isfinite(got["__l"])

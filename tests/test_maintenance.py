@@ -5,6 +5,7 @@ compaction of the append-only store.
 
 from __future__ import annotations
 
+import math
 from datetime import datetime
 
 import pytest
@@ -15,6 +16,24 @@ from feature_store_healthcare_spark import maintenance
 from feature_store_healthcare_spark.stores import AppendStore
 
 NOW = datetime(2024, 6, 1)
+
+
+def hist_reference(values, lo, hi, bins, qs):
+    """Pure-Python 'hist' state and quantile estimates: the bucket index
+    and the cumulative walk of maintenance.incremental_agg /
+    finalize_agg_states, operation for operation, in IEEE doubles."""
+    width = (hi - lo) / bins
+    counts = [0] * bins
+    for v in values:
+        counts[min(max(math.floor((float(v) - lo) / width), 0), bins - 1)] += 1
+    out = {}
+    for q in qs:
+        target, cum = q * float(sum(counts)), 0.0
+        for i, c in enumerate(map(float, counts)):
+            if q not in out and cum + c >= target and c > 0:
+                out[q] = min(lo + (float(i) + (target - cum) / c) * ((hi - lo) / bins), hi)
+            cum = cum + c
+    return counts, out
 
 
 @pytest.fixture()
@@ -208,27 +227,25 @@ class TestHistQuantileState:
             assert abs(out[g]["p50"] - exact_p50) <= 2.0
             assert abs(out[g]["p95"] - exact_p95) <= 2.0
 
-    def test_parsed_sql_paths_match_column_fallback(self, spark, monkeypatch):
-        """r15 opt: the hist state cells and the quantile folds are built
-        as ONE parsed SQL string (driver-chatter removal); this pins the
-        fast path bit-identical to the Column/lambda construction AND
-        (canary) that the fast path actually activates on this Spark."""
-        batches, _ = self._batches(spark, nb=1, n=200)
-        df = batches[0]
-        kw = dict(specs=["count", "hist"], hist_lo=0.0, hist_hi=100.0, hist_bins=17)
-
-        def run():
-            st = maintenance.incremental_agg(df, ["grp"], "v", **kw)
-            fin = maintenance.finalize_agg_states(st, ["grp"], quantiles=(0.5, 0.9))
-            return sorted(tuple(r) for r in fin.collect())
-
-        # canary: the internal ColumnNode.sql surface must be live (a
-        # silent fallback would re-inflate construction with no failure)
-        assert maintenance._col_sql(F.col("state_hist")) is not None
-        fast = run()
-        monkeypatch.setattr(maintenance, "_col_sql", lambda c: None)
-        slow = run()
-        assert fast == slow  # bit-identical, not approximately
+    def test_quantiles_match_python_bucket_formula(self, spark):
+        """State counts and quantile estimates equal the pure-Python
+        bucket formula exactly (bit-identical doubles, not approximately),
+        over a bin count that does not divide the range evenly."""
+        batches, rows = self._batches(spark, nb=1, n=200)
+        qs = (0.0, 0.5, 0.9, 1.0)
+        st = maintenance.incremental_agg(
+            batches[0], ["grp"], "v", specs=["count", "hist"], hist_lo=0.0,
+            hist_hi=100.0, hist_bins=17,
+        )
+        fin = maintenance.finalize_agg_states(st, ["grp"], quantiles=qs)
+        got = {r["grp"]: r for r in fin.collect()}
+        states = {r["grp"]: r["state_hist"]["counts"] for r in st.collect()}
+        for g in ("g0", "g1"):
+            vs = [r.v for r in rows if r.grp == g]
+            counts, want = hist_reference(vs, 0.0, 100.0, 17, qs)
+            assert states[g] == counts
+            for q in qs:
+                assert got[g][f"p{int(round(q * 100))}"] == want[q], (g, q)
 
     def test_hist_edges(self, spark):
         # all mass in one value: every quantile collapses to that bucket

@@ -333,8 +333,8 @@ def test_bpe_encode_round_trip(spark):
                                            pairs).collect()))
     assert sorted(map(tuple, enc)) == e1 == e2
 
-    # the trainer frame's attached driver-side rules (r15 opt: encode
-    # skips the orderBy+collect job) must equal the collected path — a
+    # the trainer frame's attached driver-side rules (encode skips the
+    # orderBy+collect job) must equal the collected path — a
     # frame WITHOUT the attribute (rebuilt from the same rows) collects
     assert getattr(merges, "_fshs_bpe_rules", None) == pairs
     rebuilt = spark.createDataFrame(merges.collect(), merges.schema)
@@ -347,6 +347,9 @@ def test_bpe_encode_round_trip(spark):
     aa = spark.createDataFrame([(1, "aaa aaa")], "doc_id int, text string")
     got = text.bpe_encode(aa, "doc_id", "text", [("a", "a")]).collect()[0]
     assert got.tokens == ["aa", "a", "aa", "a"]
+    ab = spark.createDataFrame([(1, "abcab")], "doc_id int, text string")
+    got = text.bpe_encode(ab, "doc_id", "text", [("a", "b")]).collect()[0]
+    assert got.tokens == ["ab", "c", "ab"]
 
     # a doc with no words yields no row; unknown words fall back to chars
     mixed = spark.createDataFrame(
@@ -645,8 +648,8 @@ def test_dot_unrolled_matches_fold(spark):
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
     pairs = a.join(b, on=F.col("ia") < F.col("ib"))
     both = pairs.select(
-        similarity.cosine_similarity(F.col("va"), F.col("vb")).alias("fold"),
-        similarity.cosine_similarity(F.col("va"), F.col("vb"), dim=64).alias("unrolled"),
+        similarity.cosine_similarity("va", "vb").alias("fold"),
+        similarity.cosine_similarity("va", "vb", dim=64).alias("unrolled"),
     )
     # bit-identical: same multiplications, same left-to-right accumulation
     assert both.where(F.col("fold") != F.col("unrolled")).count() == 0
@@ -1837,31 +1840,3 @@ def test_cosine_topk_blas_preserves_string_ids(spark):
     assert {(r.query_id, r.vec_id, r.rank) for r in got} == {
         (r.query_id, r.vec_id, r.rank) for r in exact
     }
-
-
-def test_parsed_sql_fast_paths_active_on_this_spark(spark):
-    """Canary (round-15 VERDICT #7): the parsed-SQL construction fast
-    paths ride an internal Spark surface (Column._jc.node().sql()).  If
-    a Spark upgrade removes it, the engine silently falls back to the
-    ~1.5 s/expression Column-loop construction and every embedding/BPE
-    floor regresses with no test failing — this test is the tripwire."""
-    from pyspark.sql import functions as F
-
-    from feature_store_healthcare_spark.operators import similarity, text
-
-    col_sql = similarity._col_sql(F.col("embedding"))
-    assert col_sql is not None and "embedding" in col_sql
-    # and the BPE fold path recovers SQL text from a Column the same way
-    merged = text._merge_pair_fold(F.col("syms"), "a", "b")
-    # the fast path yields an unresolved expression built from ONE parsed
-    # string; the fallback builds a lambda-function tree via the Column
-    # API.  Both are Columns — distinguish by the internal node type the
-    # fast path produces (SQL text parse -> expression string node).
-    import re
-
-    s = text._merge_pair_fold_sql("syms", "a", "b")
-    assert re.search(r"aggregate\(syms", s)
-    # equality of the two constructions (fast vs fallback) on real data
-    df = spark.createDataFrame([(["a", "b", "c", "a", "b"],)], "syms array<string>")
-    fast = df.select(merged.alias("out")).collect()[0]["out"]
-    assert fast == ["ab", "c", "ab"]

@@ -104,38 +104,45 @@ def test_schema_memo_matches_inference_and_tracks_file_identity(
 
 
 def test_schema_memo_detects_in_place_part_file_rewrite(spark, tmp_path):
-    """r15 (r14 ADVICE #3): a directory dataset whose part-file is
-    rewritten IN PLACE under the same name — directory size unchanged,
-    directory mtime pinned back — must still re-infer: the stamp folds
-    in the newest leaf entry's (mtime_ns, name, size)."""
+    """A directory dataset whose part-file is rewritten IN PLACE under
+    the same name — every directory stat pinned back to its pre-rewrite
+    identity — must still re-infer: the stamp folds in the newest leaf
+    entry's (mtime_ns, name, size), for a flat layout and for a
+    partitioned one (``k=0/part-*.parquet``)."""
     import os
 
     from feature_store_healthcare_spark.sources import tables as t
 
-    p = str(tmp_path / "d.parquet")
-    spark.range(5).select(F.col("id").alias("a")).coalesce(1).write.parquet(p)
-    s1 = t._inferred_schema(spark, p)
-    assert [f.name for f in s1.fields] == ["a"]
-    part = next(f for f in os.listdir(p) if f.endswith(".parquet"))
-    dir_stat = os.stat(p)
-    # rewrite the part file under the SAME name with a different schema
-    tmp2 = str(tmp_path / "d2.parquet")
-    spark.range(5).select(
-        F.col("id").alias("a"), F.lit("y").alias("b")
-    ).coalesce(1).write.parquet(tmp2)
-    part2 = next(f for f in os.listdir(tmp2) if f.endswith(".parquet"))
-    os.replace(os.path.join(tmp2, part2), os.path.join(p, part))
-    # drop Hadoop's .crc sidecars: the local FS reader would otherwise
-    # fail the swapped bytes against the OLD checksum — a test-harness
-    # artifact (real object stores have no sidecar), not the scenario
-    for f in os.listdir(p):
-        if f.endswith(".crc"):
-            os.remove(os.path.join(p, f))
-    # pin the DIRECTORY stat back to its pre-rewrite identity: only the
-    # leaf entry's own (mtime, size) can reveal the rewrite
-    os.utime(p, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
-    s2 = t._inferred_schema(spark, p)
-    assert [f.name for f in s2.fields] == ["a", "b"]
+    for partitioned in (False, True):
+        p, p2 = (str(tmp_path / f"{partitioned}{i}.parquet") for i in (1, 2))
+        k = ["k"] if partitioned else []
+
+        def write(cols, path):
+            df = spark.range(5).select(*cols, *[F.lit(0).alias(c) for c in k])
+            df.coalesce(1).write.partitionBy(*k).parquet(path)
+
+        write([F.col("id").alias("a")], p)
+        assert [f.name for f in t._inferred_schema(spark, p).fields] == ["a", *k]
+        leaf_dir = os.path.join(p, "k=0") if partitioned else p
+        dir_stats = {d: os.stat(d) for d in (p, leaf_dir)}
+        part = next(f for f in os.listdir(leaf_dir) if f.endswith(".parquet"))
+        # rewrite the part file under the SAME name with a different schema
+        write([F.col("id").alias("a"), F.lit("y").alias("b")], p2)
+        src_dir = os.path.join(p2, "k=0") if partitioned else p2
+        part2 = next(f for f in os.listdir(src_dir) if f.endswith(".parquet"))
+        os.replace(os.path.join(src_dir, part2), os.path.join(leaf_dir, part))
+        # drop Hadoop's .crc sidecars: the local FS reader would otherwise
+        # fail the swapped bytes against the OLD checksum — a test-harness
+        # artifact (real object stores have no sidecar), not the scenario
+        for f in os.listdir(leaf_dir):
+            if f.endswith(".crc"):
+                os.remove(os.path.join(leaf_dir, f))
+        # pin the DIRECTORY stats back to their pre-rewrite identity: only
+        # the leaf entry's own (mtime, size) can reveal the rewrite
+        for d, st in dir_stats.items():
+            os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
+        s2 = t._inferred_schema(spark, p)
+        assert [f.name for f in s2.fields] == ["a", "b", *k], partitioned
 
 
 def test_register_views_enables_raw_sql(spark, sf_dir):
