@@ -4,10 +4,11 @@ A large generated expression (a 64-term unrolled dot product, 50
 histogram cells, a chain of BPE folds) costs one py4j round trip when
 ``F.expr`` parses it, against hundreds to thousands through the Column
 API.  Every such text is built from these helpers, which take column
-NAMES, never Columns: :func:`ident` quotes any name, :func:`string_lit`
-writes a string for the parser mode in effect, :func:`double_lit` any
-double (NaN and the infinities too), and :func:`var` gives lambda
-variables a reserved prefix so a lambda never captures a user column.
+NAMES, never Columns: :func:`ident` quotes any name (:func:`table_ident`
+a dotted table name), :func:`string_lit` writes a string for the parser
+mode in effect, :func:`double_lit` any double (NaN and the infinities
+too), and :func:`var` gives lambda variables a reserved prefix so a
+lambda never captures a user column.
 """
 
 from __future__ import annotations
@@ -19,6 +20,13 @@ def ident(name: str) -> str:
     """``name`` as one backtick-quoted identifier (embedded backticks
     doubled)."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def table_ident(name: str) -> str:
+    """A (possibly db-qualified) table name quoted PER PART: ``db.t`` →
+    ```db`.`t``` (one pair of backticks around the whole string would make
+    the dot part of the name)."""
+    return ".".join(ident(p) for p in name.split("."))
 
 
 def string_lit(s: str) -> str:

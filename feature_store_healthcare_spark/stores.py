@@ -28,8 +28,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from feature_store_healthcare_spark.operators.pit import latest_per_key
+from feature_store_healthcare_spark.sqlgen import table_ident
 
 
 class AppendStore:
@@ -60,12 +62,21 @@ class LatestStore:
     merge (default 1 → current only), enabling Delta-style table time
     travel on the ONLINE side: ``read(version=n)`` / ``versions()`` answer
     "what was being served at version n" — the serving-layer complement of
-    the registry's ``system_time`` travel over the append-only EAV log."""
+    the registry's ``system_time`` travel over the append-only EAV log.
+
+    Schema memo: each instance remembers the ``(version, schema)`` of the
+    last snapshot IT committed, set only after the pointer flip succeeds.
+    A read of that version passes the schema to ``spark.read.schema``
+    instead of inferring it, which saves one footer-inference Spark job
+    (~65 ms) per merge.  Any other version is inferred from its files: a
+    cold instance, a snapshot another writer flipped to, or an older
+    retained version."""
 
     def __init__(self, spark: SparkSession, path: str, keep_versions: int = 1):
         self.spark = spark
         self.path = path
         self.keep_versions = max(1, keep_versions)
+        self._committed: tuple[int, StructType] | None = None
         os.makedirs(path, exist_ok=True)
 
     @property
@@ -99,11 +110,14 @@ class LatestStore:
                 raise ValueError(
                     f"version {version} not retained (have {self.versions()})"
                 )
-            return self.spark.read.parquet(self._snapshot_dir(version))
-        current = self._current_version()
-        if current is None:
-            return None
-        return self.spark.read.parquet(self._snapshot_dir(current))
+        else:
+            version = self._current_version()
+            if version is None:
+                return None
+        reader = self.spark.read
+        if self._committed is not None and self._committed[0] == version:
+            reader = reader.schema(self._committed[1])
+        return reader.parquet(self._snapshot_dir(version))
 
     def merge(
         self,
@@ -126,6 +140,7 @@ class LatestStore:
         from feature_store_healthcare_spark.tableops import flip_pointer
 
         flip_pointer(self._pointer, str(new))  # atomic snapshot commit
+        self._committed = (new, latest.schema)
         # retain the newest keep_versions snapshots (incl. current)
         for stale in self.versions()[: -self.keep_versions]:
             if stale != new:
@@ -158,13 +173,6 @@ def write_bucketed(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.saveAsTable(table)
-
-
-def _quote_ident(name: str) -> str:
-    """Backtick-quote a (possibly db-qualified) table name PER PART —
-    ``db.t`` → ``` `db`.`t` `` (wrapping the whole string in one pair of
-    backticks would make the dot part of the identifier)."""
-    return ".".join(f"`{part}`" for part in name.split("."))
 
 
 def local_path(uri: str) -> str:
@@ -221,7 +229,7 @@ def _bucket_spec(
     catalog — the source of truth a maintenance rewrite must match."""
     info = {
         r.col_name: r.data_type
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {_quote_ident(table)}").collect()
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table_ident(table)}").collect()
     }
     if "Num Buckets" not in info:
         raise ValueError(f"{table!r} is not a bucketed table")
@@ -318,7 +326,7 @@ def compact_bucketed(spark: SparkSession, table: str, new_path: str) -> str:
             n_buckets, F.col(bucket_cols[0])
         )
         tmp = f"{table}__compact"
-        spark.sql(f"DROP TABLE IF EXISTS {_quote_ident(tmp)}")
+        spark.sql(f"DROP TABLE IF EXISTS {table_ident(tmp)}")
         write_bucketed(
             compacted,
             tmp,
@@ -327,9 +335,9 @@ def compact_bucketed(spark: SparkSession, table: str, new_path: str) -> str:
             new_path,
             sort_col=sort_cols[0] if sort_cols else None,
         )
-        spark.sql(f"DROP TABLE {_quote_ident(table)}")
+        spark.sql(f"DROP TABLE {table_ident(table)}")
         spark.sql(
-            f"ALTER TABLE {_quote_ident(tmp)} RENAME TO {_quote_ident(table)}"
+            f"ALTER TABLE {table_ident(tmp)} RENAME TO {table_ident(table)}"
         )
         # Migrate path-keyed sidecar markers (the LSH band index's
         # ``{path}__family`` hash-family stamp) to the new location:

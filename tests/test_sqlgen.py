@@ -15,7 +15,7 @@ from test_maintenance import hist_reference
 
 from feature_store_healthcare_spark import maintenance
 from feature_store_healthcare_spark.operators import dedup, drift, similarity, text
-from feature_store_healthcare_spark.sqlgen import ident
+from feature_store_healthcare_spark.sqlgen import ident, table_ident
 
 DOCS = [(1, "a   b\tc d e"), (2, "It's a \\ back-slash: a\\b  it's"), (3, None)]
 
@@ -28,6 +28,11 @@ def _ngrams(s: str, n: int) -> set[str]:
 def test_ident_quotes_any_name():
     assert ident("my col") == "`my col`"
     assert ident("a`b") == "`a``b`"
+
+
+def test_table_ident_quotes_each_part():
+    assert table_ident("db.t`x") == "`db`.`t``x`"
+    assert table_ident("t") == "`t`"
 
 
 @pytest.mark.parametrize("escaped", ["false", "true"])

@@ -13,6 +13,7 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from feature_store_healthcare_spark.operators.pit import latest_per_key
 from feature_store_healthcare_spark.stores import AppendStore, LatestStore
@@ -253,25 +254,31 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 def test_latest_store_version_time_travel(spark, tmp_path):
     """keep_versions retains superseded snapshots: read(version=) shows the
-    value being served BEFORE a later merge, and older snapshots expire."""
+    value being served BEFORE a later merge, and older snapshots expire.
+    Version 1 holds ``v`` as int and the later merges widen it to bigint:
+    an older version is read with its own schema, not the one the store
+    remembers for the snapshot it committed last."""
     store = LatestStore(spark, str(tmp_path / "latest_tt"), keep_versions=2)
     df1 = spark.createDataFrame(
-        [("u1", "2024-01-01T10:00:00", 1.0)], "k string, ts string, v double"
+        [("u1", "2024-01-01T10:00:00", 1)], "k string, ts string, v int"
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     df2 = spark.createDataFrame(
-        [("u1", "2024-01-01T11:00:00", 2.0)], "k string, ts string, v double"
+        [("u1", "2024-01-01T11:00:00", 2)], "k string, ts string, v bigint"
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     store.merge(df1, ["k"], "ts")
     store.merge(df2, ["k"], "ts")
     assert store.versions() == [1, 2]
-    assert store.read().first()["v"] == 2.0
-    assert store.read(version=1).first()["v"] == 1.0
+    assert store.read().first()["v"] == 2
+    assert store.read(version=1).first()["v"] == 1
+    assert store.read(version=1).schema["v"].dataType == T.IntegerType()
+    assert store.read(version=2).schema["v"].dataType == T.LongType()
     # a third merge expires version 1 (keep_versions=2)
     df3 = spark.createDataFrame(
-        [("u1", "2024-01-01T12:00:00", 3.0)], "k string, ts string, v double"
+        [("u1", "2024-01-01T12:00:00", 3)], "k string, ts string, v bigint"
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     store.merge(df3, ["k"], "ts")
     assert store.versions() == [2, 3]
+    assert store.read(version=2).first()["v"] == 2
     with pytest.raises(ValueError, match="not retained"):
         store.read(version=1)
 
