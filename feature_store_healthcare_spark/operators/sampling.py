@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_store_healthcare_spark import tableops
 from feature_store_healthcare_spark.caching import PlanCache, data_version
 
 #: md5-prefix width used for bucket decisions; 8 hex digits = 32 bits of
@@ -517,20 +518,7 @@ def dsir_logratio_weights(
         version=data_version(docs),
     )
     tf = toks.groupBy(id_col, dim).agg(F.count(F.lit(1)).alias("tf"))
-    tots = dist.agg(
-        F.sum("r_ct").alias("r_tot"), F.sum("t_ct").alias("t_tot")
-    )
-    a, aD = float(alpha), float(alpha) * n_dims
-    lr = (
-        dist.crossJoin(F.broadcast(tots))
-        .select(
-            "dim",
-            (
-                F.log((F.col("t_ct") + F.lit(a)) / (F.col("t_tot") + F.lit(aD)))
-                - F.log((F.col("r_ct") + F.lit(a)) / (F.col("r_tot") + F.lit(aD)))
-            ).alias("logratio"),
-        )
-    )
+    _, lr = _dsir_logratio_table(dist, n_dims, alpha)
     per_doc = (
         tf.join(F.broadcast(lr), "dim")
         .groupBy(id_col)
@@ -544,6 +532,24 @@ def dsir_logratio_weights(
         "n_tokens",
         F.round(F.col("__s") / F.col("n_tokens"), round_to).alias("dsir_logratio"),
     )
+
+
+def _dsir_logratio_table(
+    dist: DataFrame, n_dims: int, alpha: float
+) -> tuple[DataFrame, DataFrame]:
+    """``(tots, lr)`` from per-dim counts: the one-row ``(r_tot, t_tot)``
+    and the add-``alpha`` smoothed per-dim ``logratio`` — one builder for
+    both DSIR scorers, which keeps them bit-identical."""
+    a, aD = float(alpha), float(alpha) * n_dims
+    tots = dist.agg(F.sum("r_ct").alias("r_tot"), F.sum("t_ct").alias("t_tot"))
+    lr = dist.crossJoin(F.broadcast(tots)).select(
+        "dim",
+        (
+            F.log((F.col("t_ct") + F.lit(a)) / (F.col("t_tot") + F.lit(aD)))
+            - F.log((F.col("r_ct") + F.lit(a)) / (F.col("r_tot") + F.lit(aD)))
+        ).alias("logratio"),
+    )
+    return tots, lr
 
 
 def _dsir_dim_counts(
@@ -574,15 +580,14 @@ def build_dsir_dist(
     prefix_chars: int = 2,
 ) -> None:
     """Persist the DSIR distribution statistics for a corpus — the stored
-    half of the incremental curation loop.  The table is APPEND-ONLY
+    half of the incremental curation loop — as a new version of the root
+    ``path`` (:func:`tableops.write_version`).  The table is APPEND-ONLY
     per-batch count rows (like the postings stats): growing the corpus is
     :func:`append_dsir_dist` (one delta-sized pass, O(|delta|)), and the
     read-time fold in :func:`dsir_score_from_dist` sums per dim — exact,
-    because the statistics are integers.  Delta/Iceberg mapping: a plain
-    ACID append (tableops.append row of the mapping table)."""
-    _dsir_dim_counts(docs, text_col, is_target, prefix_chars).write.mode(
-        "overwrite"
-    ).parquet(path)
+    because the statistics are integers."""
+    counts = _dsir_dim_counts(docs, text_col, is_target, prefix_chars)
+    tableops.write_version(path, lambda d: counts.write.mode("overwrite").parquet(d))
 
 
 def append_dsir_dist(
@@ -592,11 +597,31 @@ def append_dsir_dist(
     path: str,
     prefix_chars: int = 2,
 ) -> None:
-    """Fold a new document batch into the stored DSIR distributions:
-    one pass over the DELTA only; the corpus is never re-read."""
-    from feature_store_healthcare_spark import tableops
+    """Fold a new document batch into the current version of the stored
+    DSIR distributions: one pass over the DELTA only; the corpus is never
+    re-read."""
+    tableops.append(
+        _dsir_dim_counts(delta, text_col, is_target, prefix_chars),
+        tableops.current_dir(path),
+    )
 
-    tableops.append(_dsir_dim_counts(delta, text_col, is_target, prefix_chars), path)
+
+def compact_dsir_dist(spark, path: str) -> None:
+    """Fold an append-grown DSIR table to one count row per dim in a new
+    version (:func:`tableops.compact_version`).  Integer sums fold
+    exactly, so every score is unchanged."""
+
+    def rewrite(src: str, new: str) -> None:
+        (
+            spark.read.parquet(src)
+            .groupBy("dim")
+            .agg(F.sum("r_ct").alias("r_ct"), F.sum("t_ct").alias("t_ct"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(new)
+        )
+
+    tableops.compact_version(path, rewrite)
 
 
 def dsir_score_from_dist(
@@ -623,22 +648,15 @@ def dsir_score_from_dist(
     of silently dropping the term."""
     spark = delta_docs.sparkSession
     n_dims = 16**prefix_chars
-    a, aD = float(alpha), float(alpha) * n_dims
-    stored = spark.read.parquet(path)
+    aD = float(alpha) * n_dims
+    stored = spark.read.parquet(tableops.current_dir(path))
     dist = _DSIR_STORED_DIST_CACHE.get_or_persist(
         stored.groupBy("dim").agg(
             F.sum("r_ct").alias("r_ct"), F.sum("t_ct").alias("t_ct")
         ),
         version=data_version(stored),
     )
-    tots = dist.agg(F.sum("r_ct").alias("r_tot"), F.sum("t_ct").alias("t_tot"))
-    lr = dist.crossJoin(F.broadcast(tots)).select(
-        "dim",
-        (
-            F.log((F.col("t_ct") + F.lit(a)) / (F.col("t_tot") + F.lit(aD)))
-            - F.log((F.col("r_ct") + F.lit(a)) / (F.col("r_tot") + F.lit(aD)))
-        ).alias("logratio"),
-    )
+    tots, lr = _dsir_logratio_table(dist, n_dims, alpha)
     from feature_store_healthcare_spark.operators.dedup import normalize_text
 
     toks = delta_docs.select(

@@ -22,7 +22,9 @@ similarity threshold instead of top-k.
 
 from __future__ import annotations
 
+import os
 import random
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -30,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from feature_store_healthcare_spark import tableops
 from feature_store_healthcare_spark.caching import (
     BoundedMemo,
     PlanCache,
@@ -710,6 +713,31 @@ def ivf_topk(
     )
 
 
+def _parts(version_dir: str, side: str) -> tuple[str, str]:
+    """(rows, quantizer) directories of one stored IVF/PCA version."""
+    return os.path.join(version_dir, "rows"), os.path.join(version_dir, side)
+
+
+def _write_ivf_rows(assigned: DataFrame, rows_dir: str, mode: str) -> None:
+    # cluster by list BEFORE the partitioned write: writing straight from
+    # the scan's partitioning emits n_scan_partitions × n_lists files
+    # (measured 507 parquet files for a 2k-row index — every probe then
+    # lists and opens nprobe × n_scan_partitions tiny files), the classic
+    # small-files problem.  REBALANCE(__list) (guide §6's coalesce-on-
+    # write tool) shuffles by list AND lets AQE split an oversized list
+    # into advisory-sized chunks — one file per list locally, ~advisory-
+    # sized files per list at 100 TB (a plain repartition(__list) would
+    # emit ONE arbitrarily large file per list there).  Probe results are
+    # unchanged by construction (same rows; re-rank sorts on (cosine, id),
+    # never file order).
+    (
+        assigned.hint("rebalance", "__list")
+        .write.mode(mode)
+        .partitionBy("__list")
+        .parquet(rows_dir)
+    )
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -718,11 +746,14 @@ def build_ivf_index(
     corpus_vec: str = "embedding",
     refine_rounds: int = 3,
 ) -> list[tuple[int, list[float]]]:
-    """Write the IVF index as a DISK layout partitioned by inverted list:
-    ``path/__list=<centroid>/…`` holds each list's (id, vector, norm) rows,
-    and ``path__centroids`` the k centroid vectors — the ANN analog of the
-    stored postings/band indexes (build once, probe per batch, corpus
-    never re-read, same build→probe lifecycle).
+    """Write the IVF index as a DISK layout partitioned by inverted list —
+    the ANN analog of the stored postings/band indexes (build once, probe
+    per batch, corpus never re-read, same build→probe lifecycle).
+
+    ``path`` is a versioned root: each list's (id, vector, norm) rows go
+    to ``vNNNNNN/rows/__list=<centroid>/…`` and the k centroids to
+    ``vNNNNNN/centroids``, and ONE pointer flip commits both
+    (:func:`tableops.write_version`) — a failed build serves the old.
 
     Partitioning by ``__list`` is the point: a probe knows its nprobe
     list ids BEFORE the scan, so the pushed ``__list IN (…)`` becomes a
@@ -741,35 +772,33 @@ def build_ivf_index(
         refine_rounds=refine_rounds,
     )
     assigned = ivf_assign(corpus, cents, corpus_id=corpus_id, corpus_vec=corpus_vec)
-    # cluster by list BEFORE the partitioned write: writing straight from
-    # the scan's partitioning emits n_scan_partitions × n_lists files
-    # (measured 507 parquet files for a 2k-row index — every probe then
-    # lists and opens nprobe × n_scan_partitions tiny files), the classic
-    # small-files problem.  REBALANCE(__list) (guide §6's coalesce-on-
-    # write tool) shuffles by list AND lets AQE split an oversized list
-    # into advisory-sized chunks — one file per list locally, ~advisory-
-    # sized files per list at 100 TB (a plain repartition(__list) would
-    # emit ONE arbitrarily large file per list there).  Probe results are
-    # unchanged by construction (same rows; re-rank sorts on (cosine, id),
-    # never file order).
-    (
-        assigned.hint("rebalance", "__list")
-        .write.mode("overwrite")
-        .partitionBy("__list")
-        .parquet(path)
-    )
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(cid, [float(x) for x in vec]) for cid, vec in cents],
-        "cid int, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}__centroids")
+
+    def write(version_dir: str) -> None:
+        rows_dir, cents_dir = _parts(version_dir, "centroids")
+        _write_ivf_rows(assigned, rows_dir, "overwrite")
+        spark.createDataFrame(
+            [(cid, [float(x) for x in vec]) for cid, vec in cents],
+            "cid int, cvec array<double>",
+        ).coalesce(1).write.mode("overwrite").parquet(cents_dir)
+
+    tableops.write_version(path, write)
     return cents
 
 
+def _current_ivf(spark, path: str, centroids=None):
+    """(rows dir, centroids) of the current version, resolved ONCE so no
+    caller pairs one version's lists with another's centroids."""
+    rows_dir, cents_dir = _parts(tableops.current_dir(path), "centroids")
+    if centroids is None:
+        rows = spark.read.parquet(cents_dir).collect()
+        centroids = sorted((int(r.cid), [float(x) for x in r.cvec]) for r in rows)
+    return rows_dir, centroids
+
+
 def load_ivf_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
-    """Reload a stored index's centroid half (k rows — bounded collect)."""
-    rows = spark.read.parquet(f"{path}__centroids").collect()
-    return sorted((int(r.cid), [float(x) for x in r.cvec]) for r in rows)
+    """Reload the current version's centroids."""
+    return _current_ivf(spark, path)[1]
 
 
 def append_ivf_index(
@@ -778,12 +807,12 @@ def append_ivf_index(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> None:
-    """Grow a stored IVF index in place: assign the delta batch against
-    the index's EXISTING centroids (fail-fast read — a missing centroid
-    file means the index was never built, and nothing is written) and
-    append into the ``__list=`` partition directories — the ANN half of
-    the incremental lifecycle every stored index in this repo follows
-    (band index: ``dedup.append_band_index``; text index:
+    """Grow a stored IVF index: assign the delta batch against the current
+    version's centroids (fail-fast — an index that was never built raises
+    before anything is written) and append into that version's
+    ``__list=`` partition directories — the ANN half of the incremental
+    lifecycle every stored index in this repo follows (band index:
+    ``dedup.append_band_index``; text index:
     ``retrieval.append_postings_index``).
 
     The centroids are the QUANTIZER, not a corpus statistic: per-vector
@@ -798,82 +827,43 @@ def append_ivf_index(
     economics FAISS documents for IVF.
 
     Each append adds one file per touched list; run
-    :func:`compact_ivf_index` when file counts grow (same economics as
-    ``stores.compact_bucketed`` for the band/postings tables).
+    :func:`compact_ivf_index` when file counts grow, with appenders paused
+    (an append to the old version after the compaction read it is lost).
     """
     spark = delta.sparkSession
-    cents = load_ivf_centroids(spark, path)
+    rows_dir, cents = _current_ivf(spark, path)
     assigned = ivf_assign(delta, cents, corpus_id=corpus_id, corpus_vec=corpus_vec)
-    # one right-sized file per touched list per append (not one per delta
-    # partition per list) — the same §6 REBALANCE discipline as the build
-    (
-        assigned.hint("rebalance", "__list")
-        .write.mode("append")
-        .partitionBy("__list")
-        .parquet(path)
-    )
+    _write_ivf_rows(assigned, rows_dir, "append")
 
 
-def compact_ivf_index(spark, path: str, new_path: str) -> None:
-    """Rewrite an append-grown IVF index to ONE file per inverted list at
-    ``new_path`` (probes open O(nprobe) files again instead of
-    O(nprobe · appends)) and copy the centroid half alongside.  The
-    repartition ON the partition column puts each list's rows in a single
-    task, so ``partitionBy`` emits exactly one file per list directory.
+def compact_ivf_index(spark, path: str) -> None:
+    """Rewrite an append-grown IVF index to ONE file per inverted list
+    (probes open O(nprobe) files again instead of O(nprobe · appends)),
+    carrying the centroids into the same new version, committed by one
+    flip (:func:`tableops.compact_version`).  The repartition ON the
+    partition column puts each list's rows in a single task, so
+    ``partitionBy`` emits exactly one file per list directory.
 
     Results are unchanged by construction — same rows, same partition
     values, and probe determinism never depended on file order (the
-    re-rank sorts on (cosine, id)).  The caller swaps paths (or points
-    probes at ``new_path``) and deletes the old directory once no reader
-    needs it — same non-atomic-swap contract as ``stores.compact_bucketed``,
-    and the same guard: compacting INTO the live path would overwrite the
-    files the compaction scan is reading.  Concurrent compactors are
-    excluded by the same flock-backed lease
-    (``stores.acquire_compaction_lease``, keyed on the live index root);
-    a second compactor raises ``stores.LeaseHeldError``.
+    re-rank sorts on (cosine, id)).  A compaction that fails before its
+    flip leaves the previous version serving; a second concurrent
+    compactor raises ``tableops.LeaseHeldError``.
     """
-    import os
 
-    from feature_store_healthcare_spark.stores import (
-        acquire_compaction_lease,
-        local_path,
-        release_compaction_lease,
-    )
-
-    # The guard covers BOTH directories each side touches (index root and
-    # its __centroids sibling) and nesting in either direction: compacting
-    # INTO the live root, its centroid dir, or a path inside/above either
-    # would overwrite files this function is concurrently reading.
-    a = os.path.abspath(local_path(path))
-    b = os.path.abspath(local_path(new_path))
-    sources = (a, f"{a}__centroids")
-    targets = (b, f"{b}__centroids")
-    for s in sources:
-        for t in targets:
-            if t == s or t.startswith(s + os.sep) or s.startswith(t + os.sep):
-                raise ValueError(
-                    f"compact_ivf_index new_path={new_path!r} overlaps the "
-                    f"live index at {path!r} ({t} vs {s}) — the overwrite "
-                    "would delete files the compaction scan is reading. "
-                    "Compact to a fresh path and swap."
-                )
-    lease, owner = acquire_compaction_lease(path)
-    try:
+    def rewrite(src: str, new: str) -> None:
+        src_rows, src_cents = _parts(src, "centroids")
+        new_rows, new_cents = _parts(new, "centroids")
         (
-            spark.read.parquet(path)
+            spark.read.parquet(src_rows)
             .repartition(F.col("__list"))
             .write.mode("overwrite")
             .partitionBy("__list")
-            .parquet(new_path)
+            .parquet(new_rows)
         )
-        (
-            spark.read.parquet(f"{path}__centroids")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{new_path}__centroids")
-        )
-    finally:
-        release_compaction_lease(lease, owner)
+        shutil.copytree(src_cents, new_cents)
+
+    tableops.compact_version(path, rewrite)
 
 
 def ivf_topk_from_index(
@@ -919,12 +909,11 @@ def ivf_topk_from_index(
         StructType,
     )
 
-    cents = centroids if centroids is not None else load_ivf_centroids(spark, path)
+    rows_dir, cents = _current_ivf(spark, path, centroids)
     if not cents:
         raise ValueError(
-            f"ivf_topk_from_index: no centroids at {path}__centroids — the "
-            "index was never built there, or its centroid side file is "
-            "empty/corrupt. Rebuild with build_ivf_index."
+            f"ivf_topk_from_index: no centroids at {path} — the centroid "
+            "file is empty/corrupt. Rebuild with build_ivf_index."
         )
     if nprobe is None:
         nprobe = auto_nprobe(len(cents))
@@ -945,7 +934,7 @@ def ivf_topk_from_index(
     probed = sorted({lst for lists in lists_per_q for lst in lists})
     # static partition pruning: the scan never touches unprobed lists
     # (an empty probe set reads nothing at all)
-    scan = spark.read.parquet(path).where(
+    scan = spark.read.parquet(rows_dir).where(
         F.col("__list").isin(probed) if probed else F.lit(False)
     )
     qt = queries.schema[query_id].dataType
@@ -1028,12 +1017,11 @@ def ivf_topk_from_index_blas(
     to screen).  Measured at the hostile
     ×50 bracket (100k vectors, 100 queries): warm probe 6.5 s
     (expression) → ~1.1 s."""
-    cents = centroids if centroids is not None else load_ivf_centroids(spark, path)
+    rows_dir, cents = _current_ivf(spark, path, centroids)
     if not cents:
         raise ValueError(
-            f"ivf_topk_from_index_blas: no centroids at {path}__centroids — "
-            "the index was never built there, or its centroid side file is "
-            "empty/corrupt. Rebuild with build_ivf_index."
+            f"ivf_topk_from_index_blas: no centroids at {path} — the centroid "
+            "file is empty/corrupt. Rebuild with build_ivf_index."
         )
     if nprobe is None:
         nprobe = auto_nprobe(len(cents))
@@ -1047,7 +1035,7 @@ def ivf_topk_from_index_blas(
             "driver-side. Pass a smaller batch, raise the bound "
             "deliberately, or use ivf_topk with a persisted assigned corpus."
         )
-    raw_scan = spark.read.parquet(path)
+    raw_scan = spark.read.parquet(rows_dir)
     out_schema, empty_schema = _blas_out_schemas(
         queries.schema[query_id].dataType,
         raw_scan.schema["__cid"].dataType,
@@ -1346,6 +1334,21 @@ def pca_topk(
     )
 
 
+def _project_rows(
+    df: DataFrame, comps, mean, corpus_id: str, emb_col: str, dim: int
+) -> DataFrame:
+    """The stored row shape (__cid, __p, embedding, __n): __n is the
+    full-dim norm, computed ONCE with the probe's own unrolled expression
+    (bit-identical), so the re-rank never recomputes it."""
+    proj = pca_project(df, comps, mean, emb_col=emb_col, out_col="__p")
+    return proj.select(
+        F.col(corpus_id).alias("__cid"),
+        "__p",
+        F.col(emb_col).alias("embedding"),
+        _norm(emb_col, dim=dim).alias("__n"),
+    )
+
+
 def build_pca_index(
     corpus: DataFrame,
     path: str,
@@ -1355,66 +1358,72 @@ def build_pca_index(
     emb_col: str = "embedding",
 ):
     """Fit PCA once and persist BOTH halves of the compressed-scan index
-    (round-12 VERDICT ask #5 — ``pca_topk`` refit the covariance pass +
-    eigendecomposition on every call):
+    into one new version of the versioned root ``path``:
 
-    * ``path`` — the projected corpus: one row per vector with
-      ``(__cid, __p array<double>[pca_dim], embedding)``.  Probes scan
-      this instead of re-projecting; the full-dim column rides along so
-      the exact re-rank needs no join back to the raw corpus.
-    * ``path + "__model"`` — the fitted model: ``pca_dim`` component
-      rows + the mean (+ explained variance), a (k+2)-row side file, the
-      same bounded-small-side shape as the IVF ``__centroids`` file.
+    * ``vNNNNNN/rows`` — the projected corpus: one row per vector with
+      ``(__cid, __p array<double>[pca_dim], embedding, __n)``.  Probes
+      scan this instead of re-projecting; the full-dim column rides along
+      so the exact re-rank needs no join back to the raw corpus.
+    * ``vNNNNNN/model`` — the fitted model: ``pca_dim`` component rows +
+      the mean (+ explained variance), a (k+2)-row file, the same
+      bounded-small-side shape as the IVF centroids.
 
-    Same build→probe lifecycle as :func:`build_ivf_index` /
-    ``retrieval.build_postings_index`` / ``dedup.build_band_index``: the
-    build pays one corpus scan for the Gram statistics and one for the
-    projection write; every later probe pays only the projected scan
-    (:func:`pca_topk_from_index`).  Returns ``(components, mean)``.
+    ONE pointer flip commits both (:func:`tableops.write_version`) — a
+    failed build serves the old.  Same build→probe lifecycle as
+    :func:`build_ivf_index` / ``retrieval.build_postings_index`` /
+    ``dedup.build_band_index``: the build pays one corpus scan for the
+    Gram statistics and one for the projection write; every later probe
+    pays only the projected scan (:func:`pca_topk_from_index`).  Returns
+    ``(components, mean)``.
     """
     comps, var, mean = pca_fit(corpus, emb_col, dim=dim, k=pca_dim)
-    proj = pca_project(corpus, comps, mean, emb_col=emb_col, out_col="__p")
-    # __n: the full-dim L2 norm, precomputed ONCE at build with the same
-    # unrolled expression the probe would use (bit-identical values), so
-    # the re-rank never recomputes norms and the probe plan drops one
-    # dim-term codegen chain
-    # REBALANCE before the write (guide §6): the projected corpus
-    # otherwise lands as one file per scan partition (32 tiny files at
-    # sf0.1 for 2k rows); AQE sizes output files to the advisory target
-    # — one file locally, ~advisory-sized files at 100 TB.  Probe
-    # results never depend on file count/order.
-    proj.select(
-        F.col(corpus_id).alias("__cid"),
-        "__p",
-        F.col(emb_col).alias("embedding"),
-        _norm(emb_col, dim=dim).alias("__n"),
-    ).hint("rebalance").write.mode("overwrite").parquet(path)
     spark = corpus.sparkSession
-    rows = [("comp", i, [float(x) for x in comps[i]]) for i in range(len(comps))]
-    rows.append(("mean", 0, [float(x) for x in mean]))
-    rows.append(("var", 0, [float(x) for x in var]))
-    spark.createDataFrame(
-        rows, "part string, idx int, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}__model")
+    model = [("comp", i, [float(x) for x in comps[i]]) for i in range(len(comps))]
+    model.append(("mean", 0, [float(x) for x in mean]))
+    model.append(("var", 0, [float(x) for x in var]))
+
+    def write(version_dir: str) -> None:
+        rows_dir, model_dir = _parts(version_dir, "model")
+        # REBALANCE before the write (guide §6): the projected corpus
+        # otherwise lands as one file per scan partition (32 tiny files
+        # at sf0.1 for 2k rows); AQE sizes output files to the advisory
+        # target — one file locally, ~advisory-sized files at 100 TB.
+        # Probe results never depend on file count/order.
+        _project_rows(corpus, comps, mean, corpus_id, emb_col, dim).hint(
+            "rebalance"
+        ).write.mode("overwrite").parquet(rows_dir)
+        spark.createDataFrame(
+            model, "part string, idx int, vec array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(model_dir)
+
+    tableops.write_version(path, write)
     return comps, mean
+
+
+def _current_pca(spark, path: str, components=None, mean=None):
+    """(rows dir, components, mean) of the current version, resolved ONCE
+    (the :func:`_current_ivf` contract)."""
+    rows_dir, model_dir = _parts(tableops.current_dir(path), "model")
+    if components is None or mean is None:
+        rows = spark.read.parquet(model_dir).collect()
+        components = np.asarray(
+            [r.vec for r in sorted(
+                (r for r in rows if r.part == "comp"), key=lambda r: r.idx
+            )],
+            dtype=np.float64,
+        )
+        mean = np.asarray(
+            next(r.vec for r in rows if r.part == "mean"), dtype=np.float64
+        )
+    return rows_dir, components, mean
 
 
 def load_pca_model(spark, path: str):
-    """Reload a stored PCA index's model half (k+2 rows — bounded collect,
+    """Reload the current version's PCA model (k+2 rows — bounded collect,
     like :func:`load_ivf_centroids`).  Returns ``(components[k,d],
     mean[d])`` as float64 arrays, bit-identical to what
     :func:`build_pca_index` returned (parquet doubles round-trip exactly)."""
-    rows = spark.read.parquet(f"{path}__model").collect()
-    comps = np.asarray(
-        [r.vec for r in sorted(
-            (r for r in rows if r.part == "comp"), key=lambda r: r.idx
-        )],
-        dtype=np.float64,
-    )
-    mean = np.asarray(
-        next(r.vec for r in rows if r.part == "mean"), dtype=np.float64
-    )
-    return comps, mean
+    return _current_pca(spark, path)[1:]
 
 
 def append_pca_index(
@@ -1423,12 +1432,13 @@ def append_pca_index(
     corpus_id: str = "vec_id",
     emb_col: str = "embedding",
 ) -> None:
-    """Grow a stored PCA index in place: project the delta batch with the
-    index's EXISTING model (fail-fast read — a missing model file means
-    the index was never built, and nothing is written) and append to the
-    projected-corpus parquet — the PCA half of the incremental lifecycle
+    """Grow a stored PCA index: project the delta batch with the current
+    version's model (fail-fast — an index that was never built raises
+    before anything is written) and append to that version's projected
+    rows — the PCA half of the incremental lifecycle
     (:func:`append_ivf_index` for lists, ``append_postings_index`` for
-    terms, ``append_band_index`` for bands).
+    terms, ``append_band_index`` for bands), with the same compaction
+    contract: pause appenders around :func:`compact_pca_index`.
 
     Like the IVF centroids, the model is the QUANTIZER, not a corpus
     statistic: projection is per-row deterministic given (components,
@@ -1440,67 +1450,30 @@ def append_pca_index(
     cadence recall monitoring dictates — the same retrain-vs-append
     economics as IVF."""
     spark = delta.sparkSession
-    comps, mean = load_pca_model(spark, path)
-    dim = comps.shape[1]
-    proj = pca_project(delta, comps, mean, emb_col=emb_col, out_col="__p")
-    proj.select(
-        F.col(corpus_id).alias("__cid"),
-        "__p",
-        F.col(emb_col).alias("embedding"),
-        _norm(emb_col, dim=dim).alias("__n"),
-    ).write.mode("append").parquet(path)
+    rows_dir, comps, mean = _current_pca(spark, path)
+    _project_rows(
+        delta, comps, mean, corpus_id, emb_col, comps.shape[1]
+    ).write.mode("append").parquet(rows_dir)
 
 
-def compact_pca_index(spark, path: str, new_path: str, n_files: int = 8) -> None:
-    """Rewrite an append-grown PCA index to ``n_files`` files at
-    ``new_path`` (probes open O(n_files) again instead of O(appends))
-    and copy the model side file alongside — the PCA half of the
-    compaction surface every append-grown index here carries
-    (:func:`compact_ivf_index` for lists, ``stores.compact_bucketed``
-    for bucketed tables).  Results unchanged by construction (same rows;
-    probe determinism never depended on file order — the re-rank sorts
-    on (cosine, id)).  Same non-atomic-swap contract and flock-backed
-    single-compactor lease as :func:`compact_ivf_index`, and the same
-    overlap guard: compacting INTO the live path (or its ``__model``
-    sibling, or a nested path either way) would overwrite files the
-    compaction scan is reading."""
-    import os
+def compact_pca_index(spark, path: str, n_files: int = 8) -> None:
+    """Rewrite an append-grown PCA index to ``n_files`` files (probes open
+    O(n_files) again instead of O(appends)) in a new version that carries
+    the model — the PCA half of :func:`compact_ivf_index`, with its
+    single-flip commit, lease and unchanged-results contract."""
 
-    from feature_store_healthcare_spark.stores import (
-        acquire_compaction_lease,
-        local_path,
-        release_compaction_lease,
-    )
-
-    a = os.path.abspath(local_path(path))
-    b = os.path.abspath(local_path(new_path))
-    sources = (a, f"{a}__model")
-    targets = (b, f"{b}__model")
-    for s in sources:
-        for t in targets:
-            if t == s or t.startswith(s + os.sep) or s.startswith(t + os.sep):
-                raise ValueError(
-                    f"compact_pca_index new_path={new_path!r} overlaps the "
-                    f"live index at {path!r} ({t} vs {s}) — the overwrite "
-                    "would delete files the compaction scan is reading. "
-                    "Compact to a fresh path and swap."
-                )
-    lease, owner = acquire_compaction_lease(path)
-    try:
+    def rewrite(src: str, new: str) -> None:
+        src_rows, src_model = _parts(src, "model")
+        new_rows, new_model = _parts(new, "model")
         (
-            spark.read.parquet(path)
+            spark.read.parquet(src_rows)
             .repartition(n_files)
             .write.mode("overwrite")
-            .parquet(new_path)
+            .parquet(new_rows)
         )
-        (
-            spark.read.parquet(f"{path}__model")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{new_path}__model")
-        )
-    finally:
-        release_compaction_lease(lease, owner)
+        shutil.copytree(src_model, new_model)
+
+    tableops.compact_version(path, rewrite)
 
 
 def pca_topk_from_index(
@@ -1540,8 +1513,7 @@ def pca_topk_from_index(
     configuration; the production ``rerank_factor=8`` configuration's
     only unverified delta is which candidates the coarse cut drops
     (recall-pinned vs the exact scorer in tests)."""
-    if components is None or mean is None:
-        components, mean = load_pca_model(spark, path)
+    rows_dir, components, mean = _current_pca(spark, path, components, mean)
     model_dim = int(np.asarray(components).shape[1])
     if dim is None:
         dim = model_dim
@@ -1551,7 +1523,7 @@ def pca_topk_from_index(
             f"model's vector width {model_dim} — the re-rank unroll would "
             "silently produce null cosines. Omit dim to use the model's."
         )
-    projected = spark.read.parquet(path)
+    projected = spark.read.parquet(rows_dir)
     return pca_topk(
         queries,
         None,  # corpus unused: model + projection both come from the index
@@ -1639,8 +1611,7 @@ def pca_topk_from_index_blas(
     → sub-second; the at-scale win is the matmul kernel replacing a
     per-pair scalar chain, the local win is skipping that plan's janino
     compile."""
-    if components is None or mean is None:
-        components, mean = load_pca_model(spark, path)
+    rows_dir, components, mean = _current_pca(spark, path, components, mean)
     comps = np.asarray(components, dtype=np.float64)
     mu = np.asarray(mean, dtype=np.float64)
     q_rows = (
@@ -1653,7 +1624,7 @@ def pca_topk_from_index_blas(
             "its closure. Pass a smaller batch, raise the bound "
             "deliberately, or use pca_topk_from_index."
         )
-    raw_scan = spark.read.parquet(path)
+    raw_scan = spark.read.parquet(rows_dir)
     cand_schema, empty_schema = _blas_out_schemas(
         queries.schema[query_id].dataType,
         raw_scan.schema["__cid"].dataType,

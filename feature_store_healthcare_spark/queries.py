@@ -5014,7 +5014,8 @@ def bigram_lm_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min-of-N then reports the amortized probe), and table names are
 # sf-scoped so scale factors never collide in a shared warehouse.
 
-_STORED_INDEX_MEMO: dict[tuple[str, str, str], str] = {}
+#: (applicationId, sf_dir, kind) → what the kind's build returned
+_STORED_INDEXES: dict[tuple[str, str, str], object] = {}
 
 
 #: applicationId → per-process fallback warehouse directory
@@ -5047,34 +5048,33 @@ def _writable_warehouse(spark: SparkSession) -> str:
     return _FALLBACK_WAREHOUSE[app]
 
 
-def _stored_index(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
-    """Build-once-per-session stored index; returns the catalog table name.
-    ``build(table, path)`` runs with OVERWRITE semantics on first use in a
-    session, so stale leftovers from earlier sessions can't poison results.
-    """
-    from feature_store_healthcare_spark.stores import local_path
-
+def _stored_index(spark: SparkSession, sf_dir: str, kind: str, build):
+    """The one build-once-per-session memo of every stored index:
+    ``build(name, path)`` runs on first use (a fresh build — leftovers of
+    earlier sessions can't poison results) and its result is memoized.
+    ``kind`` carries the build parameter (``ivf16`` vs ``ivf64``)."""
     key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _STORED_INDEX_MEMO:
-        table = f"fshs_{kind}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        build(table, os.path.join(_writable_warehouse(spark), table))
-        _STORED_INDEX_MEMO[key] = table
-    return _STORED_INDEX_MEMO[key]
+    if key not in _STORED_INDEXES:
+        name = f"fshs_{kind}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+        _STORED_INDEXES[key] = build(
+            name, os.path.join(_writable_warehouse(spark), name)
+        )
+    return _STORED_INDEXES[key]
 
 
 def _stored_postings(spark: SparkSession, sf_dir: str) -> str:
     docs = load_table(spark, sf_dir, "documents")
-    return _stored_index(
-        spark,
-        sf_dir,
-        "post",
+
+    def build(table: str, path: str) -> str:
         # auto bucket count (retrieval.auto_index_buckets): the probes'
         # heavy stages run INSIDE the bucket tasks, so bucket count is
         # probe parallelism at scale — but a fixed 32 over-splits a
         # 5k-doc corpus (round-9 A/B); auto gives 8 here and hits the
         # parallelism cap (32 on local[32]) at the ×200 rehearsal
-        lambda t, p: retrieval.build_postings_index(docs, "doc_id", "text", t, p),
-    )
+        retrieval.build_postings_index(docs, "doc_id", "text", table, path)
+        return table
+
+    return _stored_index(spark, sf_dir, "post", build)
 
 
 @query(
@@ -5112,27 +5112,17 @@ def hybrid_rrf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STORED_IVF_MEMO: dict[tuple[str, str], tuple[str, list]] = {}
-
-
 def _stored_ivf(spark: SparkSession, sf_dir: str, n_centroids: int = 16):
-    """Build-once-per-session stored IVF index over the embeddings corpus
-    (similarity.build_ivf_index: ``__list``-partitioned disk layout +
-    centroid side file); returns (path, centroids).  OVERWRITE semantics
-    on first use in a session, sf-scoped path — same contract as
-    :func:`_stored_index`."""
-    from feature_store_healthcare_spark.stores import local_path
+    """The session's stored IVF index over the embeddings corpus
+    (similarity.build_ivf_index); returns (path, centroids).  The kind
+    carries ``n_centroids``: a 64-centroid request must never be served a
+    memoized 16-centroid quantizer (wrong lists, wrong recall)."""
 
-    # n_centroids is part of the key: a 64-centroid request must never be
-    # served a memoized 16-centroid quantizer (wrong lists, wrong recall)
-    key = (spark.sparkContext.applicationId, sf_dir, n_centroids)
-    if key not in _STORED_IVF_MEMO:
-        name = f"fshs_ivf{n_centroids}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        path = os.path.join(_writable_warehouse(spark), name)
+    def build(name: str, path: str):
         emb = load_table(spark, sf_dir, "embeddings")
-        cents = similarity.build_ivf_index(emb, path, n_centroids=n_centroids)
-        _STORED_IVF_MEMO[key] = (path, cents)
-    return _STORED_IVF_MEMO[key]
+        return path, similarity.build_ivf_index(emb, path, n_centroids=n_centroids)
+
+    return _stored_index(spark, sf_dir, f"ivf{n_centroids}", build)
 
 
 @query("hybrid_rrf_ivf_stored")  # no oracle BY DESIGN: the cosine half is
@@ -5237,27 +5227,19 @@ def hybrid_rrf_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STORED_PCA_MEMO: dict[tuple, tuple] = {}
-
-
 def _stored_pca(spark: SparkSession, sf_dir: str, pca_dim: int = 32):
-    """Build-once-per-session stored PCA index over the embeddings corpus
-    (similarity.build_pca_index: projected-corpus parquet + (k+2)-row
-    model side file); returns (path, components, mean, n_vectors).
-    OVERWRITE semantics on first use in a session, sf-scoped path — same
-    contract as :func:`_stored_ivf` (pca_dim in the key for the same
-    reason n_centroids is: a 64-dim request must never be served a
-    memoized 32-dim projection).  ``n_vectors`` is counted ONCE at build
-    (the corpus was just scanned anyway) so the exhaustive anchor can
-    size its rerank pool without paying a corpus count per call."""
-    key = (spark.sparkContext.applicationId, sf_dir, pca_dim)
-    if key not in _STORED_PCA_MEMO:
-        name = f"fshs_pca{pca_dim}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        path = os.path.join(_writable_warehouse(spark), name)
+    """The session's stored PCA index over the embeddings corpus
+    (similarity.build_pca_index); returns (path, components, mean,
+    n_vectors).  The kind carries ``pca_dim`` as :func:`_stored_ivf`'s
+    carries n_centroids.  ``n_vectors`` is counted ONCE at build so the
+    exhaustive anchor sizes its rerank pool without a count per call."""
+
+    def build(name: str, path: str):
         emb = load_table(spark, sf_dir, "embeddings")
         comps, mean = similarity.build_pca_index(emb, path, pca_dim=pca_dim)
-        _STORED_PCA_MEMO[key] = (path, comps, mean, emb.count())
-    return _STORED_PCA_MEMO[key]
+        return path, comps, mean, emb.count()
+
+    return _stored_index(spark, sf_dir, f"pca{pca_dim}", build)
 
 
 @query("embedding_pca_stored")  # no oracle BY DESIGN: the coarse 32-dim
@@ -5354,18 +5336,18 @@ def bigram_lm_stored_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket layout; only the vocabulary-sized history table and the final
     per-doc fold shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    table = _stored_index(
-        spark,
-        sf_dir,
-        "bigram",
+
+    def build(table: str, path: str) -> str:
         # auto bucket count (retrieval.auto_index_buckets, round-8
         # VERDICT #1): the fixed ×200-tuned 32-bucket layout doubled
         # this probe at sf0.1 (5k docs — per-bucket overhead dominates
         # a few-MB index); auto restores 8 buckets here (idle-host
         # min-of-5: 0.48 s vs 0.76 s) while ×200 still gets the
         # measured 32 via the parallelism cap
-        lambda t, p: retrieval.build_bigram_index(docs, "doc_id", "text", t, p),
-    )
+        retrieval.build_bigram_index(docs, "doc_id", "text", table, path)
+        return table
+
+    table = _stored_index(spark, sf_dir, "bigram", build)
     return retrieval.bigram_logprob_from_index(spark, table, add_k=0.5)
 
 
@@ -6346,21 +6328,13 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STORED_DSIR_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _stored_dsir(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once-per-session stored DSIR distribution table: corpus
-    counts (doc_id % 5 != 0) written, the delta batch's counts APPENDED
-    — so the folded statistics equal a single full-corpus pass exactly
-    (integer counts).  Same session/overwrite contract as
-    :func:`_stored_index`."""
-    from feature_store_healthcare_spark.stores import local_path
+    """The session's stored DSIR distribution table: corpus counts
+    (doc_id % 5 != 0) built, the delta batch's counts APPENDED — so the
+    folded statistics equal a single full-corpus pass exactly (integer
+    counts).  Returns the index root."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STORED_DSIR_MEMO:
-        name = f"fshs_dsirdist_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        path = os.path.join(_writable_warehouse(spark), name)
+    def build(name: str, path: str) -> str:
         docs = load_table(spark, sf_dir, "documents")
         tgt = F.col("lang") == "en"
         sampling.build_dsir_dist(
@@ -6369,8 +6343,9 @@ def _stored_dsir(spark: SparkSession, sf_dir: str) -> str:
         sampling.append_dsir_dist(
             docs.where(F.col("doc_id") % 5 == 0), "text", tgt, path
         )
-        _STORED_DSIR_MEMO[key] = path
-    return _STORED_DSIR_MEMO[key]
+        return path
+
+    return _stored_index(spark, sf_dir, "dsirdist", build)
 
 
 @query(
@@ -6526,12 +6501,13 @@ def dedup_incremental_stored_bands(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 5 == 0)
 
-    def build(table: str, path: str) -> None:
+    def build(table: str, path: str) -> str:
         corpus = docs.where(F.col("doc_id") % 5 != 0)
         dedup.build_band_index(
             corpus, "doc_id", "text", table, path, n_buckets=16,
             n=3, num_hashes=16, bands=4, portable=True,
         )
+        return table
 
     table = _stored_index(spark, sf_dir, "bands", build)
     from feature_store_healthcare_spark.stores import read_table

@@ -23,13 +23,13 @@ history lives in AppendStore, which never rewrites.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from feature_store_healthcare_spark import tableops
 from feature_store_healthcare_spark.operators.pit import latest_per_key
 from feature_store_healthcare_spark.sqlgen import table_ident
 
@@ -79,29 +79,9 @@ class LatestStore:
         self._committed: tuple[int, StructType] | None = None
         os.makedirs(path, exist_ok=True)
 
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
-
-    def _current_version(self) -> int | None:
-        from feature_store_healthcare_spark.tableops import read_pointer
-
-        cur = read_pointer(self._pointer)
-        try:
-            return int(cur) if cur is not None else None
-        except ValueError:
-            return None
-
-    def _snapshot_dir(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version:06d}")
-
     def versions(self) -> list[int]:
         """Snapshot versions still on disk, oldest first."""
-        out = []
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit():
-                out.append(int(name[1:]))
-        return sorted(out)
+        return tableops.versions(self.path)
 
     def read(self, version: int | None = None) -> DataFrame | None:
         """Current snapshot, or time-travel to a retained ``version``."""
@@ -111,13 +91,13 @@ class LatestStore:
                     f"version {version} not retained (have {self.versions()})"
                 )
         else:
-            version = self._current_version()
+            version = tableops.current_version(self.path)
             if version is None:
                 return None
         reader = self.spark.read
         if self._committed is not None and self._committed[0] == version:
             reader = reader.schema(self._committed[1])
-        return reader.parquet(self._snapshot_dir(version))
+        return reader.parquet(tableops.version_dir(self.path, version))
 
     def merge(
         self,
@@ -134,17 +114,12 @@ class LatestStore:
         current = self.read()
         merged = updates if current is None else current.unionByName(updates)
         latest = latest_per_key(merged, keys, ts_col, tiebreak=tiebreak)
-        old = self._current_version()
-        new = (old or 0) + 1
-        latest.write.mode("overwrite").parquet(self._snapshot_dir(new))
-        from feature_store_healthcare_spark.tableops import flip_pointer
-
-        flip_pointer(self._pointer, str(new))  # atomic snapshot commit
+        new = tableops.write_version(
+            self.path,
+            lambda d: latest.write.mode("overwrite").parquet(d),
+            keep=self.keep_versions,
+        )
         self._committed = (new, latest.schema)
-        # retain the newest keep_versions snapshots (incl. current)
-        for stale in self.versions()[: -self.keep_versions]:
-            if stale != new:
-                shutil.rmtree(self._snapshot_dir(stale), ignore_errors=True)
 
 
 def write_bucketed(
@@ -250,20 +225,6 @@ def _bucket_spec(
 _SIDECAR_SUFFIXES = ("__family",)
 
 
-# The compaction lease lives in tableops — the transactional-table-format
-# seam that owns ALL marker/lease/swap I/O (round-10 VERDICT #6).  These
-# re-exports keep the historical import path working (operators and tests
-# imported the lease from stores since round 10).
-from feature_store_healthcare_spark.tableops import (  # noqa: E402,F401
-    _LEASE_FDS,
-    LeaseHeldError,
-    acquire_compaction_lease,
-    release_compaction_lease,
-)
-
-
-
-
 def compact_bucketed(spark: SparkSession, table: str, new_path: str) -> str:
     """Rewrite an append-grown bucketed table so each bucket holds ONE file
     — the periodic maintenance step behind ``mode="append"`` writers
@@ -291,11 +252,11 @@ def compact_bucketed(spark: SparkSession, table: str, new_path: str) -> str:
     caller to delete once no reader needs it.
 
     Concurrent COMPACTORS are excluded by the flock-backed lease
-    (:func:`acquire_compaction_lease`, keyed on the table's current
-    location): two maintenance jobs racing the drop/rename swap was the
-    one remaining single-writer surface after round 9 made postings
-    stats append-only.  A second compactor gets :class:`LeaseHeldError`
-    instead of corrupting the swap; a crashed holder's kernel lock drops
+    (:func:`tableops.acquire_compaction_lease`, keyed on the table's
+    current location): two maintenance jobs racing the drop/rename swap
+    was the one remaining single-writer surface after round 9 made
+    postings stats append-only.  A second compactor gets
+    :class:`tableops.LeaseHeldError` instead of corrupting the swap; a crashed holder's kernel lock drops
     with its process, so the next compactor takes over immediately.
     """
     bucket_cols, n_buckets, sort_cols, old_location = _bucket_spec(spark, table)
@@ -320,7 +281,7 @@ def compact_bucketed(spark: SparkSession, table: str, new_path: str) -> str:
     # (task, bucket) instead of one per bucket.  A plain parquet scan keeps
     # the exchange, and write-side bucket assignment comes from the row
     # VALUES, so correctness never depended on the scan's metadata.
-    lease, lease_owner = acquire_compaction_lease(old_location)
+    lease, lease_owner = tableops.acquire_compaction_lease(old_location)
     try:
         compacted = spark.read.parquet(old_location).repartition(
             n_buckets, F.col(bucket_cols[0])
@@ -351,7 +312,7 @@ def compact_bucketed(spark: SparkSession, table: str, new_path: str) -> str:
             if os.path.exists(src):
                 os.replace(src, local_path(new_path).rstrip(os.sep) + suffix)
     finally:
-        release_compaction_lease(lease, lease_owner)
+        tableops.release_compaction_lease(lease, lease_owner)
     return old_location
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feature_store_healthcare_spark import tableops
 from feature_store_healthcare_spark.operators.pit import latest_per_key
 
 EVENTS_STREAM_SCHEMA = T.StructType(
@@ -186,24 +187,8 @@ def streaming_online_upsert(
     return _maintenance_writer(stream, _upsert, queryName, checkpoint_dir)
 
 
-# Marker/lease/swap I/O lives in tableops — the transactional-table-format
-# seam (round-10 VERDICT #6): one module owns every marker and lease file,
-# and each operation documents its Delta/Iceberg equivalent.  The private
-# aliases keep this module's historical surface (tests and docstrings
-# reference them) while delegating all file I/O to the seam.
-from feature_store_healthcare_spark import tableops  # noqa: E402
-from feature_store_healthcare_spark.tableops import (  # noqa: E402
-    idempotent_commit as _idempotent_foreach_batch,
-    marker_path as _marker_path,
-    read_batch_marker as _read_batch_marker,
-    recover_state_swap as _recover_state_swap,
-    swap_state_dir as _swap_state_dir,
-    write_batch_marker as _write_batch_marker,
-)
-
-
 def _maintenance_writer(stream: DataFrame, fb, queryName: str, checkpoint_dir: str | None):
-    """The shared writer tail of the three stored-index maintainers."""
+    """The shared writer tail of every ``foreachBatch`` maintainer here."""
     writer = (
         stream.writeStream.foreachBatch(fb)
         .outputMode("update")
@@ -216,7 +201,7 @@ def _maintenance_writer(stream: DataFrame, fb, queryName: str, checkpoint_dir: s
 
 def _refresh_tables(spark: SparkSession, *tables: str):
     """Post-append cache invalidation for the driver session (see
-    :func:`_idempotent_foreach_batch`): drop the cached relation (file
+    :func:`tableops.idempotent_commit`): drop the cached relation (file
     listing) of each index table so the next probe re-lists.  Targeted —
     one call per applied batch per table, never a blanket
     ``clearCache``."""
@@ -270,7 +255,7 @@ def streaming_postings_maintenance(
     ``txn_id`` and its OWN marker file (and accepts that re-streaming
     already-loaded documents double-loads them, exactly as a repeated
     batch append would).  Crash window: see
-    :func:`_idempotent_foreach_batch`.  Since round 9 the postings stats
+    :func:`tableops.idempotent_commit`.  Since round 9 the postings stats
     are append-only per-batch rows folded at read time, so concurrent
     appenders under distinct txn_ids compose; the remaining
     single-writer surface is COMPACTION (``stores.compact_bucketed``
@@ -281,7 +266,7 @@ def streaming_postings_maintenance(
     """
     from feature_store_healthcare_spark.operators import retrieval
 
-    _append = _idempotent_foreach_batch(
+    _append = tableops.idempotent_commit(
         path,
         txn_id or checkpoint_dir,
         lambda batch_df: retrieval.append_postings_index(
@@ -317,7 +302,7 @@ def streaming_band_maintenance(
     band rows — not a double-COUNT like postings stats, but duplicate
     band rows that inflate every future probe's candidate set — so the
     same (txn_id, batch_id) marker discipline guards it
-    (:func:`_idempotent_foreach_batch`, including the
+    (:func:`tableops.idempotent_commit`, including the
     one-active-writer contract and the crash-window caveat).
 
     Note the dedup loop's ordering: probe the delta FIRST
@@ -327,7 +312,7 @@ def streaming_band_maintenance(
     """
     from feature_store_healthcare_spark.operators import dedup
 
-    _append = _idempotent_foreach_batch(
+    _append = tableops.idempotent_commit(
         path,
         txn_id or checkpoint_dir,
         lambda batch_df: dedup.append_band_index(
@@ -349,14 +334,19 @@ def streaming_ivf_maintenance(
     queryName: str = "ivf_maintenance",
 ):
     """Streaming half of the stored IVF ANN-index lifecycle: each
-    micro-batch of new vectors is assigned against the index's EXISTING
-    centroids and appended into the ``__list=`` partition directories
-    through ``similarity.append_ivf_index`` (fail-fast on a never-built
-    index — bootstrap with ``similarity.build_ivf_index``).  A blind
-    replay would append duplicate vectors, so the same (txn_id,
+    micro-batch of new vectors is assigned against the CURRENT version's
+    centroids and appended into that version's ``__list=`` partition
+    directories through ``similarity.append_ivf_index`` (fail-fast on a
+    never-built index — bootstrap with ``similarity.build_ivf_index``).
+    A blind replay would append duplicate vectors, so the same (txn_id,
     batch_id) marker discipline guards it
-    (:func:`_idempotent_foreach_batch`; one ACTIVE writer per index —
-    an append racing ``compact_ivf_index``'s swap loses rows).
+    (:func:`tableops.idempotent_commit`; one ACTIVE writer per index;
+    the marker is keyed by the index root, so it survives new versions).
+
+    Compaction contract: ``compact_ivf_index`` and rebuilds commit a NEW
+    version with one pointer flip, so probes never see a mix; a batch
+    appended to the old version after the compaction read it is missing
+    from the new one — stop the stream around a compaction.
 
     Appends cannot re-train the quantizer: rebuild on the cadence recall
     monitoring dictates (see ``append_ivf_index``), and run
@@ -365,11 +355,11 @@ def streaming_ivf_maintenance(
     No ``refresh`` hook: the IVF index is probed by PATH
     (``spark.read.parquet``), which builds a fresh file index per read —
     only catalog-name reads go through the session's relation cache
-    (see :func:`_idempotent_foreach_batch`).
+    (see :func:`tableops.idempotent_commit`).
     """
     from feature_store_healthcare_spark.operators import similarity
 
-    _append = _idempotent_foreach_batch(
+    _append = tableops.idempotent_commit(
         path,
         txn_id or checkpoint_dir,
         lambda batch_df: similarity.append_ivf_index(
@@ -395,8 +385,10 @@ def streaming_pca_maintenance(
     ``similarity.append_pca_index`` (fail-fast on a never-built index —
     bootstrap with ``similarity.build_pca_index``).  A blind replay would
     append duplicate projected rows, so the same (txn_id, batch_id)
-    marker discipline guards it (:func:`_idempotent_foreach_batch`; one
-    ACTIVE writer per index).
+    marker discipline guards it (:func:`tableops.idempotent_commit`; one
+    ACTIVE writer per index).  Batches append to the CURRENT version,
+    with :func:`streaming_ivf_maintenance`'s compaction contract: stop
+    the stream around ``compact_pca_index``.
 
     Like the IVF centroids, the model is a quantizer, not a corpus
     statistic: appends are bit-identical to re-projecting the grown
@@ -408,7 +400,7 @@ def streaming_pca_maintenance(
     """
     from feature_store_healthcare_spark.operators import similarity
 
-    _append = _idempotent_foreach_batch(
+    _append = tableops.idempotent_commit(
         path,
         txn_id or checkpoint_dir,
         lambda batch_df: similarity.append_pca_index(
@@ -439,14 +431,15 @@ def streaming_dsir_dist_maintenance(
 
     An additive count append double-counts on blind replay, so the same
     (txn_id, batch_id) marker discipline guards it
-    (:func:`_idempotent_foreach_batch`).  Bootstrap with
-    ``sampling.build_dsir_dist`` (OVERWRITE) before starting the stream;
+    (:func:`tableops.idempotent_commit`).  Bootstrap with
+    ``sampling.build_dsir_dist`` (a fresh version) before starting the
+    stream, and stop it around ``sampling.compact_dsir_dist``;
     ``is_target`` must be the same predicate the bootstrap used — the
     statistics are meaningless if batches disagree about the target
     domain.  No ``refresh`` hook: the table is read by PATH."""
     from feature_store_healthcare_spark.operators import sampling
 
-    _append = _idempotent_foreach_batch(
+    _append = tableops.idempotent_commit(
         path,
         txn_id or checkpoint_dir,
         lambda batch_df: sampling.append_dsir_dist(
@@ -474,7 +467,7 @@ def streaming_media_stats_maintenance(
 
     A blind replay would duplicate stat rows, so the same
     (txn_id, batch_id) marker discipline as the index maintainers
-    guards the append (:func:`_idempotent_foreach_batch`).  The stats
+    guards the append (:func:`tableops.idempotent_commit`).  The stats
     table is read by PATH (no catalog refresh hook needed).
 
     Poison-pill posture (r12 ADVICE #2): the decode runs with
@@ -484,10 +477,9 @@ def streaming_media_stats_maintenance(
     idempotency marker is written and every availableNow retry replays
     the same poison batch forever; the error rows keep the failure
     visible (and countable) in the stats table itself."""
-    from feature_store_healthcare_spark import tableops
     from feature_store_healthcare_spark.operators import multimodal
 
-    _append = _idempotent_foreach_batch(
+    _append = tableops.idempotent_commit(
         path,
         txn_id or checkpoint_dir,
         lambda batch_df: tableops.append(
@@ -519,8 +511,9 @@ def streaming_incremental_rollup(
     batch_id) high-water mark stored INSIDE the state directory — it
     commits atomically with the state content in the swap's rename, so
     there is no window where the state holds a batch the marker does not
-    know about.  The swap itself is crash-safe (:func:`_swap_state_dir`:
-    old state moved aside, never deleted before the new one lands); on
+    know about.  The swap itself is crash-safe
+    (:func:`tableops.swap_state_dir`: old state moved aside, never
+    deleted before the new one lands); on
     Delta/Iceberg the whole fold would be a single MERGE INTO
     transaction.
 
@@ -553,9 +546,9 @@ def streaming_incremental_rollup(
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        _recover_state_swap(state_path)
+        tableops.recover_state_swap(state_path)
         mark = os.path.join(state_path.rstrip("/"), "_applied.json")
-        last = _read_batch_marker(mark)
+        last = tableops.read_batch_marker(mark)
         if (
             last is not None
             and last["txn_id"] == txn
@@ -684,8 +677,8 @@ def streaming_cdc_apply(
     state I/O is O(total keys) on plain parquet — on Delta/Iceberg the
     same fold is one MERGE INTO touching only changed files).  The fold
     is replay-idempotent by argmax (re-folding an applied batch changes
-    nothing), and the swap is crash-safe (:func:`_swap_state_dir`).  The
-    fold itself IS ``tableops.upsert`` — the MERGE INTO boundary a
+    nothing), and the swap is crash-safe
+    (:func:`tableops.swap_state_dir`).  The fold itself IS ``tableops.upsert`` — the MERGE INTO boundary a
     Delta/Iceberg deployment swaps out."""
     tiebreak = tiebreak or []
 

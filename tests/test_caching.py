@@ -74,9 +74,9 @@ def test_plan_cache_version_token_swaps(spark):
 def test_plan_cache_repersists_after_external_eviction(spark):
     """spark.catalog.clearCache() unpersists every entry behind the
     cache's back; a hit must detect the evicted storage level and
-    re-persist instead of serving an unpersisted frame forever (round-7
-    review finding #1 — scale_rehearsal clears the cache between timed
-    runs)."""
+    re-persist instead of serving an unpersisted frame forever — any
+    caller that clears the session cache between runs (a timing harness
+    does) must not leave operators serving evicted frames."""
     c = PlanCache("t")
     a = spark.range(10).selectExpr("id", "id * 3 AS x")
     same = spark.range(10).selectExpr("id", "id * 3 AS x")

@@ -580,7 +580,9 @@ def test_ivf_index_append_compact_lifecycle(spark, tmp_path):
     single build, and compaction collapses the per-append files to one
     per inverted list without changing a single result row."""
     import glob
+    import os
 
+    from feature_store_healthcare_spark import tableops
     from feature_store_healthcare_spark.operators import similarity
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -598,15 +600,18 @@ def test_ivf_index_append_compact_lifecycle(spark, tmp_path):
         similarity.append_ivf_index(d, path)
     # appended ≡ one-shot full-corpus index under the SAME centroids
     full_path = str(tmp_path / "ivf_full")
-    similarity.ivf_assign(emb, cents).write.mode("overwrite").partitionBy(
-        "__list"
-    ).parquet(full_path)
-    spark.read.parquet(f"{path}__centroids").write.mode("overwrite").parquet(
-        f"{full_path}__centroids"
+    oneshot_rows = similarity.ivf_assign(emb, cents)
+    tableops.write_version(
+        full_path,
+        lambda v: oneshot_rows.write.partitionBy("__list").parquet(
+            os.path.join(v, "rows")
+        ),
     )
     key = lambda t: (t[0], t[3])  # noqa: E731
     appended = similarity.ivf_topk_from_index(spark, path, q, k=5, nprobe=4)
-    oneshot = similarity.ivf_topk_from_index(spark, full_path, q, k=5, nprobe=4)
+    oneshot = similarity.ivf_topk_from_index(
+        spark, full_path, q, k=5, nprobe=4, centroids=cents
+    )
     assert sorted(map(tuple, appended.collect()), key=key) == sorted(
         map(tuple, oneshot.collect()), key=key
     )
@@ -614,20 +619,13 @@ def test_ivf_index_append_compact_lifecycle(spark, tmp_path):
     ghost = str(tmp_path / "ivf_ghost")
     with pytest.raises(Exception):
         similarity.append_ivf_index(deltas[0], ghost)
-    import os
-
     assert not os.path.exists(ghost)
-    # compaction: one file per list, results unchanged, live path guarded
-    # (the guard covers the root, the __centroids sibling, and nesting —
-    # any of them as a target would overwrite files being read)
-    for bad in (path, f"{path}__centroids", os.path.join(path, "sub")):
-        with pytest.raises(ValueError, match="overlaps"):
-            similarity.compact_ivf_index(spark, path, bad)
-    cpath = str(tmp_path / "ivf_v2")
-    similarity.compact_ivf_index(spark, path, cpath)
-    for d in glob.glob(os.path.join(cpath, "__list=*")):
+    # compaction: one file per list in the new version, results unchanged
+    similarity.compact_ivf_index(spark, path)
+    rows = os.path.join(tableops.current_dir(path), "rows")
+    for d in glob.glob(os.path.join(rows, "__list=*")):
         assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1
-    compacted = similarity.ivf_topk_from_index(spark, cpath, q, k=5, nprobe=4)
+    compacted = similarity.ivf_topk_from_index(spark, path, q, k=5, nprobe=4)
     assert sorted(map(tuple, compacted.collect()), key=key) == sorted(
         map(tuple, oneshot.collect()), key=key
     )

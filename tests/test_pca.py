@@ -3,10 +3,13 @@ pca_fit, pca_project) — pinned against direct numpy on the same data."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import Row
 
+from feature_store_healthcare_spark import tableops
 from feature_store_healthcare_spark.operators.similarity import (
     gram_matrix,
     pca_fit,
@@ -281,10 +284,10 @@ def test_pca_topk_reusable_index(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_pca_compact_preserves_probes_and_guards_overlap(spark, tmp_path):
-    """compact_pca_index rewrites an append-grown index to few files with
-    identical probe results, copies the model sidecar, and refuses to
-    compact into the live path (the overwrite-while-reading guard)."""
+def test_pca_compact_preserves_probes_and_model(spark, tmp_path):
+    """compact_pca_index rewrites an append-grown index to few files in a
+    new version with identical probe results and carries the model into
+    it."""
     from pyspark.sql import functions as F
 
     from feature_store_healthcare_spark.operators import similarity
@@ -304,18 +307,13 @@ def test_pca_compact_preserves_probes_and_guards_overlap(spark, tmp_path):
     )
     before = similarity.pca_topk_from_index(spark, path, q, k=5).collect()
 
-    new_path = str(tmp_path / "pca_c2")
-    similarity.compact_pca_index(spark, path, new_path, n_files=2)
-    after = similarity.pca_topk_from_index(spark, new_path, q, k=5).collect()
-    assert sorted(map(tuple, after)) == sorted(map(tuple, before))
-    lc, lm = similarity.load_pca_model(spark, new_path)
     oc, om = similarity.load_pca_model(spark, path)
+    similarity.compact_pca_index(spark, path, n_files=2)
+    after = similarity.pca_topk_from_index(spark, path, q, k=5).collect()
+    assert sorted(map(tuple, after)) == sorted(map(tuple, before))
+    lc, lm = similarity.load_pca_model(spark, path)
     np.testing.assert_array_equal(lc, oc)
     np.testing.assert_array_equal(lm, om)
-
-    for bad in (path, path + "__model", path + "/nested"):
-        with pytest.raises(ValueError, match="overlaps the"):
-            similarity.compact_pca_index(spark, path, bad)
 
 
 def test_pca_stored_norm_column_used(spark, tmp_path):
@@ -331,7 +329,8 @@ def test_pca_stored_norm_column_used(spark, tmp_path):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     path = str(tmp_path / "pca_n")
     comps, mean = similarity.build_pca_index(emb, path, pca_dim=32)
-    assert "__n" in spark.read.parquet(path).columns
+    rows = os.path.join(tableops.current_dir(path), "rows")
+    assert "__n" in spark.read.parquet(rows).columns
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

@@ -265,14 +265,16 @@ def test_compaction_lease_excludes_second_writer(spark, tmp_path):
     import json
     import time as _time
 
-    import feature_store_healthcare_spark.stores as _stores
+    from feature_store_healthcare_spark import tableops
     from feature_store_healthcare_spark.stores import (
-        LeaseHeldError,
-        acquire_compaction_lease,
         compact_bucketed,
         read_table,
-        release_compaction_lease,
         write_bucketed,
+    )
+    from feature_store_healthcare_spark.tableops import (
+        LeaseHeldError,
+        acquire_compaction_lease,
+        release_compaction_lease,
     )
 
     df = spark.range(100).selectExpr("id", "id % 10 as k")
@@ -322,7 +324,7 @@ def test_compaction_lease_excludes_second_writer(spark, tmp_path):
         # simulated crash: the fd closes (process death) without a
         # release — the kernel drops the lock, the marker file remains,
         # and the next compactor takes over at once
-        fd3, _ = _stores._LEASE_FDS.pop(lease3)
+        fd3, _ = tableops._LEASE_FDS.pop(lease3)
         os.close(fd3)
         assert os.path.exists(lease3)
         old3 = compact_bucketed(spark, "lease_b", str(tmp_path / "lease_v4"))
@@ -836,7 +838,7 @@ def test_compaction_lease_across_real_processes(tmp_path):
     import subprocess
     import sys as _sys
 
-    from feature_store_healthcare_spark.stores import (
+    from feature_store_healthcare_spark.tableops import (
         acquire_compaction_lease,
         release_compaction_lease,
     )
@@ -850,7 +852,7 @@ def test_compaction_lease_across_real_processes(tmp_path):
         code = (
             "import sys\n"
             f"sys.path.insert(0, {repo!r})\n"
-            "from feature_store_healthcare_spark.stores import ("
+            "from feature_store_healthcare_spark.tableops import ("
             "acquire_compaction_lease, LeaseHeldError)\n"
             "try:\n"
             f"    acquire_compaction_lease({target!r}, owner='other-proc')\n"

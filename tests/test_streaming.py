@@ -10,11 +10,13 @@ while the offline append keeps every row.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feature_store_healthcare_spark import tableops
 from feature_store_healthcare_spark.operators.pit import latest_per_key
 from feature_store_healthcare_spark.stores import AppendStore, LatestStore
 from feature_store_healthcare_spark.streaming import pipeline as sp
@@ -644,12 +646,13 @@ def test_streaming_dsir_dist_maintenance_matches_batch_build(spark, tmp_path):
 
     # replay with the same txn_id from a fresh checkpoint: every batch
     # skipped, the folded statistics unchanged
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    counts = tableops.current_dir(path)
+    before = sorted(map(tuple, spark.read.parquet(counts).collect()))
     writer2 = sp.streaming_dsir_dist_maintenance(
         stream, path, "text", tgt, txn_id="dsir1"
     )
     _run_available_now(writer2, tmp_path, "dsir_s_replay")
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert sorted(map(tuple, spark.read.parquet(counts).collect())) == before
 
     # marker scope is required, exactly as for the other index maintainers
     with pytest.raises(ValueError, match="txn_id"):
@@ -779,9 +782,13 @@ def test_streaming_ivf_maintenance_matches_batch_build(spark, tmp_path):
 
     # one-shot: assign the FULL corpus under the original centroids
     full_path = str(tmp_path / "ivf_full")
-    similarity.ivf_assign(
-        spark.createDataFrame(vecs, schema), cents
-    ).write.mode("overwrite").partitionBy("__list").parquet(full_path)
+    oneshot_rows = similarity.ivf_assign(spark.createDataFrame(vecs, schema), cents)
+    tableops.write_version(
+        full_path,
+        lambda v: oneshot_rows.write.partitionBy("__list").parquet(
+            os.path.join(v, "rows")
+        ),
+    )
     q = spark.createDataFrame(vecs[:3], schema).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -797,10 +804,11 @@ def test_streaming_ivf_maintenance_matches_batch_build(spark, tmp_path):
     )
 
     # replay: fresh checkpoint, same txn_id → nothing re-appended
-    n_before = spark.read.parquet(path).count()
+    rows = os.path.join(tableops.current_dir(path), "rows")
+    n_before = spark.read.parquet(rows).count()
     writer2 = sp.streaming_ivf_maintenance(stream, path, txn_id="vloadA")
     _run_available_now(writer2, tmp_path, "ivf_s_replay")
-    assert spark.read.parquet(path).count() == n_before
+    assert spark.read.parquet(rows).count() == n_before
 
     with pytest.raises(ValueError, match="txn_id"):
         sp.streaming_ivf_maintenance(stream, path)
@@ -844,11 +852,13 @@ def test_streaming_pca_maintenance_matches_batch_build(spark, tmp_path):
 
     # one-shot: project the FULL corpus under the ORIGINAL model
     full_path = str(tmp_path / "pca_full")
-    similarity.pca_project(
+    oneshot_rows = similarity.pca_project(
         spark.createDataFrame(vecs, schema), comps, mean, out_col="__p"
-    ).select(
-        F.col("vec_id").alias("__cid"), "__p", "embedding"
-    ).write.mode("overwrite").parquet(full_path)
+    ).select(F.col("vec_id").alias("__cid"), "__p", "embedding")
+    tableops.write_version(
+        full_path,
+        lambda v: oneshot_rows.write.parquet(os.path.join(v, "rows")),
+    )
     q = spark.createDataFrame(vecs[:3], schema).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -866,10 +876,11 @@ def test_streaming_pca_maintenance_matches_batch_build(spark, tmp_path):
     )
 
     # replay: fresh checkpoint, same txn_id → nothing re-appended
-    n_before = spark.read.parquet(path).count()
+    rows = os.path.join(tableops.current_dir(path), "rows")
+    n_before = spark.read.parquet(rows).count()
     writer2 = sp.streaming_pca_maintenance(stream, path, txn_id="ploadA")
     _run_available_now(writer2, tmp_path, "pca_s_replay")
-    assert spark.read.parquet(path).count() == n_before
+    assert spark.read.parquet(rows).count() == n_before
 
     with pytest.raises(ValueError, match="txn_id"):
         sp.streaming_pca_maintenance(stream, path)
@@ -885,11 +896,9 @@ def test_marker_path_uses_full_digest(tmp_path):
     txn_ids; the write path is no longer the weak half."""
     import hashlib
 
-    from feature_store_healthcare_spark.streaming import pipeline as sp_mod
-
     base = str(tmp_path / "idx")
-    p_a = sp_mod._marker_path(base, "txnA")
-    p_b = sp_mod._marker_path(base, "txnB")
+    p_a = tableops.marker_path(base, "txnA")
+    p_b = tableops.marker_path(base, "txnB")
     assert p_a != p_b
     assert p_a.endswith(hashlib.md5(b"txnA").hexdigest())
     assert len(p_a.rsplit(".", 1)[1]) == 32
@@ -961,9 +970,6 @@ def test_streaming_marker_truncated_digest_migration(spark, tmp_path):
     and a foreign txn's colliding truncated marker is ignored."""
     import hashlib
     import json as _json
-    import os
-
-    from feature_store_healthcare_spark.streaming import pipeline as sp_mod
 
     path = str(tmp_path / "idx_trunc")
     # round-8-style marker: txn "T" already applied batch 3
@@ -973,12 +979,12 @@ def test_streaming_marker_truncated_digest_migration(spark, tmp_path):
 
     applied: list[int] = []
     batch = spark.range(1)
-    fb = sp_mod._idempotent_foreach_batch(path, "T", lambda df: applied.append(1))
+    fb = tableops.idempotent_commit(path, "T", lambda df: applied.append(1))
     fb(batch, 3)  # replay of the truncated marker's high-water mark
     assert applied == [], "batch 3 must be skipped via the truncated marker"
     fb(batch, 4)  # fresh batch applies and moves the mark to the new path
     assert applied == [1]
-    assert os.path.exists(sp_mod._marker_path(path, "T"))
+    assert os.path.exists(tableops.marker_path(path, "T"))
     fb(batch, 4)  # now guarded by the full-digest marker
     assert applied == [1]
 
@@ -987,7 +993,7 @@ def test_streaming_marker_truncated_digest_migration(spark, tmp_path):
     # the content txn_id re-check rejects it and U's batch 0 applies
     with open(f"{path}__applied.{hashlib.md5(b'U').hexdigest()[:12]}", "w") as fh:
         _json.dump({"txn_id": "T", "batch_id": 9}, fh)
-    fb_u = sp_mod._idempotent_foreach_batch(path, "U", lambda df: applied.append(2))
+    fb_u = tableops.idempotent_commit(path, "U", lambda df: applied.append(2))
     fb_u(batch, 0)
     assert applied == [1, 2]
 
@@ -1062,20 +1068,19 @@ def test_state_swap_crash_recovery(spark, tmp_path):
     """A fold that died between 'move state aside' and 'move tmp in'
     leaves only the .old directory; the next fold must restore it rather
     than silently reinitializing from one batch."""
-    import os
     import shutil
 
     state = str(tmp_path / "swap_state")
     df = spark.range(5).selectExpr("id", "id * 2 as v")
-    sp._swap_state_dir(df, state)
+    tableops.swap_state_dir(df, state)
     before = sorted(map(tuple, spark.read.parquet(state).collect()))
     shutil.move(state, state + ".old")  # the crash window
     assert not os.path.exists(state)
-    sp._recover_state_swap(state)
+    tableops.recover_state_swap(state)
     assert sorted(map(tuple, spark.read.parquet(state).collect())) == before
     # and a marker written inside the dir survives the swap + is readable
-    sp._swap_state_dir(df, state, {"txn_id": "t", "batch_id": 7})
-    got = sp._read_batch_marker(os.path.join(state, "_applied.json"))
+    tableops.swap_state_dir(df, state, {"txn_id": "t", "batch_id": 7})
+    got = tableops.read_batch_marker(os.path.join(state, "_applied.json"))
     assert got == {"txn_id": "t", "batch_id": 7}
     # parquet readers ignore the underscore-prefixed marker file
     assert spark.read.parquet(state).count() == 5
@@ -1086,7 +1091,7 @@ def test_torn_marker_reads_as_missing(tmp_path):
     replay window), not a permanent JSONDecodeError on every batch."""
     p = str(tmp_path / "marker.json")
     open(p, "w").close()  # torn: exists but empty
-    assert sp._read_batch_marker(p) is None
+    assert tableops.read_batch_marker(p) is None
 
 
 def test_streaming_media_stats_maintenance_matches_batch_decode(spark, tmp_path):

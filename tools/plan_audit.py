@@ -173,8 +173,8 @@ def main() -> None:
         "  count AND bytes) also defeats Spark's own persisted-plan semantics;",
         "  such pipelines call the `release_*` hooks between batches.",
     ]
-    # Preserve the measured scale-rehearsal section (and anything after it):
-    # that content comes from tools/scale_rehearsal.py runs, not this audit.
+    # Preserve the "## Measured" sections verbatim: with SCALE_REHEARSAL.json
+    # they are the frozen r15 scale-rehearsal record, not output of this audit.
     preserved = ""
     if out_md.exists():
         old = out_md.read_text()
