@@ -16,7 +16,7 @@ schedule.  At 100 TB:
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

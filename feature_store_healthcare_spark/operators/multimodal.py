@@ -38,7 +38,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

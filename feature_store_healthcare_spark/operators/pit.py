@@ -32,21 +32,28 @@ Scale design (100 TB):
 - The ``window`` strategy (row_number over partitionBy keys) shuffles and
   sorts the full input; it is kept for cases needing top-N>1 or where the
   whole winning row (arbitrary width) must survive.
-- ``point_in_time_join`` is one equi-join on the entity key (AQE picks
-  broadcast when either side is small, and splits skewed entity keys)
-  followed by the max_by aggregate — one shuffle total, versus the
-  reference's nested loops.
+- ``point_in_time_join``, ``point_in_time_pivot`` and
+  ``trailing_window_agg`` share one plan (:func:`_asof`): an equi-join on
+  the entity key (AQE picks broadcast when either side is small, and
+  splits skewed entity keys) and one aggregate on (join keys + spine key),
+  versus the reference's nested loops.  ``plans.count_exchanges`` reports
+  2 for the catalog's ``pit_training_join`` (and for the two-feature pivot
+  ``pit_multi_feature_fused``): with both sides shuffled on the entity
+  key, one exchange per side and none for the aggregate; with the value
+  side broadcast, the broadcast (which the count's pattern also matches)
+  and one hash exchange for the aggregate.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 from datetime import datetime
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from feature_store_healthcare_spark.sqlgen import ident
+from feature_store_healthcare_spark.sqlgen import ident, string_lit
 
 
 def as_of_filter(
@@ -182,6 +189,102 @@ def latest_per_key(
     )
 
 
+_SPINE_ID = "__spine_id"
+
+
+def _as(name: str, alias: str) -> str:
+    return f"{ident(name)} AS {ident(alias)}"
+
+
+def _bound(spine_ts: str, delta: str | Column, later: bool) -> str | Column:
+    """``__v_ts >= spine_ts - delta`` (``later``: ``__v_ts <= spine_ts +
+    delta``) as SQL text, or as a Column when the caller passed ``delta``
+    (a tolerance or window) as one."""
+    if isinstance(delta, str):
+        cmp, sign = ("<=", "+") if later else (">=", "-")
+        return f"`__v_ts` {cmp} {ident(spine_ts)} {sign} ({delta})"
+    sts = F.col(ident(spine_ts))
+    return F.col("__v_ts") <= sts + delta if later else F.col("__v_ts") >= sts - delta
+
+
+def _time_preds(
+    direction: str, spine_ts: str, tolerance: str | Column | None
+) -> list[str | Column]:
+    """The time predicate of a ``direction`` as-of join; ``tolerance``
+    bounds staleness backward, lookahead forward, and both for nearest."""
+    preds: list[str | Column] = []
+    if direction != "nearest":
+        cmp = "<=" if direction == "backward" else ">="
+        preds.append(f"`__v_ts` {cmp} {ident(spine_ts)}")
+    if tolerance is not None and direction != "forward":
+        preds.append(_bound(spine_ts, tolerance, later=False))
+    if tolerance is not None and direction != "backward":
+        preds.append(_bound(spine_ts, tolerance, later=True))
+    return preds
+
+
+def _tie_order(values: DataFrame, tiebreak: Sequence[str], payload: Sequence[str]) -> list[str]:
+    """The argmax order after the time key, as projected value-side names:
+    ``*tiebreak``, then the orderable ``payload`` columns in SORTED-NAME
+    order (the contract of :func:`latest_per_key`: a full ``(ts,
+    *tiebreak)`` tie picks the same row whatever the input order)."""
+    fallback = [c for c in sorted(payload) if _is_orderable(values.schema[c].dataType)]
+    return [*[ident(f"__v_tb_{c}") for c in tiebreak], *[ident(f"__v_{c}") for c in fallback]]
+
+
+def _asof(
+    spine: DataFrame,
+    values: DataFrame,
+    on: Sequence[str],
+    value_ts: str,
+    payload: Sequence[str],
+    preds: Sequence[str | Column],
+    aggs: Sequence[str | Column],
+    spine_keys: Sequence[str] | None,
+    outputs: Sequence[str] | None = None,
+) -> DataFrame:
+    """The as-of plan of :func:`point_in_time_join`,
+    :func:`point_in_time_pivot` and :func:`trailing_window_agg`: key the
+    spine (a synthetic ``__spine_id`` without ``spine_keys``); rename the
+    value side's ``on`` and ``value_ts`` to ``__v_{key}``/``__v_ts`` next
+    to the ``payload`` items; left-join on the keys and ``preds``; group on
+    (join keys + spine key), carrying the other spine columns with
+    ``first`` (functionally dependent on the key — exact) ahead of
+    ``aggs``; project the spine columns and ``outputs`` (``None``: the
+    aggregate's own columns) without the synthetic key.  The join keys
+    lead the grouping though the spine key alone is unique: a superset of
+    the join's hash keys reuses the join's partitioning, so the aggregate
+    adds NO exchange.
+
+    String items are SQL text over :func:`sqlgen.ident`-quoted names, one
+    py4j round trip each where the Column API pays several per name;
+    Column items (a caller's aggregates, tolerance or window) pass through.
+    """
+    cols = spine.columns
+    synthetic = spine_keys is None
+    if synthetic:
+        spine = spine.selectExpr("*", f"monotonically_increasing_id() AS {_SPINE_ID}")
+        spine_keys = [_SPINE_ID]
+    v = values.selectExpr(
+        *[_as(c, f"__v_{c}") for c in on], _as(value_ts, "__v_ts"), *payload
+    )
+    conds = [f"{ident(c)} = {ident(f'__v_{c}')}" for c in on] + list(preds)
+    if all(isinstance(c, str) for c in conds):
+        cond = F.expr(" AND ".join(conds))
+    else:
+        cond = reduce(lambda a, b: a & b, [F.expr(c) if isinstance(c, str) else c for c in conds])
+    joined = spine.join(v, on=cond, how="left")
+    keys = [c for c in on if c in cols]
+    keys += [c for c in spine_keys if c not in keys]
+    carry = [f"first({ident(c)}) AS {ident(c)}" for c in cols if c not in keys]
+    out = joined.groupBy(*[joined[ident(k)] for k in keys]).agg(
+        *[F.expr(a) if isinstance(a, str) else a for a in (*carry, *aggs)]
+    )
+    if outputs is not None:
+        return out.selectExpr(*[ident(c) for c in cols], *outputs)
+    return out.drop(_SPINE_ID) if synthetic else out
+
+
 def point_in_time_join(
     spine: DataFrame,
     values: DataFrame,
@@ -205,9 +308,8 @@ def point_in_time_join(
     ``{col}{ts_suffix}`` companion carrying the value's observation time
     (feature_server.py:397-398).
 
-    ``spine_keys``: columns that uniquely identify a spine row.  When None, a
-    synthetic unique id is derived (monotonically_increasing_id), the
-    aggregate groups on it, and it is dropped on output.
+    ``spine_keys``: columns that uniquely identify a spine row.  When None,
+    a synthetic unique id keys the aggregate and is dropped on output.
 
     ``tolerance``: optional maximum staleness (interval SQL string or
     Column).  When set, only values with ``value_ts >= spine_ts -
@@ -226,21 +328,16 @@ def point_in_time_join(
     the spine instant, then most extreme tiebreak away from it"; nearest
     ties between an earlier and a later value at equal distance prefer the
     earlier (leak-averse, matching pandas), then the direction's own rule.
-    ``tolerance`` bounds staleness backward and lookahead forward; for
-    ``nearest`` it is REQUIRED and bounds both sides — without it the join
-    would have no time predicate at all (every value row a candidate: a
-    full per-entity cross product at scale).
+    When ``(ts, *tiebreak)`` fully ties, the orderable value columns break
+    the tie in sorted-name order (max payload backward, min forward and
+    nearest).  ``tolerance`` bounds staleness backward and lookahead
+    forward; for ``nearest`` it is REQUIRED and bounds both sides — without
+    it the join would have no time predicate at all (every value row a
+    candidate: a full per-entity cross product at scale).
 
-    Plan shape: equi-join on ``on`` → range predicate → max_by aggregate on
-    (join keys + spine key).  The join keys are PREPENDED to the aggregate
-    grouping even though the spine key alone is unique: grouping on a
-    superset that includes the join's hash keys lets the aggregate reuse
-    the join's output partitioning (HashPartitioning(on) satisfies
-    ClusteredDistribution(on + spine_keys)), so the argmax runs with NO
-    second exchange — the whole operator is ONE shuffle per side for the
-    join (zero when both sides are pre-bucketed on ``on``,
-    stores.write_bucketed).  AQE broadcast/skew still applies to the join
-    itself.
+    Plan (:func:`_asof`): one ``max_by``/``min_by`` aggregate over the
+    equi-join; no shuffle at all when both sides are pre-bucketed on
+    ``on`` (stores.write_bucketed).
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
@@ -255,82 +352,33 @@ def point_in_time_join(
     value_cols = list(value_cols) if value_cols is not None else [
         c for c in values.columns if c not in on and c != value_ts and c not in tiebreak
     ]
-
-    drop_key = False
-    if spine_keys is None:
-        spine = spine.withColumn("__spine_id", F.monotonically_increasing_id())
-        spine_keys = ["__spine_id"]
-        drop_key = True
-    spine_keys = list(spine_keys)
-
-    v = values.select(
-        *[F.col(c).alias(f"__v_{c}") for c in on],
-        F.col(value_ts).alias("__v_ts"),
-        *[F.col(c).alias(f"__v_tb_{c}") for c in tiebreak],
-        *[F.col(c).alias(f"__v_{c}") for c in value_cols],
-    )
-
-    join_cond = [spine[c] == v[f"__v_{c}"] for c in on]
-    if direction == "backward":
-        join_cond.append(v["__v_ts"] <= spine[spine_ts])
-    elif direction == "forward":
-        join_cond.append(v["__v_ts"] >= spine[spine_ts])
-    if tolerance is not None:
-        tol = F.expr(tolerance) if isinstance(tolerance, str) else tolerance
-        if direction != "forward":
-            join_cond.append(v["__v_ts"] >= spine[spine_ts] - tol)
-        if direction != "backward":
-            join_cond.append(v["__v_ts"] <= spine[spine_ts] + tol)
-    joined = spine.join(v, on=join_cond, how="left")
-
-    group_cols = [c for c in spine.columns]  # spine columns all survive
-    tb_cols = [F.col(f"__v_tb_{c}") for c in tiebreak]
-    # Same determinism contract as latest_per_key: when (ts, *tiebreak)
-    # fully ties, the orderable value columns break the tie in SORTED-NAME
-    # order (max payload for backward/max_by, min for forward/nearest/
-    # min_by — each direction's extreme, but always the SAME row for the
-    # same input, independent of physical column order).
-    fb_cols = [
-        F.col(f"__v_{c}")
-        for c in sorted(value_cols)
-        if _is_orderable(values.schema[c].dataType)
-    ]
+    tie = _tie_order(values, tiebreak, value_cols)
     if direction == "nearest":
-        us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-        dist = F.abs(us(F.col("__v_ts")) - us(F.col(spine_ts)))
-        is_forward = (F.col("__v_ts") > F.col(spine_ts)).cast("int")
-        # equal distance → prefer the earlier value (leak-averse, pandas
-        # parity), then the smallest tiebreak
-        argpick, ordering = F.min_by, F.struct(dist, is_forward, *tb_cols, *fb_cols)
+        # distance, then the earlier value (leak-averse, pandas parity)
+        sts = ident(spine_ts)
+        dist = f"unix_micros(CAST(`__v_ts` AS TIMESTAMP)) - unix_micros(CAST({sts} AS TIMESTAMP))"
+        pick, order = "min_by", [f"abs({dist})", f"CAST(`__v_ts` > {sts} AS INT)", *tie]
     else:
-        argpick = F.max_by if direction == "backward" else F.min_by
-        ordering = F.struct(F.col("__v_ts"), *tb_cols, *fb_cols)
-    payload = argpick(
-        F.struct(
-            F.col("__v_ts"),
-            *[F.col(f"__v_{c}") for c in value_cols],
-        ),
-        ordering,
-    ).alias("__pit")
-    # Group by (join keys + unique spine key) — the extra keys don't split
-    # any group (the spine key is already unique) but make the grouping a
-    # superset of the join's hash keys, so the shuffle the join already
-    # paid is reused and the aggregate adds none.  Remaining spine columns
-    # ride along with `first` (functionally dependent on the key — exact).
-    agg_keys = [c for c in on if c in spine.columns]
-    agg_keys += [c for c in spine_keys if c not in agg_keys]
-    carry = [c for c in group_cols if c not in agg_keys]
-    agged = joined.groupBy(*agg_keys).agg(
-        *[F.first(F.col(c)).alias(c) for c in carry], payload
+        pick = "max_by" if direction == "backward" else "min_by"
+        order = ["`__v_ts`", *tie]
+    fields = ", ".join(["`__v_ts`", *[ident(f"__v_{c}") for c in value_cols]])
+    outputs = [
+        out
+        for c in value_cols
+        for out in (f"`__pit`.{ident(f'__v_{c}')} AS {ident(c)}",
+                    f"`__pit`.`__v_ts` AS {ident(c + ts_suffix)}")
+    ]
+    return _asof(
+        spine, values, on, value_ts,
+        payload=[
+            *[_as(c, f"__v_tb_{c}") for c in tiebreak],
+            *[_as(c, f"__v_{c}") for c in value_cols],
+        ],
+        preds=_time_preds(direction, spine_ts, tolerance),
+        aggs=[f"{pick}(struct({fields}), struct({', '.join(order)})) AS `__pit`"],
+        spine_keys=spine_keys,
+        outputs=outputs,
     )
-    out_cols = [F.col(c) for c in group_cols if c != "__spine_id"]
-    for c in value_cols:
-        out_cols.append(F.col(f"__pit.__v_{c}").alias(c))
-        out_cols.append(F.col("__pit.__v_ts").alias(f"{c}{ts_suffix}"))
-    out = agged.select(*out_cols)
-    if drop_key and "__spine_id" in out.columns:
-        out = out.drop("__spine_id")
-    return out
 
 
 def trailing_window_agg(
@@ -361,51 +409,24 @@ def trailing_window_agg(
     which keep their original names; the match count is always emitted as
     ``count_alias``.  Internally the join keys and ``value_ts`` are
     prefixed to avoid collisions, so value payload columns must not shadow
-    spine columns.
+    spine columns.  Output: the grouping keys, the other spine columns,
+    ``count_alias``, then ``aggs``.
 
-    Plan shape: one equi-join shuffle on the entity key (the range
-    conjuncts evaluate post-probe in codegen); the count/agg groups on
-    (join keys + spine key) so it reuses the join's partitioning and adds
-    NO second exchange (same trick as :func:`point_in_time_join`).
-    Per-key pair blowup is bounded by values
-    per entity inside the window; at 100 TB the standard mitigation is a
-    two-level plan — pre-aggregate values into aligned time buckets first,
-    then window-join the buckets — trading exactness of unaligned edges;
-    this operator keeps the exact semantics and relies on AQE skew
-    splitting for hot entities.
+    Plan (:func:`_asof`): the range conjuncts evaluate post-probe in
+    codegen.  Per-key pair blowup is bounded by values per entity inside
+    the window; at 100 TB the standard mitigation is a two-level plan —
+    pre-aggregate values into aligned time buckets first, then window-join
+    the buckets — trading exactness of unaligned edges; this operator keeps
+    the exact semantics and relies on AQE skew splitting for hot entities.
     """
     on = [on] if isinstance(on, str) else list(on)
-    win = F.expr(window) if isinstance(window, str) else window
-
-    drop_key = False
-    if spine_keys is None:
-        spine = spine.withColumn("__spine_id", F.monotonically_increasing_id())
-        spine_keys = ["__spine_id"]
-        drop_key = True
-    spine_keys = list(spine_keys)
-
-    payload = [c for c in values.columns if c not in on and c != value_ts]
-    v = values.select(
-        *[F.col(c).alias(f"__w_{c}") for c in on],
-        F.col(value_ts).alias("__w_ts"),
-        *[F.col(c) for c in payload],
+    return _asof(
+        spine, values, on, value_ts,
+        payload=[ident(c) for c in values.columns if c not in on and c != value_ts],
+        preds=[_bound(spine_ts, window, later=False), f"`__v_ts` < {ident(spine_ts)}"],
+        aggs=[f"count(`__v_ts`) AS {ident(count_alias)}", *aggs],
+        spine_keys=spine_keys,
     )
-    cond = [spine[c] == v[f"__w_{c}"] for c in on]
-    cond.append(v["__w_ts"] >= spine[spine_ts] - win)
-    cond.append(v["__w_ts"] < spine[spine_ts])
-    joined = spine.join(v, on=cond, how="left")
-
-    agg_keys = [c for c in on if c in spine.columns]
-    agg_keys += [c for c in spine_keys if c not in agg_keys]
-    carry = [c for c in spine.columns if c not in agg_keys]
-    out = joined.groupBy(*agg_keys).agg(
-        *[F.first(F.col(c)).alias(c) for c in carry],
-        F.count(F.col("__w_ts")).alias(count_alias),
-        *aggs,
-    )
-    if drop_key:
-        out = out.drop("__spine_id")
-    return out
 
 
 def intervalize(
@@ -432,7 +453,7 @@ def intervalize(
     Scale: this is the amortization trade for as-of reads — one window
     shuffle at materialization time, then every subsequent point-in-time
     query is a single containment equi-join with NO per-query argmax
-    aggregate (compare :func:`point_in_time_join`'s 2 shuffles per query).
+    aggregate (compare :func:`point_in_time_join`, module docstring).
     Partition the materialized table by the entity key for co-located
     probes.
     """
@@ -598,8 +619,9 @@ def point_in_time_pivot(
     tolerance: str | Column | None = None,
 ) -> DataFrame:
     """OP-16 + OP-12 fused: leak-free as-of join of MANY features in ONE
-    pass (feature_server.py:355-408 loops features; the per-feature
-    composition costs 2 shuffles per feature — this costs 2 total).
+    pass (feature_server.py:355-408 loops features; composing
+    :func:`point_in_time_join` per feature costs one join and aggregate
+    per feature — this is one join and one aggregate in total).
 
     ``values`` is the long EAV table; ``name_col`` discriminates features;
     ``slot_for`` maps feature name → its typed value column (the
@@ -607,7 +629,10 @@ def point_in_time_pivot(
     feature, the newest eligible value is taken with a conditional
     ``max_by`` — the ordering key is NULL for other features' rows, which
     ``max_by`` ignores, so one hash aggregate resolves every feature at
-    once.  Output: spine columns + one typed column per feature + its
+    once.  The ordering is :func:`point_in_time_join`'s: ``(ts,
+    *tiebreak)``, then the orderable slots in sorted-name order, so a full
+    tie picks the same value as the join whatever the input order.
+    Output: spine columns + one typed column per feature + its
     ``{name}{ts_suffix}`` companion.
 
     ``tolerance``: optional maximum staleness, as in
@@ -616,51 +641,27 @@ def point_in_time_pivot(
     """
     on = [on] if isinstance(on, str) else list(on)
     names = list(slot_for)
-
-    drop_key = False
-    if spine_keys is None:
-        spine = spine.withColumn("__spine_id", F.monotonically_increasing_id())
-        spine_keys = ["__spine_id"]
-        drop_key = True
-    spine_keys = list(spine_keys)
-
-    slots_needed = sorted(set(slot_for.values()))
-    v = values.where(F.col(name_col).isin(names)).select(
-        *[F.col(c).alias(f"__v_{c}") for c in on],
-        F.col(name_col).alias("__v_name"),
-        F.col(value_ts).alias("__v_ts"),
-        *[F.col(c).alias(f"__v_tb_{c}") for c in tiebreak],
-        *[F.col(s).alias(f"__v_{s}") for s in slots_needed],
-    )
-    join_cond = [spine[c] == v[f"__v_{c}"] for c in on]
-    join_cond.append(v["__v_ts"] <= spine[spine_ts])
-    if tolerance is not None:
-        tol = F.expr(tolerance) if isinstance(tolerance, str) else tolerance
-        join_cond.append(v["__v_ts"] >= spine[spine_ts] - tol)
-    joined = spine.join(v, on=join_cond, how="left")
-
-    aggs = []
+    slots = sorted(set(slot_for.values()))
+    order = ", ".join(["`__v_ts`", *_tie_order(values, tiebreak, slots)])
+    aggs, outputs = [], []
     for name in names:
-        slot = slot_for[name]
-        is_mine = F.col("__v_name") == name
-        ordering = F.when(
-            is_mine, F.struct(F.col("__v_ts"), *[F.col(f"__v_tb_{c}") for c in tiebreak])
-        )  # NULL for other features → ignored by max_by
-        payload = F.struct(F.col(f"__v_{slot}").alias("v"), F.col("__v_ts").alias("t"))
-        aggs.append(F.max_by(payload, ordering).alias(f"__pit_{name}"))
-    # group on (join keys + spine pk) so the aggregate reuses the join's
-    # hash partitioning — no second exchange (see point_in_time_join)
-    agg_keys = [c for c in on if c in spine.columns]
-    agg_keys += [c for c in spine_keys if c not in agg_keys]
-    carry = [c for c in spine.columns if c not in agg_keys]
-    agged = joined.groupBy(*agg_keys).agg(
-        *[F.first(F.col(c)).alias(c) for c in carry], *aggs
+        pit = ident(f"__pit_{name}")
+        # NULL ordering for other features' rows → ignored by max_by
+        aggs.append(
+            f"max_by(struct({ident(f'__v_{slot_for[name]}')} AS v, `__v_ts` AS t), "
+            f"CASE WHEN `__v_name` = {string_lit(name)} THEN struct({order}) END) AS {pit}"
+        )
+        outputs += [f"{pit}.v AS {ident(name)}", f"{pit}.t AS {ident(name + ts_suffix)}"]
+    named = values.where(f"{ident(name_col)} IN ({', '.join(map(string_lit, names))})")
+    return _asof(
+        spine, named, on, value_ts,
+        payload=[
+            _as(name_col, "__v_name"),
+            *[_as(c, f"__v_tb_{c}") for c in tiebreak],
+            *[_as(s, f"__v_{s}") for s in slots],
+        ],
+        preds=_time_preds("backward", spine_ts, tolerance),
+        aggs=aggs,
+        spine_keys=spine_keys,
+        outputs=outputs,
     )
-    out_cols = [F.col(c) for c in spine.columns if c != "__spine_id"]
-    for name in names:
-        out_cols.append(F.col(f"__pit_{name}.v").alias(name))
-        out_cols.append(F.col(f"__pit_{name}.t").alias(f"{name}{ts_suffix}"))
-    out = agged.select(*out_cols)
-    if drop_key and "__spine_id" in out.columns:
-        out = out.drop("__spine_id")
-    return out

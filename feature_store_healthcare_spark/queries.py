@@ -2461,11 +2461,8 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pit_multi_feature_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-16+OP-12 fused (point_in_time_pivot): ALL features resolved in
     ONE join + ONE aggregate — per purchase, the user's latest click AND
-    view values as of the purchase's own timestamp.  2 shuffles total
-    however many features; the reference loops features×spine×values.
-    Event timestamps are µs-unique per user in this data, so ts alone is
-    the (deterministic) ordering; the operator's tiebreak parameter covers
-    data where it is not."""
+    view values as of the purchase's own timestamp, however many features;
+    the reference loops features×spine×values."""
     ev = load_table(spark, sf_dir, "events")
     spine = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"

@@ -15,8 +15,8 @@ Re-expresses /root/reference/src/serving/feature_server.py as Spark plans:
   shared with the registry (system of record, bitemporal).
 - get_point_in_time_features (ref :355-408, O(spine×values×features)
   loops) → ONE set-oriented plan for ALL requested features:
-  operators.pit.point_in_time_pivot (join + multi-feature conditional
-  max_by — 2 shuffles total, independent of feature count), wide output
+  operators.pit.point_in_time_pivot (one join + one multi-feature
+  conditional max_by, independent of feature count), wide output
   with {name}__timestamp companions (OP-16 + OP-12 fused).
 - LRU cache + TTL (ref :136-176) → driver-side LRU over assembled
   vectors (request-level concern, not a data-plane operator).
@@ -40,13 +40,13 @@ from feature_store_healthcare_spark import functions as fx
 from feature_store_healthcare_spark.operators.pit import (
     interpolated_asof,
     latest_per_key,
-    point_in_time_join,
     point_in_time_pivot,
 )
 from feature_store_healthcare_spark.registry import (
     SLOT_FOR,
     FeatureRegistry,
 )
+from feature_store_healthcare_spark.sqlgen import string_lit
 
 
 def _utcnow() -> datetime:
@@ -367,7 +367,6 @@ class FeatureServer:
             spine = spine.withColumn(
                 timestamp_column, F.col(timestamp_column).cast("timestamp_ntz")
             )
-        spine = spine.withColumn("__row_id", F.monotonically_increasing_id())
         features = {
             f.name: f for f in self.registry.list_features() if f.name in feature_names
         }
@@ -375,10 +374,9 @@ class FeatureServer:
         out = spine
         if known:
             # ONE join + ONE multi-feature argmax for ALL requested features
-            # (2 shuffles total, vs 2 per feature in the reference's loop)
-            vals = values.where(
-                F.col("feature_id").isin([features[n].feature_id for n in known])
-            )
+            # (vs a scan per feature in the reference's loop)
+            ids = ", ".join(string_lit(features[n].feature_id) for n in known)
+            vals = values.where(f"feature_id IN ({ids})")
             if entity_column != "entity_id":
                 vals = vals.withColumnRenamed("entity_id", entity_column)
             out = point_in_time_pivot(
@@ -390,7 +388,6 @@ class FeatureServer:
                 name_col="feature_name",
                 slot_for={n: SLOT_FOR[features[n].schema.value_type] for n in known},
                 tiebreak=["created_timestamp", "seq"],
-                spine_keys=["__row_id"],
                 tolerance=tolerance,
             )
         for name in feature_names:
@@ -398,7 +395,7 @@ class FeatureServer:
                 out = out.withColumn(name, F.lit(None)).withColumn(
                     f"{name}__timestamp", F.lit(None).cast("timestamp_ntz")
                 )
-        return out.drop("__row_id")
+        return out
 
     def get_interpolated_features(
         self,

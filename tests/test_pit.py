@@ -196,6 +196,29 @@ def test_point_in_time_pivot_mixed_types_and_bounded_shuffles(spark):
     assert len(rows) == 3
 
 
+def test_point_in_time_pivot_full_tie_matches_join(spark):
+    """On a full ``(ts, *tiebreak)`` tie the pivot picks the join's winner
+    (the max orderable payload), whatever order the rows arrive in."""
+    from feature_store_healthcare_spark.operators.pit import point_in_time_pivot
+
+    rows = [("e1", "score", float(n), ts("2024-01-01 00:00:00")) for n in range(8)]
+    spine = spark.createDataFrame(
+        [(1, "e1", ts("2024-01-02 00:00:00"))], "row_id long, entity_id string, as_of timestamp_ntz"
+    )
+    schema = "entity_id string, feature_name string, value_double double, event_timestamp timestamp_ntz"
+    for order in (rows, rows[::-1], rows[1::2] + rows[::2], rows[4:] + rows[:4]):
+        values = spark.createDataFrame(order, schema).repartition(4)
+        pivot = point_in_time_pivot(
+            spine, values, on="entity_id", spine_ts="as_of", value_ts="event_timestamp",
+            name_col="feature_name", slot_for={"score": "value_double"}, spine_keys=["row_id"],
+        ).collect()
+        join = point_in_time_join(
+            spine, values, on="entity_id", spine_ts="as_of", value_ts="event_timestamp",
+            value_cols=["value_double"], spine_keys=["row_id"],
+        ).collect()
+        assert pivot[0].score == join[0].value_double == 7.0
+
+
 def test_trailing_window_agg_boundaries(spark):
     from feature_store_healthcare_spark.operators.pit import trailing_window_agg
 
