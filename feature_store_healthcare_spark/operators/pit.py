@@ -36,12 +36,13 @@ Scale design (100 TB):
   ``trailing_window_agg`` share one plan (:func:`_asof`): an equi-join on
   the entity key (AQE picks broadcast when either side is small, and
   splits skewed entity keys) and one aggregate on (join keys + spine key),
-  versus the reference's nested loops.  ``plans.count_exchanges`` reports
-  2 for the catalog's ``pit_training_join`` (and for the two-feature pivot
-  ``pit_multi_feature_fused``): with both sides shuffled on the entity
-  key, one exchange per side and none for the aggregate; with the value
-  side broadcast, the broadcast (which the count's pattern also matches)
-  and one hash exchange for the aggregate.
+  versus the reference's nested loops.  With both sides shuffled on the
+  entity key, that is one shuffle exchange per side and none for the
+  aggregate; with the value side broadcast, one shuffle exchange for the
+  aggregate.  ``plans.count_exchanges``, which counts shuffles only,
+  reports 1 for the catalog's ``pit_training_join`` and for the
+  two-feature pivot ``pit_multi_feature_fused`` at sf0.01, where the value
+  side broadcasts.
 """
 
 from __future__ import annotations

@@ -35,8 +35,15 @@ def count_exchanges(df: DataFrame) -> int:
     """Shuffle exchanges in the plan (excludes broadcast exchanges).
     Every one is a full materialization barrier at scale — fewer is better,
     and a known count is a regression tripwire."""
-    plan = _effective_plan(df)
-    return len(re.findall(r"Exchange (?:hash|range|rangepartitioning|RoundRobin|SinglePartition)", plan, re.I))
+    return len(_SHUFFLE_EXCHANGE.findall(_effective_plan(df)))
+
+
+#: a shuffle exchange's node name: ``\b`` keeps ``BroadcastExchange
+#: HashedRelationBroadcastMode`` (whose mode the case-blind ``hash`` also
+#: matches) out of the count
+_SHUFFLE_EXCHANGE = re.compile(
+    r"\bExchange (?:hash|range|rangepartitioning|RoundRobin|SinglePartition)", re.I
+)
 
 
 def count_broadcast_joins(df: DataFrame) -> int:

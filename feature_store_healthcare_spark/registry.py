@@ -113,6 +113,9 @@ VALUES_SCHEMA = T.StructType(
 )
 
 
+#: position of ``seq`` in a buffered VALUES_SCHEMA tuple
+_SEQ_AT = VALUES_SCHEMA.fieldNames().index("seq")
+
 #: the on-disk log row, VALUES_SCHEMA plus its ``event_date`` partition
 #: column, as ONE ``selectExpr`` (~21 py4j commands; a ``select`` of 15
 #: names plus ``withColumn`` sent ~90)
@@ -685,6 +688,19 @@ class FeatureRegistry:
         the version they built from; :meth:`flush` only moves rows from
         the buffer to disk, so it leaves the version alone."""
         return self._version
+
+    def buffered_since(self, seq: int) -> tuple[int, list[tuple]]:
+        """The current :attr:`values_version` and the buffered rows whose
+        ``seq`` is above ``seq``, oldest first, read under one lock.  A
+        reader that holds state as of some version and ``seq`` mark can
+        apply these rows when their count equals the version delta; a bulk
+        ingest, or a :meth:`flush` that moved such rows to disk, leaves the
+        count short."""
+        with self._lock:
+            i = len(self._buffer)  # rows are appended in seq order
+            while i and self._buffer[i - 1][_SEQ_AT] > seq:
+                i -= 1
+            return self._version, self._buffer[i:]
 
     def flush(self) -> None:
         """Persist buffered driver-side rows (append-only blind write)."""

@@ -6,9 +6,11 @@ Re-expresses /root/reference/src/serving/feature_server.py as Spark plans:
 - Online store (ref :203 ``dict[store_key → {...}]``) → a driver-resident
   view ``entity_id → feature_id → latest row``.  One Spark query
   (latest_per_key over the value log, fetched as Arrow) builds it at the
-  first read after the log changes; every other LRU miss is a dict lookup
-  (OP-3), inside the reference's 100 ms online SLA (ref :105).  The first
-  read after a write pays the rebuild.  The latest table must fit in
+  first read and after a bulk ingest; rows appended one at a time
+  (write_features, ingest_feature_value) are folded into it in Python at
+  the next read, by latest_per_key's own order, so a read-your-write runs
+  no Spark job and every LRU miss is a dict lookup (OP-3), inside the
+  reference's 100 ms online SLA (ref :105).  The latest table must fit in
   driver memory; larger tables are exported to a KV table instead
   (stores.export_online_kv / kv_point_get).
 - Offline store (ref :204 append-only list) → append-only long table
@@ -27,7 +29,7 @@ Re-expresses /root/reference/src/serving/feature_server.py as Spark plans:
 from __future__ import annotations
 
 import time
-from collections import OrderedDict
+from collections import OrderedDict, deque
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from enum import Enum
@@ -44,6 +46,7 @@ from feature_store_healthcare_spark.operators.pit import (
 )
 from feature_store_healthcare_spark.registry import (
     SLOT_FOR,
+    VALUES_SCHEMA,
     FeatureRegistry,
 )
 from feature_store_healthcare_spark.sqlgen import string_lit
@@ -171,6 +174,9 @@ class _LRUCache:
         for k in stale:
             del self._data[k]
 
+    def clear(self) -> None:
+        self._data.clear()
+
 
 class FeatureServer:
     """Online/offline serving over a FeatureRegistry's value store."""
@@ -180,19 +186,26 @@ class FeatureServer:
         self.spark = registry.spark
         self.config = config or ServingConfig()
         self._cache = _LRUCache(self.config.cache_max_size, self.config.cache_ttl_seconds)
-        #: (registry values_version it was built from, online index)
-        self._view: tuple[int, _OnlineIndex] | None = None
-        self._latencies: list[float] = []
+        #: (registry values_version it reflects, highest buffered seq it
+        #: has folded, online index)
+        self._view: tuple[int, int, _OnlineIndex] | None = None
+        #: the last 1000 request latencies (ref :485-487)
+        self._latencies: deque[float] = deque(maxlen=1000)
         self._requests = 0
         self._stale_served = 0
 
     # -- online path (ref :206-288, OP-3) --------------------------------
 
-    #: the columns an online row needs: the key, the event time and every
-    #: value slot (the slot a feature reads depends on its declared type)
-    _VIEW_COLUMNS = ["entity_id", "feature_id", "event_timestamp"] + sorted(
-        set(SLOT_FOR.values())
-    )
+    #: the columns an online row needs: the key, latest_per_key's order
+    #: (event time, created time, seq) and every value slot (the slot a
+    #: feature reads depends on its declared type)
+    _VIEW_COLUMNS = [
+        "entity_id", "feature_id", "event_timestamp", "created_timestamp", "seq"
+    ] + sorted(set(SLOT_FOR.values()))
+    #: where each view column sits in a buffered VALUES_SCHEMA tuple
+    _BUFFER_AT = [VALUES_SCHEMA.fieldNames().index(c) for c in _VIEW_COLUMNS]
+    _ENTITY_TYPE_AT = VALUES_SCHEMA.fieldNames().index("entity_type")
+    _SEQ_AT = VALUES_SCHEMA.fieldNames().index("seq")
 
     def _online_latest(self) -> DataFrame:
         """Latest-value row per (feature, entity), as a plan over the
@@ -206,19 +219,66 @@ class FeatureServer:
 
     def _online_view(self) -> _OnlineIndex:
         """The online store (ref :203): ``entity_id → feature_id → row``
-        in driver memory.  Built by one Spark query at the first read after
-        the value log changed (the registry's ``values_version``), so an
-        LRU miss is a dict lookup.  The whole latest table must fit in
-        driver memory; larger tables go through stores.export_online_kv."""
+        in driver memory, brought up to the registry's ``values_version``.
+        Rows buffered since the view's ``seq`` mark are folded in when
+        their count accounts for every append since its version; otherwise
+        (a bulk ingest, a flush of unfolded rows, or a tie only Spark's
+        order can settle) one Spark query rebuilds it.  The whole latest
+        table must fit in driver memory; larger tables go through
+        stores.export_online_kv."""
         view = self._view
-        version = self.registry.values_version
-        if view is not None and view[0] == version:
-            return view[1]
+        mark = -1
+        if view is not None:
+            version, mark, index = view
+            if version == self.registry.values_version:
+                return index
+            now, rows = self.registry.buffered_since(mark)
+            if now - version == len(rows) and self._fold(index, rows):
+                self._view = (now, rows[-1][self._SEQ_AT] if rows else mark, index)
+                return index
+            self._view = None  # a fold may have stopped half-way
+        return self._rebuild(mark)
+
+    def _fold(self, index: _OnlineIndex, rows: list[tuple]) -> bool:
+        """Fold buffered VALUES_SCHEMA rows into ``index`` by latest_per_key's
+        order, ``(event_timestamp, created_timestamp, seq)``, and drop the
+        LRU entries of each entity whose row changed.  False (the caller
+        rebuilds) on a ``None`` in either order or on a full order tie with
+        a different row: Spark settles those by its payload order."""
+        touched = set()
+        for t in rows:
+            row = {c: t[i] for c, i in zip(self._VIEW_COLUMNS, self._BUFFER_AT)}
+            latest = index.setdefault(row["entity_id"], {})
+            held = latest.get(row["feature_id"])
+            if held is not None:
+                new = (row["event_timestamp"], row["created_timestamp"], row["seq"])
+                old = (held["event_timestamp"], held["created_timestamp"], held["seq"])
+                if None in new or None in old:
+                    return False
+                if new < old or row == held:
+                    continue
+                if new == old:
+                    return False
+            latest[row["feature_id"]] = row
+            touched.add(f"{t[self._ENTITY_TYPE_AT]}:{row['entity_id']}:")
+        for prefix in touched:
+            self._cache.invalidate_entity(prefix)
+        return True
+
+    def _rebuild(self, mark: int) -> _OnlineIndex:
+        """Build the view with one Spark query and clear the LRU.  The
+        version and ``seq`` mark are read before the query, so a row
+        appended meanwhile is folded again later, where an identical row is
+        a no-op."""
+        version, rows = self.registry.buffered_since(mark)
+        if rows:
+            mark = rows[-1][self._SEQ_AT]
         index: _OnlineIndex = {}
         table = self._online_latest().select(*self._VIEW_COLUMNS).toArrow()
         for row in table.to_pylist():
             index.setdefault(row["entity_id"], {})[row["feature_id"]] = row
-        self._view = (version, index)
+        self._cache.clear()
+        self._view = (version, mark, index)
         return index
 
     def invalidate_online_cache(self) -> None:
@@ -242,15 +302,22 @@ class FeatureServer:
         user_id: str | None = None,
         user_roles: list[str] | None = None,
     ) -> FeatureVector:
-        """Ref :206-288: PHI access check → LRU probe → online-view lookup
-        → freshness classification → null-fill for missing names.
+        """Ref :206-288: online-view sync → PHI access check → LRU probe →
+        online-view lookup → freshness classification → null-fill for
+        missing names.
 
-        The LRU holds vectors without regard to the caller, so the access
-        check runs on every request: a PHI feature the caller's roles do
-        not cover is nulled (and audited as ``access_denied``), on a hit
-        as well as on a miss, as in FeatureRegistry.get_feature_vector."""
+        The view is synced first, and a sync drops the LRU entries of the
+        entities whose rows changed, so a hit never serves a value older
+        than the view.  The LRU holds vectors without regard to the
+        caller, so the access check runs on every request: a PHI feature
+        the caller's roles do not cover is nulled (and audited as
+        ``access_denied``), on a hit as well as on a miss, as in
+        FeatureRegistry.get_feature_vector.  With the registry's
+        ``audit_all_access`` on, each granted feature is audited as
+        ``access``, as FeatureRegistry.get_feature_value does."""
         t0 = time.monotonic()
         self._requests += 1
+        view = self._online_view()
         by_name = {
             f.name: f
             for f in self.registry.list_features(entity_type=entity_type)
@@ -262,6 +329,11 @@ class FeatureServer:
                 self.registry._check_access(feature, user_id, user_roles)
             except PermissionError:
                 denied.append(name)
+            else:
+                if self.registry.audit_all_access:
+                    self.registry._log_access(
+                        feature.feature_id, str(entity_id), user_id, "access"
+                    )
         key = self._cache_key(entity_type, entity_id, feature_names)
         cached = self._cache.get(key)
         if cached is not None:
@@ -269,10 +341,10 @@ class FeatureServer:
             vec.cache_hit = True
             vec.latency_ms = (time.monotonic() - t0) * 1000
             vec.retrieved_at = _utcnow()
-            self._record_latency(vec.latency_ms)
+            self._latencies.append(vec.latency_ms)
             return vec
 
-        found = self._online_view().get(str(entity_id), {}) if by_name else {}
+        found = view.get(str(entity_id), {})
         now = _utcnow()
         features: dict[str, Any] = {}
         timestamps: dict[str, datetime | None] = {}
@@ -318,7 +390,7 @@ class FeatureServer:
         )
         vec = _withhold(vec, denied)
         vec.latency_ms = (time.monotonic() - t0) * 1000
-        self._record_latency(vec.latency_ms)
+        self._latencies.append(vec.latency_ms)
         return vec
 
     # -- offline path (ref :290-353, OP-17) -------------------------------
@@ -459,25 +531,19 @@ class FeatureServer:
         features: dict[str, Any],
         timestamp: datetime | None = None,
     ) -> None:
-        """Dual write: append to the offline (long) store via the registry
-        and drop the entity's LRU entries (ref :410-455).  The append bumps
-        the registry's ``values_version``, so the next read re-derives the
-        online view from the system of record — online/offline consistency
-        by construction."""
+        """Dual write (ref :410-455): append to the offline (long) store
+        via the registry.  The next read folds the appended rows into the
+        online view, with no Spark job, and drops the entity's LRU entries
+        (ref :449); the rows it folds are the system of record's rows —
+        online/offline consistency by construction."""
         ts = timestamp or _utcnow()
         for name, value in features.items():
             feature = self.registry.get_feature_by_name(name, entity_type=entity_type)
             self.registry.ingest_feature_value(
                 feature.feature_id, entity_id, value, event_timestamp=ts
             )
-        self._cache.invalidate_entity(f"{entity_type}:{entity_id}:")
 
     # -- metrics (ref :111-133, :481-493, OP-22..25) -----------------------
-
-    def _record_latency(self, ms: float) -> None:
-        self._latencies.append(ms)
-        if len(self._latencies) > 1000:  # last-1000 window (ref :485-487)
-            self._latencies = self._latencies[-1000:]
 
     def get_metrics(self) -> dict[str, Any]:
         lat = sorted(self._latencies)
@@ -499,7 +565,7 @@ class FeatureServer:
         the cache hit/miss tallies."""
         self._requests = 0
         self._stale_served = 0
-        self._latencies = []
+        self._latencies.clear()
         self._cache.hits = 0
         self._cache.misses = 0
 

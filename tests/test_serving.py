@@ -84,7 +84,7 @@ def _values_rows(spark, rows):
 @pytest.mark.parametrize("path", ["ingest_feature_value", "ingest_values_df"])
 def test_online_read_sees_direct_ingest(spark, tmp_path, path):
     """An ingest that bypasses write_features still reaches the next online
-    read that misses the LRU."""
+    read, whether it misses the LRU or re-reads a cached feature list."""
     registry = FeatureRegistry(spark, storage_dir=str(tmp_path))
     for name in ("age", "bp"):
         registry.register_feature(
@@ -110,9 +110,12 @@ def test_online_read_sees_direct_ingest(spark, tmp_path, path):
                 "created_timestamp": utcnow(), "seq": 10**6,
             }])
         )
+    same = server.get_online_features("p1", "patient", ["age"])
+    assert same.cache_hit is False and same.features == {"age": 41}
     vec = server.get_online_features("p1", "patient", ["age", "bp"])
     assert vec.cache_hit is False
     assert vec.features == {"age": 41, "bp": None}
+    assert server.get_online_features("p1", "patient", ["age"]).cache_hit is True
     assert registry.get_feature_value(fid, "p1") == 41
 
 
@@ -172,6 +175,41 @@ def test_online_read_withholds_phi_on_lru_hit(phi_server):
     assert first.features["hba1c"] == 6.9
     again = phi_server.get_online_features("p1", "patient", names, user_roles=["clinician"])
     assert again.cache_hit is True and again.features["hba1c"] == 6.9
+
+
+def test_online_reads_audit_granted_features(phi_server):
+    """With ``audit_all_access`` on, every online read, hit or miss, logs
+    one ``access`` entry per granted feature, in get_feature_value's shape;
+    a withheld feature logs ``access_denied`` instead, an unknown one
+    nothing."""
+    registry = phi_server.registry
+    fid = {n: registry.get_feature_by_name(n).feature_id for n in ("age", "hba1c")}
+
+    def access():
+        return [
+            (r["feature_id"], r["entity_id"], r["user_id"])
+            for r in registry._access_log
+            if r["action"] == "access"
+        ]
+
+    names = ["age", "hba1c", "missing"]
+    miss = phi_server.get_online_features("p1", "patient", names, user_id="u1")
+    hit = phi_server.get_online_features("p1", "patient", names, user_id="u1")
+    assert (miss.cache_hit, hit.cache_hit) == (False, True)
+    assert access() == [(fid["age"], "p1", "u1")] * 2
+    assert len(_denials(phi_server)) == 2
+    phi_server.get_online_features("p1", "patient", names, user_id="u2", user_roles=["clinician"])
+    assert access()[2:] == [(fid["age"], "p1", "u2"), (fid["hba1c"], "p1", "u2")]
+    registry.get_feature_value(fid["age"], "p1", user_id="u2")
+    online, offline = registry._access_log[-3], registry._access_log[-1]
+    assert online.keys() == offline.keys()
+    assert {k: v for k, v in online.items() if k != "ts"} == {
+        k: v for k, v in offline.items() if k != "ts"
+    }
+    registry.audit_all_access = False
+    before = len(registry._access_log)
+    phi_server.get_online_features("p1", "patient", ["age"], user_id="u1")
+    assert len(registry._access_log) == before
 
 
 _TYPED_VALUES = {

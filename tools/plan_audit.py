@@ -65,9 +65,11 @@ def main() -> None:
         "",
         "Reading the table:",
         "",
-        "- **shuffles** — `Exchange hash/range/…` count. Each is a full",
+        "- **shuffles** — `Exchange hash/range/…` count (`plans.count_exchanges`;",
+        "  broadcast exchanges are not counted). Each is a full",
         "  materialization barrier at scale; the design target is the minimum",
-        "  the semantics allow (PIT join = 2, latest-per-key = 1, scan-agg = 1,",
+        "  the semantics allow (PIT join = 2 with both sides shuffled, 1 with",
+        "  the value side broadcast; latest-per-key = 1, scan-agg = 1,",
         "  pure filter/project = 0).",
         "- **bcast / smj** — broadcast-hash vs sort-merge join counts. Dimension",
         "  tables (region, nation, customer, supplier, part, registry) must",
