@@ -74,6 +74,20 @@ def normalize_text(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
+def ngram_sql(tokens: str, n: int) -> str:
+    """SQL text of the word n-grams (stride 1, joined by a space) of the
+    token-array column named ``tokens``; fewer than ``n`` tokens yield
+    one short n-gram.  The lambda reads ``tokens`` as a column, so
+    project the tokens first and reference them at least twice (this
+    text does, through ``size``): a tokenizer inside the lambda would run
+    once per n-gram (``operators.text`` module docstring)."""
+    toks, i, n = ident(tokens), var("i"), int(n)
+    return (
+        f"transform(sequence(0, greatest(size({toks}) - {n}, 0)), "
+        f"{i} -> array_join(slice({toks}, {i} + 1, {n}), {string_lit(' ')}))"
+    )
+
+
 def shingles(
     df: DataFrame,
     id_col: str,
@@ -100,11 +114,8 @@ def shingles(
     # NULL shingle per NULL-text doc, all with the IDENTICAL degenerate
     # band key — k such docs become O(k²) mutual LSH candidates.  The
     # Arrow kernel also emits nothing for NULL text (family parity).
-    toks, i = ident("__sg_tokens"), var("i")
     ngrams = F.expr(
-        f"CASE WHEN {toks} IS NOT NULL THEN "
-        f"transform(sequence(0, greatest(size({toks}) - {int(n)}, 0)), "
-        f"{i} -> array_join(slice({toks}, {i} + 1, {int(n)}), {string_lit(' ')})) END"
+        f"CASE WHEN `__sg_tokens` IS NOT NULL THEN {ngram_sql('__sg_tokens', n)} END"
     )
     arr = F.array_distinct(ngrams) if distinct else ngrams
     id_c = F.col(id_col)
@@ -1423,16 +1434,14 @@ def span_duplicates(
     the shingle paths; nothing else shuffles.  Output: (span_hash,
     n_docs, n_occurrences), cross-document spans only.
     """
-    toks = F.split(normalize_text(text_col), " ")
-    spans = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - span_tokens, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i + 1, span_tokens), " "),
-    )
-    long = df.select(F.col(id_col), F.explode(spans).alias("span"))
+    id_c = ident(id_col)
+    long = df.select(
+        df[id_c], F.split(normalize_text(df[ident(text_col)]), " ").alias("__sg_tokens")
+    ).selectExpr(id_c, f"explode({ngram_sql('__sg_tokens', span_tokens)}) AS span")
     return (
         long.groupBy(F.md5("span").alias("span_hash"))
         .agg(
-            F.countDistinct(F.col(id_col)).alias("n_docs"),
+            F.countDistinct(long[id_c]).alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
         )
         .where(F.col("n_docs") >= 2)

@@ -3,8 +3,20 @@ BASELINE.json:6).
 
 Language ID (stopword-hit heuristic), quality scoring, token counting
 (whitespace + a BPE-ish regex estimate), and document fingerprinting —
-each as pure built-in column expressions so they run inside whole-stage
-codegen over arbitrarily large corpora.
+each as built-in column expressions (no Python UDF) over arbitrarily
+large corpora.
+
+Tokenize first, once per document.  Higher-order functions
+(``transform``, ``aggregate``, ``filter``) are interpreted, not
+generated: Spark evaluates a lambda body once per array element and
+hoists nothing out of it, so a tokenizer captured in a lambda
+re-tokenizes the whole document per element.  Project the tokens into a
+column first, and reference that column at least twice in the next
+projection: Catalyst's ``CollapseProject`` folds a column referenced only
+once back into its consumer, lambda included.  Where a lambda would
+reference the tokens just once, use a lambda-free array function instead
+(``stopword_hits``).  ``tests/test_plans.py::test_no_tokenizer_inside_lambda``
+holds the text queries to this.
 """
 
 from __future__ import annotations
@@ -13,8 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from feature_store_healthcare_spark.caching import release_local_checkpoint
-from feature_store_healthcare_spark.operators.dedup import normalize_text
-from feature_store_healthcare_spark.sqlgen import ident, string_lit, var
+from feature_store_healthcare_spark.operators.dedup import ngram_sql, normalize_text
+from feature_store_healthcare_spark.sqlgen import double_lit, ident, string_lit, var
 
 # Tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -63,10 +75,11 @@ def bpe_ish_token_estimate(text: Column | str) -> Column:
 
 
 def stopword_hits(text: Column | str, words: list[str]) -> Column:
-    """Number of the given stopwords present (set semantics) in the text."""
-    toks = F.array_distinct(F.split(normalize_text(text), " "))
-    hits = F.filter(F.array(*[F.lit(w) for w in words]), lambda w: F.array_contains(toks, w))
-    return F.size(hits)
+    """Number of the given stopwords present (set semantics) in the text:
+    a word listed twice counts once; NULL text has 0 hits."""
+    toks = F.coalesce(F.split(normalize_text(text), " "), F.array().cast("array<string>"))
+    listed = F.array(*[F.lit(w) for w in dict.fromkeys(words)])
+    return F.size(F.array_intersect(listed, toks))
 
 
 def lang_id(text: Column | str, stopwords: dict[str, list[str]] | None = None) -> Column:
@@ -101,11 +114,11 @@ def quality_features(
     The score prefers mid-length documents with plausible word shape — the
     standard cheap pre-filter in LLM data pipelines.
     """
-    c = F.col(text_col)
+    c = df[ident(text_col)]
     n_tokens = token_count(c).alias("n_tokens")
     n_chars = F.length(c).alias("n_chars_measured")
     out = df.select(
-        F.col(id_col),
+        df[ident(id_col)],
         n_tokens,
         n_chars,
         (F.length(F.regexp_replace(c, r"\s", "")) / token_count(c))
@@ -152,73 +165,63 @@ def repetition_features(
     Deterministic: the top bigram breaks count ties by the
     lexicographically greatest bigram.  The whole operator is in-row
     array expressions — the bigram mode is found by sorting the per-doc
-    bigram array and scanning runs with one ``F.aggregate`` lambda, so
-    the plan is a single zero-shuffle projection inside whole-stage
-    codegen (the explode → groupBy → argmax-join formulation shuffles
-    every bigram of every document twice; this shuffles nothing).
+    bigram array and scanning runs with one ``aggregate`` lambda, so
+    nothing shuffles (the explode → groupBy → argmax-join formulation
+    shuffles every bigram of every document twice).  Tokens, bigrams and
+    the scan result are each projected once and referenced at least
+    twice downstream, so none is folded back into a lambda (module
+    docstring).
     """
-    toks = F.split(normalize_text(text_col), " ")
-    # Same bigram construction as dedup.shingles(n=2): docs shorter than
-    # 2 tokens yield a single (short) shingle — kept, as in the oracle.
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - 2, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i + 1, 2), " "),
-    )
-    zero = F.lit(0).cast("bigint")
+    id_c = ident(id_col)
+    toks, bigrams, top = ident("__sg_tokens"), ident("__sg_bigrams"), ident("__sg_top")
+    acc, x = var("acc"), var("x")
     # prev seeds NULL (typed) so no real bigram — including the empty-string
     # bigram of an empty/whitespace-only doc — can ever equal the seed; the
-    # first element always takes the run=1 branch (NULL == x is NULL→false).
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        zero.alias("run"),
-        zero.alias("best_cnt"),
-        F.lit("").alias("best"),
+    # first element always takes the run=1 branch (NULL = x is NULL→false).
+    # best seeds NULL too: the bigram array is never empty, so the first
+    # element always replaces it, and the seed's type must admit the NULL
+    # bigram of a NULL-text doc once the struct is projected.
+    run2 = f"CASE WHEN {x} = {acc}.prev THEN {acc}.run + 1 ELSE CAST(1 AS BIGINT) END"
+    better = (
+        f"(({run2}) > {acc}.best_cnt OR "
+        f"(({run2}) = {acc}.best_cnt AND {x} > {acc}.best))"
     )
-
-    def merge(acc, x):
-        run2 = F.when(x == acc["prev"], acc["run"] + F.lit(1)).otherwise(
-            F.lit(1).cast("bigint")
-        )
-        better = (run2 > acc["best_cnt"]) | (
-            (run2 == acc["best_cnt"]) & (x > acc["best"])
-        )
-        return F.struct(
-            x.alias("prev"),
-            run2.alias("run"),
-            F.when(better, run2).otherwise(acc["best_cnt"]).alias("best_cnt"),
-            F.when(better, x).otherwise(acc["best"]).alias("best"),
-        )
-
-    top = F.aggregate(F.array_sort(bigrams), acc0, merge)
+    scan_sql = (
+        f"aggregate(array_sort({bigrams}), "
+        "named_struct('prev', CAST(NULL AS STRING), 'run', CAST(0 AS BIGINT), "
+        "'best_cnt', CAST(0 AS BIGINT), 'best', CAST(NULL AS STRING)), "
+        f"({acc}, {x}) -> named_struct('prev', {x}, 'run', {run2}, "
+        f"'best_cnt', CASE WHEN {better} THEN {run2} ELSE {acc}.best_cnt END, "
+        f"'best', CASE WHEN {better} THEN {x} ELSE {acc}.best END))"
+    )
+    dup = "(`n_tokens` - `n_distinct_tokens`) / `n_tokens`"
+    frac = f"{top}.best_cnt / size({bigrams})"
     return (
         df.select(
-            F.col(id_col),
-            F.size(toks).alias("n_tokens"),
-            F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-            top["best"].alias("top_bigram"),
-            top["best_cnt"].alias("top_bigram_count"),
-            (top["best_cnt"] / F.size(bigrams)).alias("top_bigram_frac"),
+            df[id_c], F.split(normalize_text(df[ident(text_col)]), " ").alias("__sg_tokens")
         )
-        .withColumn(
-            "dup_token_frac",
-            (F.col("n_tokens") - F.col("n_distinct_tokens")) / F.col("n_tokens"),
+        .selectExpr(
+            id_c,
+            f"size({toks}) AS `n_tokens`",
+            f"size(array_distinct({toks})) AS `n_distinct_tokens`",
+            # dedup.shingles' bigrams: a doc shorter than 2 tokens yields
+            # one short bigram — kept, as in the oracle
+            f"{ngram_sql('__sg_tokens', 2)} AS {bigrams}",
         )
-        .select(
-            id_col,
-            "n_tokens",
-            "n_distinct_tokens",
-            "dup_token_frac",
-            "top_bigram",
-            "top_bigram_count",
-            "top_bigram_frac",
+        .selectExpr(
+            id_c, "`n_tokens`", "`n_distinct_tokens`", bigrams, f"{scan_sql} AS {top}"
         )
-        .withColumn(
-            "is_repetitive",
-            (F.col("dup_token_frac") > dup_token_cut)
-            | (
-                (F.col("n_tokens") >= min_tokens_for_bigram_rule)
-                & (F.col("top_bigram_frac") > top_bigram_cut)
-            ),
+        .selectExpr(
+            id_c,
+            "`n_tokens`",
+            "`n_distinct_tokens`",
+            f"{dup} AS `dup_token_frac`",
+            f"{top}.best AS `top_bigram`",
+            f"{top}.best_cnt AS `top_bigram_count`",
+            f"{frac} AS `top_bigram_frac`",
+            f"{dup} > {double_lit(dup_token_cut)} OR (`n_tokens` >= "
+            f"{int(min_tokens_for_bigram_rule)} AND {frac} > {double_lit(top_bigram_cut)}) "
+            "AS `is_repetitive`",
         )
     )
 

@@ -46,6 +46,27 @@ _SHUFFLE_EXCHANGE = re.compile(
 )
 
 
+def lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string, each
+    up to its balanced closing parenthesis (a nested lambda appears both
+    inside its parent and on its own).  Spark evaluates a lambda body
+    once per array element and hoists nothing out of it, so a whole-row
+    expression found here (a tokenizer, a sort) runs once per element."""
+    bodies = []
+    head = "lambdafunction("
+    start = plan.find(head)
+    while start >= 0:
+        depth, i = 0, start + len(head) - 1
+        while i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            if depth == 0:
+                break
+            i += 1
+        bodies.append(plan[start : i + 1])
+        start = plan.find(head, start + 1)
+    return bodies
+
+
 def count_broadcast_joins(df: DataFrame) -> int:
     return _effective_plan(df).count("BroadcastHashJoin")
 

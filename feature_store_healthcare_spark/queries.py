@@ -3511,8 +3511,9 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     signals — repeated-token fraction and the share of the most frequent
     word bigram (count ties broken by the lexicographically greatest
     bigram on both sides).  Entirely in-row array expressions: the bigram
-    mode is a sorted-array run-length scan (``F.aggregate``), so the plan
-    is one zero-shuffle projection — nothing explodes, nothing joins."""
+    mode is a sorted-array run-length scan (``aggregate``) over tokens
+    projected once per document, so the plan shuffles nothing — nothing
+    explodes, nothing joins."""
     docs = load_table(spark, sf_dir, "documents")
     return text.repetition_features(docs, "doc_id", "text")
 

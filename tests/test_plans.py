@@ -53,6 +53,53 @@ def test_count_exchanges_excludes_broadcasts(monkeypatch):
     assert plans.count_exchanges(None) == 2
 
 
+def test_lambda_bodies_balances_parentheses():
+    """Each ``lambdafunction(...)`` up to its own closing parenthesis; a
+    nested lambda is returned inside its parent and on its own."""
+    plan = (
+        "Project [transform(a#1, lambdafunction(upper(lambda x#2), lambda x#2, false)) AS u#3, "
+        "aggregate(b#4, 0, lambdafunction((lambda acc#5 + size(filter(c#6, "
+        "lambdafunction((lambda y#7 > 1), lambda y#7, false)))), lambda acc#5, "
+        "lambda z#8, false), lambdafunction(lambda id#9, lambda id#9, false)) AS v#10]"
+    )
+    assert plans.lambda_bodies(plan) == [
+        "lambdafunction(upper(lambda x#2), lambda x#2, false)",
+        "lambdafunction((lambda acc#5 + size(filter(c#6, lambdafunction((lambda y#7 > 1), "
+        "lambda y#7, false)))), lambda acc#5, lambda z#8, false)",
+        "lambdafunction((lambda y#7 > 1), lambda y#7, false)",
+        "lambdafunction(lambda id#9, lambda id#9, false)",
+    ]
+    assert plans.lambda_bodies("Project [a#1, split(b#2,  , -1) AS t#3]") == []
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_repetition_signals",
+        "duplicate_span_report",
+        "lang_id_confusion",
+        "text_quality_scores",
+        "corpus_curation_pipeline",
+        "dedup_ngram_jaccard",
+    ],
+)
+def test_no_tokenizer_inside_lambda(spark, sf_dir, qs, name):
+    """A lambda body runs once per array element, so a tokenizer
+    (``split`` of the ``regexp_replace``-normalized text) inside one
+    re-tokenizes the whole document per token, span or stopword.  The
+    optimized plan must tokenize outside every lambda."""
+    key = "spark.sql.debug.maxToStringFields"
+    prior = spark.conf.get(key, "25")
+    spark.conf.set(key, "100000")  # print every field: none may hide a lambda
+    try:
+        plan = qs[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.conf.set(key, prior)
+    bodies = plans.lambda_bodies(plan)
+    bad = [b for b in bodies if "split(" in b or "regexp_replace(" in b]
+    assert not bad, bad
+
+
 def test_q1_single_shuffle(spark, sf_dir, qs):
     # scan → partial agg → ONE exchange → final agg
     assert plans.count_exchanges(qs["q1_pricing_summary"](spark, sf_dir)) == 1

@@ -76,7 +76,12 @@ def main() -> None:
         "  broadcast; an smj against a dim table is a regression. smj > 0 is",
         "  correct only for fact-fact joins (orders⋈lineitem at 100 TB).",
         "- **pushdown** — at least one parquet scan carries PushedFilters.",
-        "  Queries with no selective predicate legitimately show `—`.",
+        "  Queries with no selective predicate legitimately show `—`. So do the",
+        "  `dedup.shingles` consumers (`bigram_lm_fluency`, `dedup_minhash_lsh`,",
+        "  `dedup_minhash_lsh_shuffled`, `dedup_ngram_jaccard`): shingles drops",
+        "  NULL text with a `CASE WHEN` on the projected tokens, not a `where`",
+        "  on the text, so no `IsNotNull(text)` reaches the documents scan (the",
+        "  rows are the same; the scan reads the NULL-text rows too).",
         "- **scan cols** — min–max columns in scans' ReadSchema: column-pruning",
         "  evidence (documents/events scans stay narrow even though the tables",
         "  are wide).",
