@@ -4,14 +4,14 @@ Feature.retention_days=2555 at feature_registry.py:136 — declared but never
 enforced in the reference).
 
 Both jobs are plain batch plans over the stores, meant to run on a
-schedule.  At 100 TB:
-
-- retention deletes prune whole partitions first (the offline store is
-  partitioned by event_date, so `event_ts < cutoff` is a partition-pruned
-  scan + rewrite of only the boundary partition; on Delta/Iceberg it is a
-  metadata-only `DELETE WHERE`).
-- compaction bounds small-file growth from streaming appends: rewrite only
-  partitions whose file count exceeds a threshold, to a target file size.
+schedule, and both commit as one new version of the store's root
+(``stores.AppendStore.rewrite`` → ``tableops.compact_version``: written
+beside the current version under the compaction lease, then one pointer
+flip), keeping the store's ``partition_by``.  Each rewrites the whole
+log.  At 100 TB a table format narrows that: retention is a
+``DELETE WHERE`` that drops whole ``event_date`` partitions and rewrites
+only the boundary one, and compaction (``OPTIMIZE``) rewrites only the
+partitions whose file count grew past a threshold.
 """
 
 from __future__ import annotations
@@ -91,19 +91,15 @@ def expired_rows(
 
 def apply_retention(store, registry: DataFrame, now: datetime | None = None) -> int:
     """Enforce retention on an AppendStore: rewrite the log without expired
-    rows (on Delta this is `DELETE WHERE`; on plain parquet a rewrite).
-    Returns the number of rows removed."""
+    rows as a new version (:meth:`stores.AppendStore.rewrite`; on Delta
+    this is ``DELETE WHERE``).  Returns the number of rows removed."""
+    now = now or _utcnow()
     current = store.read()
-    keep = retention_filter(current, registry, now=now)
-    removed = current.count() - keep.count()
+    removed = current.count() - retention_filter(current, registry, now=now).count()
     if removed:
-        # two-phase rewrite: write survivors beside the log, then swap
-        tmp = store.path.rstrip("/") + ".retention_tmp"
-        keep.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(store.path)
-        shutil.move(tmp, store.path)
+        store.rewrite(
+            lambda df: retention_filter(df, registry, now=now).select(*df.columns)
+        )
     return removed
 
 
@@ -290,12 +286,10 @@ def finalize_agg_states(
 
 def compact(store, target_partitions: int | None = None) -> None:
     """Compact an AppendStore's small files (streaming appends produce one
-    file per micro-batch) into ``target_partitions`` files."""
-    df = store.read()
-    n = target_partitions or max(df.rdd.getNumPartitions() // 8, 1)
-    tmp = store.path.rstrip("/") + ".compact_tmp"
-    df.coalesce(n).write.mode("overwrite").parquet(tmp)
-    import shutil
+    file per micro-batch) into ``target_partitions`` files, as a new
+    version (:meth:`stores.AppendStore.rewrite`)."""
 
-    shutil.rmtree(store.path)
-    shutil.move(tmp, store.path)
+    def coalesce(df: DataFrame) -> DataFrame:
+        return df.coalesce(target_partitions or max(df.rdd.getNumPartitions() // 8, 1))
+
+    store.rewrite(coalesce)

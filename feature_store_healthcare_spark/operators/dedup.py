@@ -118,12 +118,12 @@ def shingles(
         f"CASE WHEN `__sg_tokens` IS NOT NULL THEN {ngram_sql('__sg_tokens', n)} END"
     )
     arr = F.array_distinct(ngrams) if distinct else ngrams
-    id_c = F.col(id_col)
+    id_c = ident(id_col)
     cols = [id_c]
     if size_col is not None:
         cols.append(F.size(arr).alias(size_col))
-    tokens = F.split(normalize_text(text_col), " ").alias("__sg_tokens")
-    return df.select(id_c, tokens).select(*cols, F.explode(arr).alias("shingle"))
+    tokens = F.split(normalize_text(df[ident(text_col)]), " ").alias("__sg_tokens")
+    return df.select(df[id_c], tokens).select(*cols, F.explode(arr).alias("shingle"))
 
 
 def minhash_signatures(
@@ -172,7 +172,7 @@ def minhash_signatures(
         else:
             elem_sql = f"xxhash64({int(h)}, {shingle})"
         aggs.append(F.expr(f"min({elem_sql})").alias(f"mh_{h}"))
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy(sh[ident(id_col)]).agg(*aggs)
 
 
 def _pipeline_signatures(
@@ -888,7 +888,7 @@ def simhash_signatures(
        produced before the flip; ``portable=True, bits=32`` reproduces the
        old family exactly.
     """
-    tok = F.explode(F.split(normalize_text(text_col), " ")).alias("tok")
+    tok = F.explode(F.split(normalize_text(df[ident(text_col)]), " ")).alias("tok")
     if portable:
         assert bits <= 32, "portable md5 path carries 32 hash bits"
         h = F.conv(F.substring(F.md5(F.col("tok")), 25, 8), 16, 10).cast("long")
@@ -901,21 +901,21 @@ def simhash_signatures(
         bitmask = [
             F.shiftleft(F.lit(1).cast("long"), i) for i in range(bits)
         ]
-    tokens = df.select(F.col(id_col), tok).withColumn("h", h)
+    tokens = df.select(df[ident(id_col)], tok).withColumn("h", h)
     aggs = [
         F.sum(
             F.when(F.col("h").bitwiseAND(bitmask[i]) != 0, 1).otherwise(-1)
         ).alias(f"b{i}")
         for i in range(bits)
     ]
-    sums = tokens.groupBy(id_col).agg(*aggs)
+    sums = tokens.groupBy(tokens[ident(id_col)]).agg(*aggs)
     sig = None
     for i in range(bits):
         # bits are disjoint → OR-assembly (no signed-overflow semantics to
         # reason about at bit 63, unlike arithmetic +)
         bit = F.when(F.col(f"b{i}") > 0, bitmask[i]).otherwise(F.lit(0))
         sig = bit if sig is None else sig.bitwiseOR(bit)
-    return sums.select(F.col(id_col), sig.cast("long").alias("simhash"))
+    return sums.select(sums[ident(id_col)], sig.cast("long").alias("simhash"))
 
 
 def simhash_candidates(
@@ -1432,12 +1432,17 @@ def span_duplicates(
     1, occurrences NOT deduped) → md5 → one partial-aggregatable groupBy
     on the hash-uniform span key.  Rows explode ×tokens/doc exactly like
     the shingle paths; nothing else shuffles.  Output: (span_hash,
-    n_docs, n_occurrences), cross-document spans only.
+    n_docs, n_occurrences), cross-document spans only.  NULL text yields
+    no span (the ``shingles`` guard): unguarded, every NULL-text doc
+    slid to one NULL span and two of them reported a NULL "duplicate".
     """
     id_c = ident(id_col)
+    spans = ngram_sql("__sg_tokens", span_tokens)
     long = df.select(
         df[id_c], F.split(normalize_text(df[ident(text_col)]), " ").alias("__sg_tokens")
-    ).selectExpr(id_c, f"explode({ngram_sql('__sg_tokens', span_tokens)}) AS span")
+    ).selectExpr(
+        id_c, f"explode(CASE WHEN `__sg_tokens` IS NOT NULL THEN {spans} END) AS span"
+    )
     return (
         long.groupBy(F.md5("span").alias("span_hash"))
         .agg(

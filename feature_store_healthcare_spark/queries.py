@@ -83,64 +83,18 @@ _Q20_QTY_CACHE = PlanCache("q20_potential_promotion.qty")
 
 
 #: The correctness driver hard-checks only the FIRST 50 registered queries,
-#: so registration order is part of the verification contract.  This list
-#: pins the first 50 slots to one representative per operator family
-#: (SURVEY.md §2 + the LLM-pipeline extensions) — every family must have at
-#: least one driver-verified green row.  Everything not listed follows in
-#: definition order and is still covered by tools/check_oracle.py locally.
-#:
-#: ROTATION POLICY (the window is hard-capped at 50; ~144 catalog queries
-#: compete for it):
-#: 1. Every operator family below keeps ≥1 slot in the window at all
-#:    times; a family's slot may change WHICH query holds it, but a
-#:    family is never evicted wholesale.
-#: 2. Within a family, the slot goes to the query pinning the STRONGEST
-#:    contract — e.g. round 5 moved the EAV/as-of family's second slot
-#:    from `eav_asof_lookup` (plain as-of filter, a semantics subset of
-#:    the always-pinned `pit_training_join`) to `eav_latest_tie_fallback`
-#:    (the tie-determinism contract NO other query exercises).  A query
-#:    whose semantics are strictly covered by another pinned query is the
-#:    first to rotate out.
-#: 3. A rotated-out query stays registered (tail order) and MUST stay
-#:    green in tools/check_oracle.py at sf0.01 AND sf0.1 each round — the
-#:    local gate runs all catalog entries, so rotation never un-verifies
-#:    anything; it only changes which 50 the driver independently
-#:    re-proves.
-#: 3b. Queries that WRITE catalog tables (the stored-index twins) were
-#:    kept OUT of the window through round 11 because the driver session
-#:    makes no warehouse-writability promise.  Round 12 seated one
-#:    (`hybrid_rrf_ivf_exhaustive`) as a deliberate exception and it went
-#:    green — the driver session DOES write — so round 13 seats the rest
-#:    of the stored retrieval family (the r12 verdict's #1 ask): a failed
-#:    index build turns the row red LOUDLY, which is the failure mode we
-#:    want for the engine's production retrieval shapes.  Their live
-#:    single-pass twins stay tail-green under the same oracles (rule 3).
-#: 4. Family → slots map (r13): relational core 12 (linkage,
-#:    expectations, window + TPC-H hard shapes q2/q7/q8/q9/q10/q14/q17/
-#:    q19/q21); EAV/PIT/feature-store 11 (tie-fallback, PIT join +
-#:    interval + directions, trailing windows, pivot, freshness, ACL,
-#:    consistency, target-enc) + json; time/session/CDC 2;
-#:    dedup 3; chunking/graph/profile 3; similarity+retrieval 5 (IVF
-#:    exactness anchor + the 4 stored twins); text/LM/packing 3 +
-#:    bpe-train; privacy 1; multimodal 3; drift/analysis/sampling 5.
+#: so registration order is part of the verification contract.  This tuple
+#: pins those slots; everything else follows in definition order.
+#: Policy: every operator family keeps at least one slot; within a family
+#: the slot goes to the query pinning the strongest contract, and a query
+#: whose semantics another seated query strictly covers is the first to
+#: rotate out.  A rotated-out query stays registered and must stay green
+#: in tools/check_oracle.py at sf0.01 and sf0.1, so rotation changes only
+#: which 50 the driver re-proves.  Stored-index entries (which write
+#: catalog tables) may hold slots: a failed build turns the row red.  The
+#: per-rotation rationales are in git history.
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # ══ round 13: rotation cycle 2 ═══════════════════════════════════════
-    # VERDICT r12 #1: 72 of 164 catalog queries still never-driver-green;
-    # priority list named explicitly (stored retrieval family, real-codec
-    # audio/video twins, bpe_train_merges, dedup_minhash_lsh_shuffled,
-    # column_profile_stats, feature_drift_ks, TPC-H q2/q7/q8/q9/q21).
-    # This round executes 15 rule-2 swaps — every eviction strictly
-    # covered by a contract that STAYS seated (rationale at each line),
-    # every seat a never-driver-green entry, every evicted query still
-    # check_oracle-green at sf0.01 AND sf0.1 in the tail (rule 3).
-    # r12 rationales are preserved in git history (commit ee6ca6e^).
-    #
-    # relational core: scan/filter/project/join/agg/window/sort/subquery.
-    # The five TPC-H seats are the hardest remaining shapes: q2 (correlated
-    # min-cost subquery re-joining a 4-dim chain), q7 (symmetric cross-
-    # nation pair predicate), q8 (two-nation market share over an 8-table
-    # join), q9 (profit decomposition, LIKE-filtered part), q21 (EXISTS +
-    # NOT EXISTS anti-semi stack).
+    # relational core: joins, windows, TPC-H hard shapes
     "q14_promo_revenue",
     "q10_returned_items",
     "record_linkage_best_match",
@@ -153,137 +107,50 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "q8_market_share",
     "q9_product_type_profit",
     "q21_suppliers_kept_waiting",
-    # feature-store semantics: EAV, PIT, registry, serving, freshness
+    # feature-store semantics: EAV, PIT, freshness, ACL, consistency
     "pit_interpolated_lookup",
     "eav_latest_tie_fallback",
     "pit_training_join",
     "pit_nearest_observation_join",
     "pit_forward_label_join",
     "pit_trailing_window_features",
-    # r13: `training_set_builder` rotates out — it is a pure composition
-    # of three contracts that each stay driver-checked: point_in_time_join
-    # (`pit_training_join`), trailing_window_agg
-    # (`pit_trailing_window_features`), and the md5-range split tag
-    # (`target_encoding_loo`'s fold assignment uses the same
-    # deterministic md5-hex-range CASE).  Stays tail-green + benched.
-    # r13: `resample_daily_ffill` rotates out — calendar-spine LOCF is a
-    # backward as-of lookup over a generated grid (the exact semantics of
-    # the always-seated `pit_training_join`), and the bracket machinery
-    # is pinned HARDER by the seated `pit_interpolated_lookup`
-    # (intervalize + interpolation ⊃ carry-forward).
-    # r13: `null_fill_defaults` rotates out — its plan is latest_per_key
-    # + tiebreak (seated `eav_latest_tie_fallback`) left-joined to a
-    # spine with the SAME freshness CASE as the seated
-    # `freshness_classification`; the COALESCE default is the only novel
-    # cell and every drift/profile grid in the window pins COALESCE(x,0).
     "pit_feature_vector_wide",
     "freshness_classification",
     "acl_filtered_features",
     "online_offline_consistency",
     "target_encoding_loo",
-    # r13: `cardinality_monitoring` rotates out — grouped exact-distinct
-    # monitoring is contained in the incoming `column_profile_stats`
-    # (per-column row/null/DISTINCT/minmax, the wider ANALYZE contract);
-    # grouped count aggregation stays pinned by the seated cube entry.
     "json_extract_events",
-    # time semantics: windows, sessions; CDC changelog materialization
+    # time, sessions and CDC
     "sessionize_events",
     "cdc_apply_changes",
-    # dedup family (exact + near-dup)
+    # dedup (exact + near-dup)
     "dedup_exact_fingerprint",
-    # r13: `dedup_minhash_lsh` → `dedup_minhash_lsh_shuffled`: SAME oracle
-    # (two physical strategies, one semantic — the pit_interval_join
-    # precedent), but the seated entry now drives the shuffled band-key
-    # equi-join, the ONLY strategy that survives when the band table is
-    # #docs × bands ≈ billions of rows.  The broadcast variant stays
-    # tail-green under the identical oracle.
     "dedup_minhash_lsh_shuffled",
     "dedup_incremental_minhash",
-    # r13: `corpus_curation_pipeline` rotates out — a composition of
-    # quality gates (seated `text_stats_by_lang_source`: same
-    # token_count/punct_ratio/digit_ratio projections) and exact dedup
-    # keep-min (seated `dedup_exact_fingerprint`: same md5(normalize)
-    # fingerprint + min-keeper).  Stays tail-green + benched.
+    # grouped aggregation (cube)
     "events_cube_stats",
-    # corpus chunking + profiling + iterative graph
+    # chunking, profiling, iterative graph
     "rag_chunk_documents",
-    # r13: `join_key_skew_profile` rotates out — the operators.profile
-    # family slot moves to `column_profile_stats` (the wider per-column
-    # profiling contract from the same module); skew-profile's
-    # count→top-k tail is pinned by the seated `q10_returned_items`
-    # (agg→TakeOrdered) and its entropy normalization by the seated
-    # drift entry's distribution arithmetic.
     "column_profile_stats",
     "pagerank_supplier_parts",
-    # similarity search + retrieval.  r13 seats the STORED retrieval
-    # family (verdict #1 priority): each has the SAME oracle as its live
-    # twin, so a green row proves build→store→probe ≡ single-pass — the
-    # production shape at 100 TB where indexes amortize across queries.
-    # Rule-3b exception extended from r12's seated IVF anchor (driver
-    # session writes the warehouse; build failure reds the row loudly).
-    # r13: `embedding_topk_bruteforce` rotates out — its exact-cosine
-    # top-k contract rides INSIDE the seated `hybrid_rrf_ivf_exhaustive`
-    # (dense half at nprobe=n_centroids ≡ exhaustive cosine over the same
-    # embeddings, same oracle arithmetic) which additionally pins fusion
-    # + the stored-index path.
+    # similarity + retrieval: IVF exactness anchor, stored twins
     "hybrid_rrf_ivf_exhaustive",
-    # r13: `bm25_lexical_topk` (live) → `bm25_stored_postings`: identical
-    # oracle; the stored entry runs the live scoring arithmetic PLUS
-    # the persisted-postings build/read path.
     "bm25_stored_postings",
-    # r13: `hybrid_rrf_stored` seats the stored exact-fusion twin (same
-    # oracle as the r11-evicted live `hybrid_rrf_retrieval`).
     "hybrid_rrf_stored",
     "perplexity_stored_postings",
-    # r13: `bigram_lm_fluency` (live) → `bigram_lm_stored_postings`:
-    # identical oracle; the stored entry adds the persisted bigram/unigram
-    # count tables the production scorer reads.
     "bigram_lm_stored_postings",
-    # text analysis + LM-based quality + packing
+    # text, LM quality, packing
     "bpe_encode_fertility",
-    # r13: `bpe_train_merges` seats the TRAINER behind the seated encode
-    # entry (verdict priority): 6 rounds of pair-count→argmax→merge vs an
-    # unrolled 6-stage SQL oracle — the iterative-agg contract no other
-    # seated query pins.
     "bpe_train_merges",
     "sequence_packing_report",
-    # r13: `cuped_experiment_analysis` rotates out — its covariance/
-    # variance adjustment arithmetic (theta = cov/var over centered
-    # moments) is pinned by the seated `embedding_covariance_stats`
-    # (the r12 correlation-matrix precedent); grouped means are pinned
-    # window-wide.
-    # r13: `session_cooccurrence_pmi` rotates out — its sessionization IS
-    # the seated `sessionize_events` operator (same resample.sessionize
-    # call), and the log joint/marginal count-ratio algebra is pinned by
-    # the incoming `bigram_lm_stored_postings` (conditional log-prob over
-    # pair + marginal counts) and the seated `dsir_importance_resample`
-    # (log-ratio of smoothed distributions).
-    # r13: `retrieval_self_mrr` rotates out — its ranking windows are
-    # pinned by the seated `window_distribution_ranks` and the underlying
-    # retrieval scoring by the now-4-strong seated stored retrieval
-    # family; the reciprocal-of-argmin projection is scalar arithmetic.
-    # PHI content governance (operators.privacy)
+    # PHI governance
     "phi_scrub_notes",
-    # r13: `retention_sweep` rotates out — its age-vs-cutoff two-class
-    # CASE counts are a strict subset of the seated
-    # `freshness_classification` (three-class age CASE over the same
-    # max(ts)-anchored arithmetic); the DELETE-selection filter semantics
-    # are pinned by the seated ACL gate.
-    # multimodal: r13 seats the real WAV + Y4M codec twins (verdict
-    # priority: fresh r12 code should be driver-visible first) beside the
-    # seated PNG/BMP entry — same mapInPandas kernel-chain shape, audio
-    # adds PCM sample statistics, video adds frame extraction.
+    # multimodal codecs
     "multimodal_real_decode",
     "multimodal_audio_decode",
     "multimodal_video_decode",
-    # feature analysis / drift / sampling
+    # analysis, drift, sampling
     "embedding_covariance_stats",
-    # r13: `feature_drift_psi` → `feature_drift_ks`: the KS entry reuses
-    # PSI's exact bin-grid scaffolding (same operators.drift module, same
-    # smoothed-count grid CTEs) and ADDS per-key cumulative-distribution
-    # windows — the harder contract; PSI's log-ratio-of-smoothed-shares
-    # algebra stays pinned by the seated `dsir_importance_resample` and
-    # the PSI row stays tail-green.
     "feature_drift_ks",
     "robust_outlier_stats",
     "dsir_importance_resample",
@@ -6589,7 +6456,9 @@ def training_serving_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "duplicate_span_report",
     f"""
-    WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents),
+    WITH toks AS (
+      SELECT doc_id, {_TOKENS_SQL} AS t FROM documents WHERE text IS NOT NULL
+    ),
     spans AS (
       SELECT doc_id,
              array_to_string(t[i : i + 11], ' ') AS span

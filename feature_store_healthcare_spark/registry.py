@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 
 from feature_store_healthcare_spark.operators.pit import as_of_filter, latest_per_key
 from feature_store_healthcare_spark.sqlgen import ident
+from feature_store_healthcare_spark.stores import AppendStore
 
 
 def _utcnow() -> datetime:
@@ -122,6 +123,12 @@ _SEQ_AT = VALUES_SCHEMA.fieldNames().index("seq")
 _LOG_ROW = [ident(n) for n in VALUES_SCHEMA.fieldNames()] + [
     "CAST(`event_timestamp` AS DATE) AS `event_date`"
 ]
+
+#: the on-disk log schema (VALUES_SCHEMA + ``event_date``), passed to the
+#: read so it skips footer inference
+_LOG_SCHEMA = T.StructType(
+    list(VALUES_SCHEMA.fields) + [T.StructField("event_date", T.DateType())]
+)
 
 
 class FeatureStatus(str, Enum):
@@ -323,6 +330,9 @@ class FeatureRegistry:
     audit stores; in-memory buffers flush there.  Without it, values live in
     a driver buffer and materialize as DataFrames on read — fine for tests,
     and the code path (append-only long table → pit read) is identical.
+    The on-disk value log is :attr:`log`, a ``stores.AppendStore``
+    partitioned by ``event_date`` (``maintenance.apply_retention`` and
+    ``maintenance.compact`` take it).
     """
 
     def __init__(
@@ -333,6 +343,11 @@ class FeatureRegistry:
     ) -> None:
         self.spark = spark
         self.storage_dir = storage_dir
+        self.log = (
+            AppendStore(spark, f"{storage_dir}/feature_values", ["event_date"])
+            if storage_dir is not None
+            else None
+        )
         self.audit_all_access = audit_all_access
         self._features: dict[str, Feature] = {}
         self._groups: dict[str, FeatureGroup] = {}
@@ -710,28 +725,14 @@ class FeatureRegistry:
         self._buffer.clear()
 
     def _append_log(self, df: DataFrame) -> None:
-        """Blind append of VALUES_SCHEMA-shaped rows to the on-disk log."""
-        (
-            df.selectExpr(*_LOG_ROW)
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(f"{self.storage_dir}/feature_values")
-        )
+        self.log.append(df.selectExpr(*_LOG_ROW))
         self._persisted = True
 
     def values_df(self) -> DataFrame:
         """The long EAV table (buffer ∪ persisted)."""
         parts = []
-        if self._persisted and self.storage_dir is not None:
-            # NB: StructType.add mutates; build a fresh copy instead
-            on_disk = T.StructType(
-                list(VALUES_SCHEMA.fields) + [T.StructField("event_date", T.DateType())]
-            )
-            parts.append(
-                self.spark.read.schema(on_disk)
-                .parquet(f"{self.storage_dir}/feature_values")
-                .drop("event_date")
-            )
+        if self._persisted:
+            parts.append(self.log.read(_LOG_SCHEMA).drop("event_date"))
         if self._buffer:
             parts.append(self.spark.createDataFrame(self._buffer, VALUES_SCHEMA))
         if not parts:

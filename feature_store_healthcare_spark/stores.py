@@ -4,9 +4,12 @@ The reference's online store is a mutable dict (feature_server.py:203) and
 the offline store an append-only list (:204).  Spark-native equivalents:
 
 - :class:`AppendStore` — append-only partitioned parquet: blind writes, the
-  system of record.  (With Delta/Iceberg available this is a Delta table;
-  plain parquet keeps the container dependency-free — the access pattern is
-  identical.)
+  system of record (the registry's value log is one).  Retention and
+  compaction rewrite it as a new version of its root, committed by the
+  same pointer flip as every other rewritten directory here
+  (:func:`tableops.write_version`).  (With Delta/Iceberg available this is
+  a Delta table; plain parquet keeps the container dependency-free — the
+  access pattern is identical.)
 - :class:`LatestStore` — one row per key, maintained by merge: each merge
   unions the update batch with the current snapshot, reduces with the
   deterministic latest-per-key argmax (event-ts guard → late/out-of-order
@@ -17,7 +20,8 @@ the offline store an append-only list (:204).  Spark-native equivalents:
 
 Scale note: LatestStore rewrites the snapshot per merge — right for
 latest tables (small: one row/entity) merged per micro-batch; the 100 TB
-history lives in AppendStore, which never rewrites.
+history lives in AppendStore, which rewrites only on scheduled
+maintenance.
 """
 
 from __future__ import annotations
@@ -35,24 +39,45 @@ from feature_store_healthcare_spark.sqlgen import table_ident
 
 
 class AppendStore:
-    """Append-only parquet log, optionally partitioned (e.g. event_date)."""
+    """Append-only parquet log, optionally partitioned (e.g. event_date),
+    kept as a versioned root (:func:`tableops.write_version`): the first
+    append commits ``v000001/``, later appends add files to the current
+    version, and a rewrite (:meth:`rewrite` — retention, compaction)
+    commits a whole new version with the same single pointer flip."""
 
     def __init__(self, spark: SparkSession, path: str, partition_by: list[str] | None = None):
         self.spark = spark
         self.path = path
         self.partition_by = partition_by or []
 
-    def append(self, df: DataFrame) -> None:
+    def _write(self, df: DataFrame, target: str) -> None:
         writer = df.write.mode("append")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
+        writer.parquet(target)
 
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+    def append(self, df: DataFrame) -> None:
+        version = tableops.current_version(self.path)
+        if version is None:
+            tableops.write_version(self.path, lambda d: self._write(df, d))
+        else:
+            self._write(df, tableops.version_dir(self.path, version))
 
-    def exists(self) -> bool:
-        return os.path.exists(self.path)
+    def read(self, schema: StructType | None = None) -> DataFrame:
+        """The current version; ``schema`` skips footer inference."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(tableops.current_dir(self.path))
+
+    def rewrite(self, fn) -> None:
+        """Replace the log with ``fn(current rows)``, partitioned as the
+        log is, under the compaction lease (:func:`tableops.
+        compact_version`): a crash before the flip leaves the previous
+        version serving.  An append that lands in the old version after
+        the rewrite read it is not carried over."""
+        tableops.compact_version(
+            self.path,
+            lambda src, new: self._write(fn(self.spark.read.parquet(src)), new),
+        )
 
 
 class LatestStore:
@@ -109,7 +134,8 @@ class LatestStore:
         """Upsert: latest-per-key over (current ∪ updates).  The argmax on
         ``(ts_col, *tiebreak)`` IS the merge guard — an update older than
         the stored row loses, matching ``WHEN MATCHED AND source.ts >
-        target.ts THEN UPDATE``."""
+        target.ts THEN UPDATE``.  The one latest-wins merge of the
+        package: ``tableops.upsert`` (the streaming CDC fold) is this."""
         tiebreak = tiebreak or []
         current = self.read()
         merged = updates if current is None else current.unionByName(updates)

@@ -8,9 +8,9 @@ event-time windows (tumbling/sliding/session) for derived features →
 the offline long store (late rows still land there — bitemporal append model,
 feature_registry.py:438-439).
 
-Scale notes: watermark bounds state; the online upsert is a per-batch
-latest-per-key reduce (map-side combinable) before the store merge, so state
-and shuffle are proportional to *distinct keys per batch*, not rows.
+Scale notes: watermark bounds state; the online upsert merges each batch
+with one latest-per-key argmax whose ``max`` aggregate combines map-side,
+so the shuffle is proportional to *distinct keys*, not rows.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feature_store_healthcare_spark import tableops
-from feature_store_healthcare_spark.operators.pit import latest_per_key
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -170,19 +169,17 @@ def streaming_online_upsert(
     queryName: str = "online_upsert",
 ):
     """OP-43/44: foreachBatch dual-path maintenance of the online latest
-    table.  Each micro-batch is first reduced to latest-per-key (map-side
-    combine), then merged into the store with an event-ts guard — an
-    out-of-order event can never overwrite a newer online value, while the
-    offline append keeps every row (callers append the raw stream
-    separately).  ``store`` is stores.LatestStore or anything with
-    ``merge(df, keys, ts_col, tiebreak)``."""
+    table.  Each micro-batch is merged into the store with an event-ts
+    guard — an out-of-order event can never overwrite a newer online
+    value, while the offline append keeps every row (callers append the
+    raw stream separately).  ``store`` is stores.LatestStore or anything
+    with ``merge(df, keys, ts_col, tiebreak)``."""
     tiebreak = tiebreak or []
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        reduced = latest_per_key(batch_df, keys, ts_col, tiebreak=tiebreak)
-        store.merge(reduced, keys, ts_col, tiebreak)
+        store.merge(batch_df, keys, ts_col, tiebreak)
 
     return _maintenance_writer(stream, _upsert, queryName, checkpoint_dir)
 
@@ -235,11 +232,12 @@ def streaming_postings_maintenance(
     **Idempotence**: ``foreachBatch`` is at-least-once — a crashed batch
     re-runs under the SAME batch id, and a blind re-append would
     double-count its postings (the stats merge is addition).  A marker
-    file at ``{path}__applied`` records ``(txn_id, batch_id)`` after each
-    successful append (written atomically via rename); a replay of an
-    already-recorded batch is skipped.  This is the txnAppId/txnVersion
-    discipline Delta Lake documents for idempotent foreachBatch writes,
-    applied to the plain-parquet index this container supports.  The
+    file at ``{path}__applied.{md5(txn_id)}`` (one per logical stream,
+    :func:`tableops.marker_path`) records ``(txn_id, batch_id)`` after
+    each successful append (written atomically via rename); a replay of
+    an already-recorded batch is skipped.  This is the
+    txnAppId/txnVersion discipline Delta Lake documents for idempotent
+    foreachBatch writes, applied to the plain-parquet index.  The
     residual window — a crash BETWEEN the append and the marker write
     re-appends one batch — is the same non-transactional two-file gap
     ``append_postings_index`` itself documents; recovery is a rebuild.
@@ -508,12 +506,11 @@ def streaming_incremental_rollup(
 
     The additive fold is NOT naturally replay-idempotent (unlike the CDC
     argmax), so an at-least-once replay is guarded by a (txn_id,
-    batch_id) high-water mark stored INSIDE the state directory — it
-    commits atomically with the state content in the swap's rename, so
-    there is no window where the state holds a batch the marker does not
-    know about.  The swap itself is crash-safe
-    (:func:`tableops.swap_state_dir`: old state moved aside, never
-    deleted before the new one lands); on
+    batch_id) high-water mark stored INSIDE each state version
+    (:func:`tableops.merge_fold`) — the one pointer flip that commits
+    the state commits the mark, so there is no window where the state
+    holds a batch the mark does not know about, and a crash before the
+    flip leaves the previous version (and its mark) serving.  On
     Delta/Iceberg the whole fold would be a single MERGE INTO
     transaction.
 
@@ -546,9 +543,12 @@ def streaming_incremental_rollup(
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        tableops.recover_state_swap(state_path)
-        mark = os.path.join(state_path.rstrip("/"), "_applied.json")
-        last = tableops.read_batch_marker(mark)
+        try:
+            last = tableops.read_batch_marker(
+                os.path.join(tableops.current_dir(state_path), "_applied.json")
+            )
+        except FileNotFoundError:
+            last = None  # first batch: nothing folded yet
         if (
             last is not None
             and last["txn_id"] == txn
@@ -671,15 +671,17 @@ def streaming_cdc_apply(
     with :func:`read_cdc_state`, which filters them): a late update older
     than a delete must LOSE, and without the tombstone the delete's
     timestamp would be forgotten the moment it wins.  Each micro-batch is
-    first reduced to its winning change per key (map-side combinable
-    argmax) so the SHUFFLE scales with distinct keys per batch, not rows;
-    the state fold then reads and rewrites the full state table (per-batch
-    state I/O is O(total keys) on plain parquet — on Delta/Iceberg the
-    same fold is one MERGE INTO touching only changed files).  The fold
-    is replay-idempotent by argmax (re-folding an applied batch changes
-    nothing), and the swap is crash-safe
-    (:func:`tableops.swap_state_dir`).  The fold itself IS ``tableops.upsert`` — the MERGE INTO boundary a
-    Delta/Iceberg deployment swaps out."""
+    folded into the state by one argmax over (state ∪ batch) whose
+    ``max`` aggregate combines map-side, so the SHUFFLE scales with
+    distinct keys, not rows; the fold reads and rewrites the full state
+    table (per-batch state I/O is O(total keys) on plain parquet — on
+    Delta/Iceberg the same fold is one MERGE INTO touching only changed
+    files).  The fold is replay-idempotent by argmax (re-folding an
+    applied batch changes nothing), and each fold commits a new state
+    version with one pointer flip (a crash leaves the previous version
+    serving).  The fold itself IS ``tableops.upsert`` — the MERGE INTO
+    boundary a Delta/Iceberg deployment swaps out.  The state is a
+    versioned root: read it with :func:`read_cdc_state`."""
     tiebreak = tiebreak or []
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -697,7 +699,7 @@ def read_cdc_state(
     from feature_store_healthcare_spark.operators import cdc
 
     return (
-        spark.read.parquet(state_path)
+        spark.read.parquet(tableops.current_dir(state_path))
         .where(F.col(op_col) != cdc.DELETE_OP)
         .drop(op_col)
     )

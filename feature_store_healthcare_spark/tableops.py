@@ -1,17 +1,26 @@
 """The transactional-table-format seam (round-10 VERDICT #6).
 
-This engine's persistent state — online latest tables, streaming rollup
-state, stored postings/band/IVF/PCA/DSIR indexes — lives on PLAIN PARQUET
-directories because the container ships no ACID table format.  Every
-durability trick that implies (atomic-rename swaps, replay marker files,
-a flock compaction lease) is hand-rolled, correct on a local filesystem,
-and CONCEDED to be a table-format substitute: on Delta Lake or Iceberg
-each operation below is one native transactional call, and a deployment
+This engine's persistent state — online latest tables, streaming CDC and
+rollup state, the append-only value log, stored postings/band/IVF/PCA/
+DSIR indexes — lives on PLAIN PARQUET directories because the container
+ships no ACID table format.  Every durability trick that implies (a
+versioned root behind one pointer flip, replay marker files, a flock
+compaction lease) is hand-rolled, correct on a local filesystem, and
+CONCEDED to be a table-format substitute: on Delta Lake or Iceberg each
+operation below is one native transactional call, and a deployment
 swaps the implementation here without touching any operator.
 
 This module owns ALL marker/lease/swap file I/O.  Operators and the
 streaming maintainers call the interface; nothing else in the package
-opens a marker or lease file.
+opens a marker or lease file, or moves or deletes a directory
+(``tests/test_tableops.py`` scans the package for it).
+
+One commit for every rewritten parquet directory: :func:`write_version`
+writes the new state into a fresh ``vNNNNNN/`` under the root and flips
+one pointer file (``_CURRENT``); readers resolve :func:`current_dir`.  A
+crash at any point before the flip leaves the previous version serving.
+The bucketed catalog tables are the one exception: their compaction is
+a catalog drop-and-rename (``stores.compact_bucketed``).
 
 The mapping below is EXECUTABLE, not just documented (round 12):
 :mod:`tableops_delta` and :mod:`tableops_iceberg` implement this same
@@ -29,35 +38,39 @@ this module            Delta Lake / Iceberg equivalent
                        AND batch newer THEN UPDATE WHEN NOT MATCHED THEN
                        INSERT`` — one ACID commit; the ``ts_col`` +
                        ``tiebreak`` argmax here is the MATCHED-newer guard.
+                       Commits by :func:`write_version`
+                       (``stores.LatestStore.merge``).
 :func:`merge_fold`     an arbitrary read-modify-write committed as one
                        transaction (Delta: ``txn.commit`` of the rewritten
                        files; Iceberg: ``newOverwrite()``); used for
                        aggregate-state folds that are not row-wise merges.
+                       Commits by :func:`write_version`, replay mark
+                       inside the new version.
 :func:`append`         ``df.write.format("delta").mode("append")`` — blind
-                       ACID append, no swap/marker needed.  (Bucketed index
-                       appends go through ``stores.write_bucketed(mode=
-                       "append")``, the bucketed flavor of the same row.)
-:func:`compact`        ``OPTIMIZE table`` / Iceberg ``rewriteDataFiles`` —
-                       both take the format's own lock; the flock lease and
-                       the drop-and-rename catalog swap disappear.
+                       ACID append, no marker needed.  (``stores.
+                       AppendStore.append`` appends into its current
+                       version; bucketed index appends go through
+                       ``stores.write_bucketed(mode="append")``.)
 :func:`idempotent_commit`  Delta's documented ``txnAppId``/``txnVersion``
                        foreachBatch discipline — the (txn_id, batch_id)
                        marker file IS that pair on plain parquet.
-:func:`swap_state_dir` the commit primitive itself (atomic rename of a
-                       fully-written directory) — a table format's commit
-                       protocol replaces it outright.
 :func:`write_version`  a table version: all parts in one new
                        ``vNNNNNN/``, one pointer flip commits them
-                       (``LatestStore``; stored IVF, PCA, DSIR indexes).
-:func:`compact_version`  ``OPTIMIZE`` of such a root, same single flip.
+                       (``LatestStore``, ``AppendStore``, CDC and rollup
+                       state; stored IVF, PCA, DSIR indexes).
+:func:`compact_version`  ``OPTIMIZE`` / Iceberg ``rewriteDataFiles`` of
+                       such a root (and retention's ``DELETE WHERE``), same
+                       single flip; the format's own lock replaces the
+                       flock lease.
 =====================  ====================================================
 
 Residual gaps a real table format closes (and plain parquet cannot):
 physically-simultaneous appends to one index (two writers interleaving
 files — serialized here by the txn-marker contract and operational
-discipline), append racing a compaction's swap window, and multi-table
-atomic commits.  These are documented at each call site; the seam exists
-so closing them is a swap of this module, not a rewrite of operators.
+discipline), an append racing a compaction (it can land in the version
+the compaction already read), and multi-table atomic commits.  These
+are documented at each call site; the seam exists so closing them is a
+swap of this module, not a rewrite of operators.
 """
 
 from __future__ import annotations
@@ -69,7 +82,7 @@ import shutil
 import time
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def _local(path: str) -> str:
@@ -145,9 +158,9 @@ def idempotent_commit(path: str, txn_id: str | None, apply_fn, refresh=None):
       (``retrieval._folded_postings_stats``), so two concurrent streams
       with distinct txn_ids no longer lose each other's stats updates —
       the old read-merge-overwrite hazard is gone.  What still requires
-      exclusivity is COMPACTION: :func:`compact` swaps the whole table,
-      and an append interleaving with the swap window can land in the
-      dropped table; on the versioned indexes (:func:`compact_version`)
+      exclusivity is COMPACTION: ``stores.compact_bucketed`` swaps the
+      whole table, and an append interleaving with the swap window can
+      land in the dropped table; on the versioned roots (:func:`compact_version`)
       an append that lands in the old version after the compaction read
       it is not carried over.  Concurrency control across append+compact is a
       table-format feature (Delta/Iceberg optimistic commits); plain
@@ -221,57 +234,15 @@ def idempotent_commit(path: str, txn_id: str | None, apply_fn, refresh=None):
 
 
 # ---------------------------------------------------------------------------
-# Crash-safe state swap (the commit primitive a table format replaces)
+# Version pointer and versioned directories (Delta: table versions behind
+# one version pointer)
 # ---------------------------------------------------------------------------
-
-
-def recover_state_swap(state_path: str) -> None:
-    """Crash recovery for :func:`swap_state_dir`: a fold that died
-    between "move state aside" and "move tmp in" leaves ``state_path``
-    absent with the ``.old`` copy intact — restore it.  The interrupted
-    batch was never marked applied, so it re-folds on replay instead of
-    the state silently reinitializing from one batch (the failure the
-    old rmtree-then-move order had)."""
-    state = state_path.rstrip("/")
-    old = state + ".old"
-    if not os.path.exists(state) and os.path.exists(old):
-        shutil.move(old, state)
-
-
-def swap_state_dir(
-    merged: DataFrame, state_path: str, marker: dict | None = None
-) -> None:
-    """Crash-safe replacement of a persistent state directory: write the
-    new state to ``.tmp`` (this executes the plan, so the old state is
-    fully read BEFORE anything moves), move the old state aside to
-    ``.old``, move ``.tmp`` in, then drop ``.old``.  Every crash window
-    leaves either the old state or the new one on disk — never nothing.
-    When ``marker`` is given ({txn_id, batch_id}), it is written INSIDE
-    the tmp directory (``_applied.json`` — underscore-prefixed, so parquet
-    readers ignore it) before the move: state content and replay
-    high-water mark then commit in the SAME atomic rename, closing the
-    double-fold window a separate marker file would leave between the
-    state swap and the marker write."""
-    state = state_path.rstrip("/")
-    tmp, old = state + ".tmp", state + ".old"
-    merged.write.mode("overwrite").parquet(tmp)
-    if marker is not None:
-        write_batch_marker(
-            os.path.join(tmp, "_applied.json"), marker["txn_id"], marker["batch_id"]
-        )
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(state):
-        shutil.move(state, old)
-    shutil.move(tmp, state)
-    if os.path.exists(old):
-        shutil.rmtree(old)
 
 
 def flip_pointer(pointer_path: str, value: str) -> None:
     """Atomically repoint a current-version pointer file (write-tmp +
     ``os.replace``) — the snapshot-isolation primitive behind
-    ``stores.LatestStore``'s versioned merges; a table format's own
+    :func:`write_version`; a table format's own
     version pointer (Delta's ``_last_checkpoint`` / Iceberg's metadata
     pointer swap) replaces it."""
     tmp = pointer_path + ".tmp"
@@ -287,11 +258,6 @@ def read_pointer(pointer_path: str) -> str | None:
             return fh.read().strip()
     except FileNotFoundError:
         return None
-
-
-# ---------------------------------------------------------------------------
-# Versioned directories (Delta: table versions behind one version pointer)
-# ---------------------------------------------------------------------------
 
 
 def version_dir(root: str, version: int) -> str:
@@ -495,35 +461,27 @@ def upsert(
     tiebreak: Iterable[str] = (),
     marker: dict | None = None,
 ) -> None:
-    """Latest-wins upsert of ``batch`` into the parquet state table at
+    """Latest-wins upsert of ``batch`` into the versioned state root at
     ``state_path`` — the plain-parquet stand-in for ``MERGE INTO state
     USING batch ON keys WHEN MATCHED AND batch is newer (ts_col, then
-    tiebreak) THEN UPDATE WHEN NOT MATCHED THEN INSERT``, committed by
-    one crash-safe directory swap.
+    tiebreak) THEN UPDATE WHEN NOT MATCHED THEN INSERT``.  It IS
+    ``stores.LatestStore.merge``: the argmax over (state ∪ batch), one
+    new version committed by :func:`write_version`'s single flip, so a
+    crash leaves the previous version serving and re-applying an
+    applied batch changes nothing (replay-idempotent).  The batch is not
+    reduced first: the argmax is associative and its ``max`` aggregate
+    already combines map-side.  Tombstones and any op column ride
+    through untouched — this merges ROWS; what a row means is the
+    caller's contract (``streaming.pipeline.streaming_cdc_apply``).
+    ``marker`` is accepted for signature parity and ignored, as in
+    :mod:`tableops_delta`: the argmax makes a replay a no-op.  On plain
+    parquet each call rewrites the full state (O(total keys) I/O); a
+    table format's MERGE touches only the changed files."""
+    from feature_store_healthcare_spark.stores import LatestStore
 
-    The batch is first reduced to its winning row per key (map-side
-    combinable argmax — shuffle scales with distinct keys per batch, not
-    rows), then merged against the existing state by the same argmax, so
-    re-applying an already-applied batch changes nothing
-    (replay-idempotent).  Tombstone retention and any op-column
-    semantics ride through untouched — this merges ROWS; what a row
-    means is the caller's contract (see ``streaming.pipeline.
-    streaming_cdc_apply``).  On plain parquet each call rewrites the
-    full state (O(total keys) I/O); a table format's MERGE touches only
-    the changed files."""
-    from feature_store_healthcare_spark.operators import cdc
-
-    keys, tiebreak = list(keys), list(tiebreak)
-    spark = batch.sparkSession
-    recover_state_swap(state_path)
-    latest = cdc.latest_change(batch, keys, ts_col, tiebreak=tiebreak)
-    if os.path.exists(state_path.rstrip("/")):
-        existing = spark.read.parquet(state_path)
-        merged = existing.unionByName(latest.select(*existing.columns))
-        new_state = cdc.latest_change(merged, keys, ts_col, tiebreak=tiebreak)
-    else:
-        new_state = latest
-    swap_state_dir(new_state, state_path, marker)
+    LatestStore(batch.sparkSession, state_path).merge(
+        batch, list(keys), ts_col, list(tiebreak)
+    )
 
 
 def merge_fold(
@@ -532,42 +490,44 @@ def merge_fold(
     fold_fn,
     marker: dict | None = None,
 ) -> None:
-    """Generic transactional read-modify-write of a parquet state table:
-    ``fold_fn(existing: DataFrame | None, batch) -> new state`` runs with
-    the current state (None on first commit), and the result replaces the
-    state in one crash-safe swap — on Delta/Iceberg this is an arbitrary
-    transaction commit.  Used for folds that are not row-wise merges
-    (mergeable aggregate states, count sketches)."""
+    """Generic transactional read-modify-write of a versioned parquet
+    state root: ``fold_fn(existing: DataFrame | None, batch) -> new
+    state`` runs with the current version (None before the first
+    commit), and the result commits as a new version through
+    :func:`write_version` — on Delta/Iceberg an arbitrary transaction
+    commit.  When ``marker`` ({txn_id, batch_id}) is given it is written
+    INSIDE the new version directory (``_applied.json``; underscore
+    files are invisible to parquet readers) before the flip, so state
+    and replay high-water mark commit in the same flip.  Used for folds
+    that are not row-wise merges (mergeable aggregate states, count
+    sketches)."""
     spark = batch.sparkSession
-    recover_state_swap(state_path)
-    existing = (
-        spark.read.parquet(state_path)
-        if os.path.exists(state_path.rstrip("/"))
-        else None
-    )
-    swap_state_dir(fold_fn(existing, batch), state_path, marker)
+    try:
+        existing = spark.read.parquet(current_dir(state_path))
+    except FileNotFoundError:
+        existing = None
+    new_state = fold_fn(existing, batch)
+
+    def _write(target: str) -> None:
+        new_state.write.mode("overwrite").parquet(target)
+        if marker is not None:
+            write_batch_marker(
+                os.path.join(target, "_applied.json"),
+                marker["txn_id"],
+                marker["batch_id"],
+            )
+
+    write_version(state_path, _write)
 
 
 def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Blind append to a parquet directory — Delta/Iceberg: an ACID
-    ``mode("append")`` commit.  No swap or marker: parquet file writes
-    are add-only and readers list the directory per query.  For BUCKETED
-    index tables use ``stores.write_bucketed(mode="append")`` (same row
-    of the mapping table; it must match the existing catalog layout)."""
+    ``mode("append")`` commit.  No marker: parquet file writes are
+    add-only and readers list the directory per query.  A versioned log
+    appends through ``stores.AppendStore.append`` (into its current
+    version); BUCKETED index tables use ``stores.write_bucketed(mode=
+    "append")`` — same row of the mapping table."""
     w = df.write.mode("append")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def compact(spark: SparkSession, table: str, new_path: str) -> str:
-    """One-file-per-bucket rewrite of an append-grown bucketed table —
-    Delta ``OPTIMIZE`` / Iceberg ``rewriteDataFiles``, which also make
-    the flock lease and the drop-and-rename swap disappear (the format's
-    commit protocol serializes writers).  Delegates to
-    ``stores.compact_bucketed``, which acquires the lease itself; see it
-    for the swap-window and recovery contract.  Returns the OLD location
-    for the caller to delete once no reader needs it."""
-    from feature_store_healthcare_spark.stores import compact_bucketed
-
-    return compact_bucketed(spark, table, new_path)

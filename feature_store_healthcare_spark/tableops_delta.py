@@ -46,10 +46,10 @@ def newer_condition(ts_col: str, tiebreak: Iterable[str] = ()) -> str:
     """The MATCHED-newer guard as a SQL condition over ``b`` (batch) vs
     ``s`` (state) aliases: strict lexicographic (ts_col, *tiebreak)
     comparison — exactly the argmax order ``tableops.upsert`` applies via
-    ``cdc.latest_change``, so both implementations keep the same row.
+    ``pit.latest_per_key``, so both implementations keep the same row.
     Pure string construction (unit-testable without Delta).
 
-    NULL ordering (r12 ADVICE #5): ``cdc.latest_change`` is a
+    NULL ordering (r12 ADVICE #5): ``latest_per_key`` is a
     ``max(struct(...))`` argmax where NULL sorts LOWEST — a non-NULL
     value beats NULL at every comparison level.  A bare ``b.c > s.c``
     is null-unsafe (NULL on either side → no update), which silently
@@ -92,8 +92,9 @@ def upsert(
 ) -> None:
     """Latest-wins upsert as ONE Delta MERGE commit.
 
-    Same reduce-then-merge shape as ``tableops.upsert``: the batch is
-    first cut to its winning row per key (map-side-combinable argmax),
+    The batch is first cut to its winning row per key (map-side-
+    combinable argmax; a MERGE rejects two source rows for one target
+    row — ``tableops.upsert``'s union-then-argmax needs no such cut),
     then merged with the newer-than guard — so replaying an applied
     batch is a no-op MERGE, and the physical write touches only the
     files holding matched keys instead of rewriting the state.
@@ -170,8 +171,9 @@ def append_idempotent(
 
 def compact(spark: SparkSession, path: str) -> None:
     """``OPTIMIZE`` — bin-packing file compaction under the format's own
-    commit protocol; the lease and the drop-and-rename swap of
-    ``tableops.compact``/``stores.compact_bucketed`` have no analog to
+    commit protocol; the lease, the version flip of
+    ``tableops.compact_version`` and the drop-and-rename swap of
+    ``stores.compact_bucketed`` have no analog to
     replace because concurrent readers keep resolving a consistent
     snapshot throughout."""
     _delta_table(spark, path).optimize().executeCompaction()

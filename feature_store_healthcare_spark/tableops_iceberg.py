@@ -92,8 +92,9 @@ def upsert(
     marker: dict | None = None,
 ) -> None:
     """Latest-wins upsert as ONE Iceberg MERGE commit (``state_path`` is
-    a table identifier).  Same reduce-then-merge shape as the other two
-    bindings; replaying an applied batch is a no-op MERGE.  ``marker``
+    a table identifier).  Same reduce-then-merge shape as the Delta
+    binding (a MERGE rejects two source rows for one target row);
+    replaying an applied batch is a no-op MERGE.  ``marker``
     accepted for signature parity and ignored (the commit is atomic)."""
     from feature_store_healthcare_spark.operators import cdc
 

@@ -67,8 +67,8 @@ def test_every_family_has_driver_window_representative():
     families = {
         # round 12: the ledger-debt rotation replaced the round-1
         # relational representatives with the never-driver-green TPC-H
-        # tail entries pinning strictly harder shapes (see the rule-2
-        # rationale at each _DRIVER_PRIORITY line)
+        # tail entries pinning strictly harder shapes (per-entry
+        # rationales in git history)
         "relational-core": {"q1_pricing_summary", "q3_shipping_priority",
                             "filter_project_lineitem", "window_rank_orders",
                             "range_join_recent_clicks",
@@ -96,7 +96,7 @@ def test_every_family_has_driver_window_representative():
         # round 13: the second rotation cycle coarsened four single-member
         # families along the same lines as the rule-2 evictions — each
         # merged family's machinery is pinned by a seated member of the
-        # merged set (rationales at the _DRIVER_PRIORITY lines):
+        # merged set (per-entry rationales in git history):
         # skew-diagnostics → profiling (both are operators.profile);
         # experiments joins the covariance family (CUPED's theta=cov/var
         # IS the centered-moment machinery); association + retrieval-eval

@@ -1,10 +1,12 @@
-"""Versioned commits of the stored IVF, PCA and DSIR indexes.
+"""Versioned commits of the stored IVF, PCA and DSIR indexes, of the
+streaming CDC state and of an append-only log's maintenance rewrites.
 
-Each index root holds ``vNNNNNN/`` directories behind one ``_CURRENT``
-pointer (``tableops.write_version``).  A build or compaction that fails
+Each root holds ``vNNNNNN/`` directories behind one ``_CURRENT`` pointer
+(``tableops.write_version``).  A build, merge or rewrite that fails
 before its pointer flip must leave the previous version serving exactly:
-the same loaded model and the same probe rows.  Crashes are injected at
-the parquet write of one part, or at the flip itself.
+the same loaded model and the same rows.  Crashes are injected at the
+parquet write of one part, or at the flip itself.  (The rollup fold's
+crash test runs a stream: ``tests/test_streaming.py``.)
 """
 
 from __future__ import annotations
@@ -16,9 +18,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
-from feature_store_healthcare_spark import queries, tableops
+from feature_store_healthcare_spark import maintenance, queries, tableops
 from feature_store_healthcare_spark.operators import sampling, similarity
 from feature_store_healthcare_spark.sources import load_table
+from feature_store_healthcare_spark.stores import AppendStore
+from feature_store_healthcare_spark.streaming import read_cdc_state
 
 class InjectedCrash(RuntimeError):
     pass
@@ -199,3 +203,76 @@ def test_one_memo_distinct_ivf_parameters(spark, sf_dir):
     app = spark.sparkContext.applicationId
     assert queries._STORED_INDEXES[(app, sf_dir, "ivf16")] is ivf16
     assert queries._STORED_INDEXES[(app, sf_dir, "ivf64")] is ivf64
+
+
+def _crashes_keep_rows(monkeypatch, commit, read, new_dir: str) -> None:
+    """``commit()`` crashes once after its write into ``new_dir`` landed
+    and once at the flip; each time ``read()`` is unchanged."""
+    before = read()
+    for crash in (lambda m: _crash_at_write(m, new_dir, after_write=True), _crash_at_flip):
+        with monkeypatch.context() as m:
+            crash(m)
+            with pytest.raises(InjectedCrash):
+                commit()
+        assert read() == before
+
+
+def test_cdc_upsert_crash_keeps_previous_version(spark, tmp_path, monkeypatch):
+    state = str(tmp_path / "cdc")
+    schema = "k long, v string, ts long, op string"
+    base = spark.createDataFrame([(1, "a", 10, "U"), (2, "b", 10, "U")], schema)
+    tableops.upsert(base, state, ["k"], "ts")
+    batch = spark.createDataFrame(
+        [(1, "x", 20, "U"), (2, "b", 30, "D"), (3, "c", 5, "U")], schema
+    )
+
+    def live():
+        return _rows(read_cdc_state(spark, state).select("k", "v", "ts"))
+
+    _crashes_keep_rows(
+        monkeypatch,
+        lambda: tableops.upsert(batch, state, ["k"], "ts"),
+        live,
+        "v000002",
+    )
+    assert live() == [(1, "a", 10), (2, "b", 10)]
+    tableops.upsert(batch, state, ["k"], "ts")
+    assert live() == [(1, "x", 20), (3, "c", 5)]
+    assert tableops.current_version(state) == 2
+
+
+@pytest.mark.parametrize("rewrite", ["retention", "compact"])
+def test_log_rewrite_crash_keeps_previous_version(
+    spark, tmp_path, monkeypatch, rewrite
+):
+    from datetime import datetime
+
+    store = AppendStore(spark, str(tmp_path / "log"), partition_by=["day"])
+    rows = [
+        ("f_short" if i % 4 == 0 else "f_long", f"e{i}", datetime(2024, 5, 20), i % 2)
+        for i in range(12)
+    ]
+    schema = "feature_id string, entity_id string, event_timestamp timestamp_ntz, day int"
+    store.append(spark.createDataFrame(rows[:6], schema))
+    store.append(spark.createDataFrame(rows[6:], schema))
+    registry = spark.createDataFrame([("f_short", 0)], "feature_id string, retention_days int")
+    now = datetime(2024, 6, 1)
+
+    def run():
+        if rewrite == "retention":
+            assert maintenance.apply_retention(store, registry, now=now) == 3
+        else:
+            maintenance.compact(store, target_partitions=1)
+
+    def read():
+        return _rows(store.read().select("entity_id", "day"))
+
+    _crashes_keep_rows(monkeypatch, run, read, "v000002")
+    assert len(read()) == 12
+    run()  # the failed rewrites released the lease
+    want = 9 if rewrite == "retention" else 12
+    assert len(read()) == want
+    parts = os.listdir(tableops.current_dir(store.path))
+    assert sorted(p for p in parts if not p.startswith(("_", "."))) == [
+        "day=0", "day=1"
+    ]

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from feature_store_healthcare_spark import maintenance
+from feature_store_healthcare_spark import maintenance, tableops
 from feature_store_healthcare_spark.stores import AppendStore
 
 NOW = datetime(2024, 6, 1)
@@ -93,11 +93,81 @@ def test_compact_reduces_files(spark, tmp_path):
         store.append(df.repartition(4))
     import glob
 
-    before = len(glob.glob(f"{store.path}/*.parquet"))
+    before = len(glob.glob(f"{tableops.current_dir(store.path)}/*.parquet"))
     maintenance.compact(store, target_partitions=2)
-    after = len(glob.glob(f"{store.path}/*.parquet"))
+    after = len(glob.glob(f"{tableops.current_dir(store.path)}/*.parquet"))
     assert after <= 2 < before
     assert store.read().count() == 500
+
+
+def _log_batch(spark, start: int):
+    """Ten log rows, ``day`` 0 or 1; every fifth row belongs to the
+    30-day ``f_short`` feature and is expired at ``NOW``."""
+    rows = [
+        ("f_short", f"e{i}", datetime(2024, 4, 1), i % 2)
+        if i % 5 == 0
+        else ("f_long", f"e{i}", datetime(2024, 5, 20), i % 2)
+        for i in range(start, start + 10)
+    ]
+    return spark.createDataFrame(
+        rows, "feature_id string, entity_id string, event_timestamp timestamp_ntz, day int"
+    )
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "retention"])
+def test_partitioned_store_keeps_rows_through_rewrite(
+    spark, registry_df, tmp_path, rewrite
+):
+    """A rewrite keeps the store's partitioning, so a later append and read
+    see every row (dropping ``partition_by`` read back 10 of 30)."""
+    store = AppendStore(spark, str(tmp_path / "log"), partition_by=["day"])
+    store.append(_log_batch(spark, 0))
+    store.append(_log_batch(spark, 10))
+    if rewrite == "compact":
+        maintenance.compact(store, target_partitions=1)
+        kept = range(20)
+    else:
+        assert maintenance.apply_retention(store, registry_df, now=NOW) == 4
+        kept = [i for i in range(20) if i % 5]
+    store.append(_log_batch(spark, 20))
+    got = sorted((r.entity_id, r.day) for r in store.read().collect())
+    assert got == sorted((f"e{i}", i % 2) for i in [*kept, *range(20, 30)])
+
+
+def test_registry_value_log_keeps_rows_through_maintenance(
+    spark, registry_df, tmp_path
+):
+    """The registry's value log is an AppendStore: compaction and
+    retention on it keep its ``event_date`` partitioning, and
+    ``values_df`` reads every surviving row back."""
+    from feature_store_healthcare_spark.registry import VALUES_SCHEMA, FeatureRegistry
+
+    reg = FeatureRegistry(spark, storage_dir=str(tmp_path))
+
+    def ingest(start):
+        rows = []
+        for r in _log_batch(spark, start).collect():
+            row = dict.fromkeys(VALUES_SCHEMA.fieldNames())
+            row.update(
+                feature_id=r.feature_id, feature_name=r.feature_id,
+                entity_type="patient", entity_id=r.entity_id,
+                value_long=int(r.entity_id[1:]), event_timestamp=r.event_timestamp,
+                created_timestamp=r.event_timestamp, seq=int(r.entity_id[1:]),
+            )
+            rows.append(tuple(row[n] for n in VALUES_SCHEMA.fieldNames()))
+        reg.ingest_values_df(spark.createDataFrame(rows, VALUES_SCHEMA))
+
+    def ids():
+        return sorted(r.value_long for r in reg.values_df().collect())
+
+    ingest(0)
+    ingest(10)
+    maintenance.compact(reg.log, target_partitions=1)
+    ingest(20)
+    assert ids() == list(range(30))
+    assert maintenance.apply_retention(reg.log, registry_df, now=NOW) == 6
+    ingest(30)
+    assert ids() == [i for i in range(30) if i % 5] + list(range(30, 40))
 
 
 # ------------------------------- incremental aggregate maintenance (IVM)

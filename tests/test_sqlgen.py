@@ -11,6 +11,7 @@ import statistics
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from test_maintenance import hist_reference
 
 from feature_store_healthcare_spark import maintenance
@@ -23,6 +24,16 @@ DOCS = [(1, "a   b\tc d e"), (2, "It's a \\ back-slash: a\\b  it's"), (3, None)]
 def _ngrams(s: str, n: int) -> set[str]:
     toks = re.sub(r"\s+", " ", s.lower()).strip().split(" ")
     return {" ".join(toks[i : i + n]) for i in range(max(len(toks) - n, 0) + 1)}
+
+
+def _simhash16(s: str) -> int:
+    """16-bit portable SimHash: bit i is set iff more tokens have bit i
+    of their md5-derived hash set than clear."""
+    toks = re.sub(r"\s+", " ", s.lower()).strip().split(" ")
+    hs = [int(hashlib.md5(t.encode()).hexdigest()[24:32], 16) for t in toks]
+    return sum(
+        1 << i for i in range(16) if sum(1 if h >> i & 1 else -1 for h in hs) > 0
+    )
 
 
 def test_ident_quotes_any_name():
@@ -41,16 +52,22 @@ def test_generated_sql_parser_modes_and_awkward_names(spark, escaped):
     prior = spark.conf.get(key, "false")
     spark.conf.set(key, escaped)
     try:
-        for text_col in ("i", "my text"):
-            docs = spark.createDataFrame(DOCS, f"doc_id int, `{text_col}` string")
+        for id_col, text_col in (("doc_id", "i"), ("doc_id", "my text"), ("doc`id", "a`b")):
+            docs = spark.createDataFrame(
+                DOCS,
+                T.StructType(
+                    [T.StructField(id_col, T.IntegerType()),
+                     T.StructField(text_col, T.StringType())]
+                ),
+            )
             want = {d: _ngrams(s, 2) for d, s in DOCS if s is not None}
             got: dict[int, set[str]] = {}
-            for r in dedup.shingles(docs, "doc_id", text_col, n=2).collect():
-                got.setdefault(r.doc_id, set()).add(r.shingle)
+            for r in dedup.shingles(docs, id_col, text_col, n=2).collect():
+                got.setdefault(r[id_col], set()).add(r.shingle)
             assert got == want and want[1] == {"a b", "b c", "c d", "d e"}, text_col
 
             sig = dedup.minhash_signatures(
-                docs, "doc_id", text_col, n=2, num_hashes=3, portable=True
+                docs, id_col, text_col, n=2, num_hashes=3, portable=True
             ).collect()
             want_sig = {
                 d: tuple(
@@ -59,7 +76,12 @@ def test_generated_sql_parser_modes_and_awkward_names(spark, escaped):
                 )
                 for d, gs in want.items()
             }
-            assert {r.doc_id: tuple(r[1:]) for r in sig} == want_sig, text_col
+            assert {r[id_col]: tuple(r[1:]) for r in sig} == want_sig, text_col
+
+            sim = dedup.simhash_signatures(docs, id_col, text_col, bits=16, portable=True)
+            assert {r[id_col]: r.simhash for r in sim.collect()} == {
+                d: _simhash16(s) for d, s in DOCS if s is not None
+            }, text_col
 
         vals = [(f"g{i % 2}", float(i * 7 % 23)) for i in range(40)]
         df = spark.createDataFrame(vals, "grp string, `my col` double")

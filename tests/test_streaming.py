@@ -300,7 +300,7 @@ def test_streaming_incremental_rollup_matches_batch_agg(spark, events_dir, tmp_p
     got = {
         r.user_id: r
         for r in maintenance.finalize_agg_states(
-            spark.read.parquet(state), ["user_id"]
+            spark.read.parquet(tableops.current_dir(state)), ["user_id"]
         ).collect()
     }
     # user 1: 10.0 + 20.0 + late 99.0 ; user 2: 5.0 (x2 dup rows) + 7.0
@@ -1057,33 +1057,62 @@ def test_streaming_rollup_replay_does_not_double_add(spark, events_dir, tmp_path
     got = {
         r.user_id: r
         for r in maintenance.finalize_agg_states(
-            spark.read.parquet(state), ["user_id"]
+            spark.read.parquet(tableops.current_dir(state)), ["user_id"]
         ).collect()
     }
     assert got[1].n == 3 and got[1].total == 129.0  # not 258.0
     assert got[2].n == 3 and got[2].total == 17.0
 
 
-def test_state_swap_crash_recovery(spark, tmp_path):
-    """A fold that died between 'move state aside' and 'move tmp in'
-    leaves only the .old directory; the next fold must restore it rather
-    than silently reinitializing from one batch."""
-    import shutil
+def test_rollup_crash_before_flip_replays_once(
+    spark, events_dir, tmp_path, monkeypatch
+):
+    """A rollup fold that dies before its version flip leaves the previous
+    version (state and replay mark) serving; restarting from the same
+    checkpoint re-folds that batch once, and re-delivering the whole
+    backlog under the same txn_id adds nothing."""
+    from pyspark.errors import StreamingQueryException
 
-    state = str(tmp_path / "swap_state")
-    df = spark.range(5).selectExpr("id", "id * 2 as v")
-    tableops.swap_state_dir(df, state)
-    before = sorted(map(tuple, spark.read.parquet(state).collect()))
-    shutil.move(state, state + ".old")  # the crash window
-    assert not os.path.exists(state)
-    tableops.recover_state_swap(state)
-    assert sorted(map(tuple, spark.read.parquet(state).collect())) == before
-    # and a marker written inside the dir survives the swap + is readable
-    tableops.swap_state_dir(df, state, {"txn_id": "t", "batch_id": 7})
-    got = tableops.read_batch_marker(os.path.join(state, "_applied.json"))
-    assert got == {"txn_id": "t", "batch_id": 7}
-    # parquet readers ignore the underscore-prefixed marker file
-    assert spark.read.parquet(state).count() == 5
+    from feature_store_healthcare_spark import maintenance
+
+    state = str(tmp_path / "crash_state")
+
+    def run(name):
+        stream = sp.stream_events(spark, events_dir, max_files_per_trigger=1)
+        writer = sp.streaming_incremental_rollup(
+            stream, state, keys=["user_id"], value_col="value", txn_id="one"
+        )
+        _run_available_now(writer, tmp_path, name)
+
+    def rollup():
+        return sorted(
+            (r.user_id, r.n, r.total)
+            for r in maintenance.finalize_agg_states(
+                spark.read.parquet(tableops.current_dir(state)), ["user_id"]
+            ).collect()
+        )
+
+    real_flip = tableops.flip_pointer
+    flips = []
+
+    def flip(pointer_path, value):
+        flips.append(value)
+        if len(flips) == 2:  # the second batch's commit
+            raise RuntimeError("crash before the pointer flip")
+        real_flip(pointer_path, value)
+
+    with monkeypatch.context() as m:
+        m.setattr(tableops, "flip_pointer", flip)
+        with pytest.raises(StreamingQueryException):
+            run("crashed")
+    # the first batch's version still serves: users 1 and 2 of b1.json
+    assert tableops.current_version(state) == 1
+    assert rollup() == [(1, 2, 30.0), (2, 2, 10.0)]
+    run("crashed")  # same checkpoint: the failed batch re-runs
+    want = [(1, 3, 129.0), (2, 3, 17.0)]
+    assert rollup() == want
+    run("replayed")  # fresh checkpoint, same txn_id: every batch skips
+    assert rollup() == want
 
 
 def test_torn_marker_reads_as_missing(tmp_path):

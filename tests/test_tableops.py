@@ -16,7 +16,9 @@ from feature_store_healthcare_spark import tableops
 def _rows(spark, path):
     return {
         (r.k, r.v, r.ts)
-        for r in spark.read.parquet(path).select("k", "v", "ts").collect()
+        for r in spark.read.parquet(tableops.current_dir(path))
+        .select("k", "v", "ts")
+        .collect()
     }
 
 
@@ -46,7 +48,7 @@ def test_upsert_tiebreak_deterministic(spark, tmp_path):
         [(1, "x", 10, 1), (1, "y", 10, 2)], "k long, v string, ts long, seq long"
     )
     tableops.upsert(batch, state, ["k"], "ts", tiebreak=["seq"])
-    got = spark.read.parquet(state).collect()
+    got = spark.read.parquet(tableops.current_dir(state)).collect()
     assert len(got) == 1 and got[0].v == "y"  # higher seq wins the ts tie
 
 
@@ -65,16 +67,18 @@ def test_merge_fold_first_and_subsequent_commits(spark, tmp_path):
 
     b1 = spark.createDataFrame([(1,), (1,), (2,)], "k long")
     tableops.merge_fold(b1, state, fold)
-    assert {(r.k, r.n) for r in spark.read.parquet(state).collect()} == {
+    current = tableops.current_dir(state)
+    assert {(r.k, r.n) for r in spark.read.parquet(current).collect()} == {
         (1, 2), (2, 1)
     }
     b2 = spark.createDataFrame([(2,), (3,)], "k long")
     tableops.merge_fold(b2, state, fold, marker={"txn_id": "t", "batch_id": 4})
-    assert {(r.k, r.n) for r in spark.read.parquet(state).collect()} == {
+    current = tableops.current_dir(state)
+    assert {(r.k, r.n) for r in spark.read.parquet(current).collect()} == {
         (1, 2), (2, 2), (3, 1)
     }
     # the marker committed atomically inside the state dir
-    mark = tableops.read_batch_marker(os.path.join(state, "_applied.json"))
+    mark = tableops.read_batch_marker(os.path.join(current, "_applied.json"))
     assert mark == {"txn_id": "t", "batch_id": 4}
 
 
@@ -85,17 +89,34 @@ def test_append_is_blind_and_additive(spark, tmp_path):
     assert {r.k for r in spark.read.parquet(path).collect()} == {1, 2}
 
 
-def test_upsert_recovers_interrupted_swap(spark, tmp_path):
-    """A crash between 'state moved aside' and 'tmp moved in' leaves only
-    the .old copy; the next upsert restores it before merging — the state
-    never silently reinitializes from one batch."""
-    import shutil
+#: the only directory moves and deletes outside tableops, each with its
+#: reason: (module, call) -> why it is not a commit of stored state
+_FILE_OPS_ALLOWED = {
+    # the temp directory holding the package zip shipped to executors
+    ("queries.py", "shutil.rmtree"): "_PKG_ZIP temp cleanup",
+    # the band index's family stamp travels with a compacted table
+    ("stores.py", "os.replace"): "compact_bucketed's sidecar move",
+    # the family stamp itself, written tmp-then-rename
+    ("operators/dedup.py", "os.replace"): "band-family marker write",
+}
 
-    state = str(tmp_path / "state")
-    base = spark.createDataFrame([(1, "a", 10)], "k long, v string, ts long")
-    tableops.upsert(base, state, ["k"], "ts")
-    # simulate the crash window
-    shutil.move(state, state + ".old")
-    batch = spark.createDataFrame([(2, "b", 1)], "k long, v string, ts long")
-    tableops.upsert(batch, state, ["k"], "ts")
-    assert _rows(spark, state) == {(1, "a", 10), (2, "b", 1)}
+
+def test_tableops_owns_directory_moves():
+    """tableops owns all marker/lease/swap file I/O: no other module of
+    the package moves or deletes files itself, beyond the three listed
+    exceptions."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(tableops.__file__).parent
+    pattern = re.compile(r"\b(shutil\.move|shutil\.rmtree|os\.replace)\b")
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "tableops.py":
+            continue
+        for call in pattern.findall(path.read_text()):
+            found.add((rel, call))
+    assert found - set(_FILE_OPS_ALLOWED) == set()
+    # an exception whose call is gone must leave the list too
+    assert set(_FILE_OPS_ALLOWED) - found == set()

@@ -100,12 +100,12 @@ def _column_repetition(df, id_col, text_col, dup_token_cut=0.7, top_bigram_cut=0
 
 def _column_spans(df, id_col, text_col, span_tokens=12):
     """span_duplicates built through the Column API, the tokenizer inside
-    the span lambda."""
+    the span lambda; NULL text gives no span."""
     toks = F.split(normalize_text(_col(text_col)), " ")
-    spans = F.transform(
+    spans = F.when(toks.isNotNull(), F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - span_tokens, F.lit(0))),
         lambda i: F.array_join(F.slice(toks, i + 1, span_tokens), " "),
-    )
+    ))
     long = df.select(_col(id_col), F.explode(spans).alias("span"))
     return (
         long.groupBy(F.md5("span").alias("span_hash"))
@@ -165,6 +165,12 @@ def test_span_duplicates_rows_match_column_build(spark, parser_mode, name):
         assert sorted(got.collect(), key=str) == sorted(ref.collect(), key=str)
     short = dedup.span_duplicates(docs, ID, name, span_tokens=12).collect()
     assert any(r.n_docs == 2 and r.n_occurrences == 2 for r in short)  # docs 9 and 10
+
+
+def test_span_duplicates_null_text_gives_no_row(spark):
+    """Two NULL-text docs share no span: no NULL ``span_hash`` row."""
+    docs = spark.createDataFrame([(1, None), (2, None), (3, "a b")], "id long, t string")
+    assert dedup.span_duplicates(docs, "id", "t", span_tokens=2).collect() == []
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -9,7 +9,7 @@ in queries.py).  This prints, from the committed ledger:
 - the never-green list, split into currently-seated (will close next
   driver run) vs tail (candidates for the next rotation),
 - seated entries by consecutive-green streak (long-green seats are the
-  rotation's eviction candidates under rule 2).
+  rotation's eviction candidates: the strongest-contract rule).
 
 Assertion mode (the stays-green canary, round-12 verdict ask #2)::
 
@@ -19,7 +19,7 @@ exits 1 if ANY query green in the first round's ledger re-reds in the
 second — i.e. it appears in BOTH rounds' CORRECTNESS files and went
 green → not-green.  A query absent from the later file is NOT a
 regression (the window is 50 slots; rotation moves queries to the tail
-where tools/check_oracle.py still covers them — rule 3).  Arguments are
+where tools/check_oracle.py still covers them — the stays-green rule).  Arguments are
 round tags (``r11``/``11``) or explicit paths to CORRECTNESS json files
 (the latter is what the synthetic-fixture test uses).
 
@@ -70,7 +70,7 @@ def assert_no_regression(old_tag: str, new_tag: str) -> int:
         if not _is_green(prev):
             continue
         if name not in new:
-            continue  # rotated out — rule 3 covers it in the local gate
+            continue  # rotated out — the local gate still covers it
         if not _is_green(new[name]):
             regressed.append(name)
     rotated_out = [n for n in old if _is_green(old[n]) and n not in new]
@@ -123,7 +123,7 @@ def main() -> int:
           f"candidates):")
     for n in tail_never:
         print(f"  {n}")
-    print("\nseated by green-round count (rule-2 eviction candidates first):")
+    print("\nseated by green-round count (eviction candidates first):")
     for n in sorted(window, key=lambda n: -len(green_rounds.get(n, []))):
         print(f"  {len(green_rounds.get(n, [])):2d}  {n}")
     return 0
