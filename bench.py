@@ -135,8 +135,10 @@ HEADLINE = [
 
 
 def bench_minhash_fast(spark, sf_dir):
-    """MinHash-LSH on the fast (xxhash64) path — the production variant;
-    the oracle-checked catalog entry uses the slower portable md5 hash."""
+    """MinHash-LSH on the fast path — the production variant: with
+    ``portable=False`` the signatures come from the Arrow kernel
+    (``dedup.minhash_signatures_arrow``); the oracle-checked catalog
+    entry uses the slower portable md5 hash."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(docs, "doc_id", "text", n=3, num_hashes=16, bands=4)
 

@@ -32,16 +32,6 @@ UPSERT_OP = "U"
 DELETE_OP = "D"
 
 
-def latest_change(
-    changelog: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """The winning (newest) change per key — argmax by (ts, *tiebreak)."""
-    return latest_per_key(changelog, keys, ts_col, tiebreak=tiebreak)
-
-
 def materialize(
     changelog: DataFrame,
     keys: Sequence[str],
@@ -51,7 +41,7 @@ def materialize(
 ) -> DataFrame:
     """Fold a changelog into its end state: newest change per key, winning
     deletes drop the key, and the op column disappears from the output."""
-    latest = latest_change(changelog, keys, ts_col, tiebreak=tiebreak)
+    latest = latest_per_key(changelog, keys, ts_col, tiebreak=tiebreak)
     return latest.where(F.col(op_col) != DELETE_OP).drop(op_col)
 
 

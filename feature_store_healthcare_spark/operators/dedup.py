@@ -62,9 +62,13 @@ def exact_dedup_keep_min(df: DataFrame, dup_cols: list[str], id_col: str) -> Dat
     """Deterministic exact dedup: one keeper row per duplicate group — the
     minimum ``id_col`` — via a partial-aggregatable min_by (no sort)."""
     payload = [c for c in df.columns if c not in dup_cols]
-    agg = F.min_by(F.struct(*[F.col(c) for c in payload]), F.col(id_col)).alias("__k")
-    out = df.groupBy(*dup_cols).agg(agg)
-    return out.select(*dup_cols, *[F.col(f"__k.{c}").alias(c) for c in payload])
+    struct = F.struct(*[F.col(ident(c)) for c in payload])
+    agg = F.min_by(struct, F.col(ident(id_col))).alias("__k")
+    out = df.groupBy(*[F.col(ident(c)) for c in dup_cols]).agg(agg)
+    return out.select(
+        *[F.col(ident(c)) for c in dup_cols],
+        *[F.col(f"__k.{ident(c)}").alias(c) for c in payload],
+    )
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -293,7 +297,10 @@ def minhash_signatures_arrow(
     import pandas as pd
     from pyspark.sql import types as T
 
-    id_field = df.schema[id_col]
+    # the kernel sees reserved column names: mapInPandas itself resolves
+    # its input columns by unquoted name, which a name like doc`id breaks
+    src = df.schema[id_col]
+    id_field = T.StructField("__mh_id", src.dataType, src.nullable)
     out_schema = T.StructType(
         [id_field]
         + [T.StructField(f"mh_{h}", T.LongType(), False) for h in range(num_hashes)]
@@ -305,7 +312,7 @@ def minhash_signatures_arrow(
         mh_cols = [f"mh_{h}" for h in range(num_hashes)]
         for pdf in batches:
             ids, counts, flat_tokens = [], [], []
-            for i, s in zip(pdf[id_col], pdf[text_col]):
+            for i, s in zip(pdf["__mh_id"], pdf["__mh_text"]):
                 if s is None:
                     continue  # exploded path: null text → no signature row
                 toks = s.lower().split() or [""]
@@ -313,7 +320,7 @@ def minhash_signatures_arrow(
                 counts.append(len(toks))
                 flat_tokens.extend(toks)
             if not ids:
-                yield pd.DataFrame({c: [] for c in [id_col, *mh_cols]})
+                yield pd.DataFrame({c: [] for c in ["__mh_id", *mh_cols]})
                 continue
             h = pd.util.hash_array(
                 np.asarray(flat_tokens, dtype=object)
@@ -363,7 +370,7 @@ def minhash_signatures_arrow(
                 for k in range(1, c):
                     b = b * poly_p + h[ts + k]
                 bases[sh_starts[d]] = b
-            data = {id_col: ids}
+            data = {"__mh_id": ids}
             for s_i in range(num_hashes):
                 # SIGNED-order minima (int64 view), NOT unsigned: the
                 # duplicate-id merge below folds per-row partials with
@@ -383,10 +390,12 @@ def minhash_signatures_arrow(
                 data[mh_cols[s_i]] = np.minimum.reduceat(v, sh_starts)
             yield pd.DataFrame(data)
 
-    partial = df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
+    partial = df.select(
+        df[ident(id_col)].alias("__mh_id"), df[ident(text_col)].alias("__mh_text")
+    ).mapInPandas(kernel, schema=out_schema)
     # duplicate-id merge (contract parity with the exploded groupBy): one
     # partial-aggregatable min per seed over 1-row-per-doc partials
-    return partial.groupBy(id_col).agg(
+    return partial.groupBy(F.col("__mh_id").alias(id_col)).agg(
         *[F.min(f"mh_{h}").alias(f"mh_{h}") for h in range(num_hashes)]
     )
 
@@ -434,10 +443,13 @@ def lsh_pairs_from_bands(
             right,
             on=[
                 F.col("l.bkey") == F.col("r.bkey"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+                F.col(f"l.{ident(id_col)}") < F.col(f"r.{ident(id_col)}"),
             ],
         )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        .select(
+            F.col(f"l.{ident(id_col)}").alias("id_a"),
+            F.col(f"r.{ident(id_col)}").alias("id_b"),
+        )
         .distinct()
     )
 
@@ -620,7 +632,7 @@ def ngram_jaccard_pairs(
     # corpus-sized shingle table.
     parallelism = df.sparkSession.sparkContext.defaultParallelism * 4
     probe = (
-        sh.repartition(parallelism, id_col) if broadcast_candidates else sh
+        sh.repartition(parallelism, sh[ident(id_col)]) if broadcast_candidates else sh
     )
     if not force:
         # Candidate volume Σ f·(f−1)/2 = (F2 − F1)/2 over shingle
@@ -697,12 +709,12 @@ def ngram_jaccard_pairs(
     build = F.broadcast(r) if broadcast_candidates else r
     out = (
         l.join(build, on=[F.col("l.shingle") == F.col("r.shingle"),
-                          F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
+                          F.col(f"l.{ident(id_col)}") < F.col(f"r.{ident(id_col)}")])
         # sizes are functionally dependent on the ids — making them GROUP
         # KEYS (not first() aggregates) keeps the agg buffer to one counter
         .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col(f"l.{ident(id_col)}").alias("id_a"),
+            F.col(f"r.{ident(id_col)}").alias("id_b"),
             F.col("l.__sz").alias("size_a"),
             F.col("r.__sz").alias("size_b"),
         )
@@ -842,20 +854,18 @@ def cluster_survivors(
         "id", id_col
     )
     right, _ = _auto_build_side(comp, broadcast_components)
+    id_c = F.col(ident(id_col))
     labeled = (
-        df.select(id_col)
+        df.select(id_c)
         .join(right, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("component"),
-        )
+        .select(id_c, F.coalesce("component", id_c).alias("component"))
     )
     w = Window.partitionBy("component")
     return labeled.select(
-        id_col,
+        id_c,
         "component",
         F.count(F.lit(1)).over(w).alias("cluster_size"),
-        (F.col(id_col) == F.col("component")).alias("is_keeper"),
+        (id_c == F.col("component")).alias("is_keeper"),
     )
 
 
@@ -973,8 +983,8 @@ def simhash_candidates(
         for c in range(chunks)
     ]
     banded = sig.select(
-        F.col(id_col), F.col("simhash"), F.explode(F.array(*entries)).alias("b")
-    ).select(id_col, "simhash", "b.chunk", "b.cval")
+        F.col(ident(id_col)), F.col("simhash"), F.explode(F.array(*entries)).alias("b")
+    ).select(F.col(ident(id_col)), "simhash", "b.chunk", "b.cval")
     # banded feeds both join sides — persist so the simhash computation
     # runs once, not twice; one-entry lifecycle, same policy as
     # minhash_lsh_pairs (release via release_dedup_caches).
@@ -984,10 +994,10 @@ def simhash_candidates(
     return (
         l.join(r, on=[F.col("l.chunk") == F.col("r.chunk"),
                       F.col("l.cval") == F.col("r.cval"),
-                      F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
+                      F.col(f"l.{ident(id_col)}") < F.col(f"r.{ident(id_col)}")])
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col(f"l.{ident(id_col)}").alias("id_a"),
+            F.col(f"r.{ident(id_col)}").alias("id_b"),
             F.col("l.simhash").alias("sh_a"),
             F.col("r.simhash").alias("sh_b"),
         )
@@ -1055,7 +1065,7 @@ def ngram_overlap(
     build = F.broadcast(right) if broadcast_benchmark else right
     return (
         left.join(build, "shingle")
-        .groupBy(id_col)
+        .groupBy(F.col(ident(id_col)))
         .agg(
             F.countDistinct("shingle").alias("n_shared_shingles"),
             F.countDistinct("__bench_id").alias("n_benchmark_docs"),
@@ -1130,8 +1140,8 @@ def _banded_signatures(
             f"{string_lit('|')}, {string_lit(str(b))}, {cols_sql})) AS bkey)"
         )
     return sig.select(
-        F.col(id_col), F.explode(F.expr(f"array({', '.join(entries)})")).alias("b")
-    ).select(id_col, "b.band", "b.bkey")
+        F.col(ident(id_col)), F.explode(F.expr(f"array({', '.join(entries)})")).alias("b")
+    ).select(F.col(ident(id_col)), "b.band", "b.bkey")
 
 
 def minhash_lsh_pairs_cross(
@@ -1230,8 +1240,8 @@ def minhash_lsh_pairs_cross(
     return (
         corp_b.join(new_b, on=[F.col("l.bkey") == F.col("r.bkey")])
         .select(
-            F.col(f"l.{id_col}").alias("new_id"),
-            F.col(f"r.{id_col}").alias("corpus_id"),
+            F.col(f"l.{ident(id_col)}").alias("new_id"),
+            F.col(f"r.{ident(id_col)}").alias("corpus_id"),
         )
         .distinct()
     )

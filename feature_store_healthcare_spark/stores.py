@@ -135,7 +135,8 @@ class LatestStore:
         ``(ts_col, *tiebreak)`` IS the merge guard — an update older than
         the stored row loses, matching ``WHEN MATCHED AND source.ts >
         target.ts THEN UPDATE``.  The one latest-wins merge of the
-        package: ``tableops.upsert`` (the streaming CDC fold) is this."""
+        package: ``streaming.pipeline.streaming_cdc_apply`` folds each
+        micro-batch with it too."""
         tiebreak = tiebreak or []
         current = self.read()
         merged = updates if current is None else current.unionByName(updates)

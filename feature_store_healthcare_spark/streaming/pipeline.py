@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feature_store_healthcare_spark import tableops
+from feature_store_healthcare_spark.stores import LatestStore
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -653,43 +654,36 @@ def streaming_cdc_apply(
     tiebreak: list[str] | None = None,
     checkpoint_dir: str | None = None,
     queryName: str = "cdc_apply",
-    op_col: str | None = None,
 ):
     """Streaming twin of operators.cdc: fold a CDC changelog stream
     (upsert/delete ops) into a materialized state table, micro-batch by
-    micro-batch.  (The op column rides through the fold untouched —
-    :func:`read_cdc_state` is where its name matters; the deprecated
-    ``op_col`` keyword is accepted and ignored for that reason.)
+    micro-batch.  It is :func:`streaming_online_upsert` over a
+    ``stores.LatestStore`` at ``state_path``: each non-empty micro-batch
+    is one ``LatestStore.merge``, the argmax over (state ∪ batch) on
+    ``(ts_col, *tiebreak)`` committed as a new version with one pointer
+    flip (a crash leaves the previous version serving; re-folding an
+    applied batch changes nothing).  The op column rides through the
+    merge untouched; :func:`read_cdc_state` is where its name matters.
 
-    Params after ``keys`` are KEYWORD-ONLY: an earlier signature had
-    ``op_col`` as the 4th positional slot, so a stale positional caller
-    passing ``'op'`` would silently bind it to ``ts_col``/``tiebreak``
-    and fail deep inside the fold with a misleading AnalysisException —
-    now it fails at the call site with a plain TypeError.
+    Params after ``keys`` are keyword-only, so a positional caller
+    cannot bind an op-column name to ``ts_col`` or ``tiebreak``.
 
     The state RETAINS winning delete rows as tombstones (read them out
     with :func:`read_cdc_state`, which filters them): a late update older
     than a delete must LOSE, and without the tombstone the delete's
-    timestamp would be forgotten the moment it wins.  Each micro-batch is
-    folded into the state by one argmax over (state ∪ batch) whose
-    ``max`` aggregate combines map-side, so the SHUFFLE scales with
-    distinct keys, not rows; the fold reads and rewrites the full state
-    table (per-batch state I/O is O(total keys) on plain parquet — on
-    Delta/Iceberg the same fold is one MERGE INTO touching only changed
-    files).  The fold is replay-idempotent by argmax (re-folding an
-    applied batch changes nothing), and each fold commits a new state
-    version with one pointer flip (a crash leaves the previous version
-    serving).  The fold itself IS ``tableops.upsert`` — the MERGE INTO
-    boundary a Delta/Iceberg deployment swaps out.  The state is a
-    versioned root: read it with :func:`read_cdc_state`."""
-    tiebreak = tiebreak or []
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        tableops.upsert(batch_df, state_path, keys, ts_col, tiebreak=tiebreak)
-
-    return _maintenance_writer(stream, _fold, queryName, checkpoint_dir)
+    timestamp would be forgotten the moment it wins.  The argmax's
+    ``max`` aggregate combines map-side, so the shuffle scales with
+    distinct keys, not rows; each fold reads and rewrites the full state
+    (per-batch state I/O is O(total keys))."""
+    return streaming_online_upsert(
+        stream,
+        LatestStore(stream.sparkSession, state_path),
+        keys,
+        ts_col=ts_col,
+        tiebreak=tiebreak,
+        checkpoint_dir=checkpoint_dir,
+        queryName=queryName,
+    )
 
 
 def read_cdc_state(
@@ -794,80 +788,6 @@ DECAY_OUT_SCHEMA = T.StructType(
         T.StructField("last_us", T.LongType()),
     ]
 )
-
-
-def streaming_decayed_counters_v2(
-    stream: DataFrame,
-    half_life_days: float = 7.0,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Spark 4 state-v2 (``transformWithStateInPandas`` + typed
-    ValueState) form of :func:`streaming_decayed_counters` — identical
-    fold, the forward-looking API.  REQUIRES a working ``google.protobuf``
-    (the TWS state-server protocol) and the RocksDB state store provider;
-    this container ships a broken protobuf, so the v1
-    ``applyInPandasWithState`` twin below is the tested path and this one
-    is exercised only where the import succeeds (test skips otherwise).
-    """
-    import math
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    lam = math.log(2.0) / (half_life_days * 86400.0 * 1e6)  # per microsecond
-
-    class DecayProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "decay",
-                "count double, total double, n bigint, last_us bigint",
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            if self._state.exists():
-                count, total, n, last_us = self._state.get()
-            else:
-                count, total, n, last_us = 0.0, 0.0, 0, None
-            for pdf in rows:
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for ts, value in zip(pdf["ts"], pdf["value"]):
-                    us = int(ts.value // 1_000)
-                    if last_us is not None:
-                        f = math.exp(-lam * (us - last_us))
-                        count *= f
-                        total *= f
-                    count += 1.0
-                    total += float(value)
-                    n += 1
-                    last_us = us
-            self._state.update((count, total, n, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "decayed_count": [count],
-                    "decayed_sum": [total],
-                    "n_events": [n],
-                    "last_us": [last_us],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            DecayProcessor(),
-            outputStructType=DECAY_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
 
 
 def streaming_decayed_counters(

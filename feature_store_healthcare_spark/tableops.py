@@ -1,14 +1,13 @@
-"""The transactional-table-format seam (round-10 VERDICT #6).
+"""The plain-parquet commit layer.
 
 This engine's persistent state — online latest tables, streaming CDC and
 rollup state, the append-only value log, stored postings/band/IVF/PCA/
-DSIR indexes — lives on PLAIN PARQUET directories because the container
-ships no ACID table format.  Every durability trick that implies (a
-versioned root behind one pointer flip, replay marker files, a flock
-compaction lease) is hand-rolled, correct on a local filesystem, and
-CONCEDED to be a table-format substitute: on Delta Lake or Iceberg each
-operation below is one native transactional call, and a deployment
-swaps the implementation here without touching any operator.
+DSIR indexes — lives on PLAIN PARQUET directories.  Every durability
+trick that implies (a versioned root behind one pointer flip, replay
+marker files, a flock compaction lease) is hand-rolled here and correct
+on a local filesystem.  It stands in for a table format: on Delta Lake
+or Iceberg each operation below is one native transactional call (the
+mapping table below).
 
 This module owns ALL marker/lease/swap file I/O.  Operators and the
 streaming maintainers call the interface; nothing else in the package
@@ -20,26 +19,15 @@ writes the new state into a fresh ``vNNNNNN/`` under the root and flips
 one pointer file (``_CURRENT``); readers resolve :func:`current_dir`.  A
 crash at any point before the flip leaves the previous version serving.
 The bucketed catalog tables are the one exception: their compaction is
-a catalog drop-and-rename (``stores.compact_bucketed``).
+a catalog drop-and-rename (``stores.compact_bucketed``).  The one
+latest-wins merge, ``stores.LatestStore.merge`` (the online tables and
+the streaming CDC state), commits through that flip.
 
-The mapping below is EXECUTABLE, not just documented (round 12):
-:mod:`tableops_delta` and :mod:`tableops_iceberg` implement this same
-surface as native transactions (signature parity pinned by
-tests/test_tableops_delta.py and tests/test_tableops_iceberg.py; both
-carry env-gated integration suites that run wherever the respective
-runtime is installed).
-
-MERGE-shaped interface → table-format mapping:
+Interface → table-format mapping:
 
 =====================  ====================================================
 this module            Delta Lake / Iceberg equivalent
 =====================  ====================================================
-:func:`upsert`         ``MERGE INTO state USING batch ON keys WHEN MATCHED
-                       AND batch newer THEN UPDATE WHEN NOT MATCHED THEN
-                       INSERT`` — one ACID commit; the ``ts_col`` +
-                       ``tiebreak`` argmax here is the MATCHED-newer guard.
-                       Commits by :func:`write_version`
-                       (``stores.LatestStore.merge``).
 :func:`merge_fold`     an arbitrary read-modify-write committed as one
                        transaction (Delta: ``txn.commit`` of the rewritten
                        files; Iceberg: ``newOverwrite()``); used for
@@ -69,8 +57,7 @@ physically-simultaneous appends to one index (two writers interleaving
 files — serialized here by the txn-marker contract and operational
 discipline), an append racing a compaction (it can land in the version
 the compaction already read), and multi-table atomic commits.  These
-are documented at each call site; the seam exists so closing them is a
-swap of this module, not a rewrite of operators.
+are documented at each call site.
 """
 
 from __future__ import annotations
@@ -80,7 +67,6 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 
@@ -248,6 +234,8 @@ def flip_pointer(pointer_path: str, value: str) -> None:
     tmp = pointer_path + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(value)
+        fh.flush()
+        os.fsync(fh.fileno())  # data before rename — no torn pointer
     os.replace(tmp, pointer_path)  # atomic on POSIX
 
 
@@ -272,12 +260,21 @@ def versions(root: str) -> list[int]:
 
 
 def current_version(root: str) -> int | None:
-    """The version ``root``'s pointer names (None before the first commit)."""
-    cur = read_pointer(os.path.join(root, "_CURRENT"))
-    try:
-        return int(cur) if cur is not None else None
-    except ValueError:
+    """The version ``root``'s pointer names (None before the first commit).
+    An unparsable pointer raises ``ValueError``: reading it as "never
+    committed" would make the next :func:`write_version` restart at
+    ``v000001`` and silently drop the committed state.  (A torn replay
+    marker, by contrast, means "missing": see :func:`read_batch_marker`.)"""
+    pointer = os.path.join(root, "_CURRENT")
+    cur = read_pointer(pointer)
+    if cur is None:
         return None
+    try:
+        return int(cur)
+    except ValueError:
+        raise ValueError(
+            f"garbled version pointer {pointer!r} under {root!r}: {cur!r}"
+        ) from None
 
 
 def current_dir(root: str) -> str:
@@ -449,39 +446,8 @@ def release_compaction_lease(lease: str, owner: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# The MERGE-shaped operations
+# Read-modify-write folds and appends
 # ---------------------------------------------------------------------------
-
-
-def upsert(
-    batch: DataFrame,
-    state_path: str,
-    keys: Iterable[str],
-    ts_col: str,
-    tiebreak: Iterable[str] = (),
-    marker: dict | None = None,
-) -> None:
-    """Latest-wins upsert of ``batch`` into the versioned state root at
-    ``state_path`` — the plain-parquet stand-in for ``MERGE INTO state
-    USING batch ON keys WHEN MATCHED AND batch is newer (ts_col, then
-    tiebreak) THEN UPDATE WHEN NOT MATCHED THEN INSERT``.  It IS
-    ``stores.LatestStore.merge``: the argmax over (state ∪ batch), one
-    new version committed by :func:`write_version`'s single flip, so a
-    crash leaves the previous version serving and re-applying an
-    applied batch changes nothing (replay-idempotent).  The batch is not
-    reduced first: the argmax is associative and its ``max`` aggregate
-    already combines map-side.  Tombstones and any op column ride
-    through untouched — this merges ROWS; what a row means is the
-    caller's contract (``streaming.pipeline.streaming_cdc_apply``).
-    ``marker`` is accepted for signature parity and ignored, as in
-    :mod:`tableops_delta`: the argmax makes a replay a no-op.  On plain
-    parquet each call rewrites the full state (O(total keys) I/O); a
-    table format's MERGE touches only the changed files."""
-    from feature_store_healthcare_spark.stores import LatestStore
-
-    LatestStore(batch.sparkSession, state_path).merge(
-        batch, list(keys), ts_col, list(tiebreak)
-    )
 
 
 def merge_fold(

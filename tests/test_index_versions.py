@@ -21,7 +21,7 @@ from pyspark.sql.readwriter import DataFrameWriter
 from feature_store_healthcare_spark import maintenance, queries, tableops
 from feature_store_healthcare_spark.operators import sampling, similarity
 from feature_store_healthcare_spark.sources import load_table
-from feature_store_healthcare_spark.stores import AppendStore
+from feature_store_healthcare_spark.stores import AppendStore, LatestStore
 from feature_store_healthcare_spark.streaming import read_cdc_state
 
 class InjectedCrash(RuntimeError):
@@ -221,7 +221,7 @@ def test_cdc_upsert_crash_keeps_previous_version(spark, tmp_path, monkeypatch):
     state = str(tmp_path / "cdc")
     schema = "k long, v string, ts long, op string"
     base = spark.createDataFrame([(1, "a", 10, "U"), (2, "b", 10, "U")], schema)
-    tableops.upsert(base, state, ["k"], "ts")
+    LatestStore(spark, state).merge(base, ["k"], "ts")
     batch = spark.createDataFrame(
         [(1, "x", 20, "U"), (2, "b", 30, "D"), (3, "c", 5, "U")], schema
     )
@@ -231,12 +231,12 @@ def test_cdc_upsert_crash_keeps_previous_version(spark, tmp_path, monkeypatch):
 
     _crashes_keep_rows(
         monkeypatch,
-        lambda: tableops.upsert(batch, state, ["k"], "ts"),
+        lambda: LatestStore(spark, state).merge(batch, ["k"], "ts"),
         live,
         "v000002",
     )
     assert live() == [(1, "a", 10), (2, "b", 10)]
-    tableops.upsert(batch, state, ["k"], "ts")
+    LatestStore(spark, state).merge(batch, ["k"], "ts")
     assert live() == [(1, "x", 20), (3, "c", 5)]
     assert tableops.current_version(state) == 2
 

@@ -99,6 +99,37 @@ def test_strategies_agree(values):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+#: (batch ts, batch seq, state ts, state seq, batch wins): a NULL ``ts``
+#: or NULL tiebreak loses at every level of the (ts, seq) order
+NULL_ORDER_CASES = [
+    (2, 0, 1, 0, True),  # plain newer
+    (1, 0, 2, 0, False),  # plain older
+    (None, 0, 1, 0, False),  # NULL batch ts loses to non-NULL state
+    (1, 0, None, 0, True),  # non-NULL batch beats NULL state ts
+    (None, 2, None, 1, True),  # both NULL ts → seq tiebreak
+    (None, 1, None, 1, False),  # full tie → payload fallback, "state" > "batch"
+    (None, None, None, 1, False),  # NULL seq loses at tie level
+    (None, 1, None, None, True),
+]
+
+
+@pytest.mark.parametrize("strategy", ["max_by", "window"])
+def test_latest_per_key_null_ordering(spark, strategy):
+    """The latest-wins merge's NULL order: for each case, latest_per_key
+    over {state row, batch row} of one key picks the batch row iff the
+    batch is newer, NULL lowest at every level."""
+    rows = []
+    for k, (bts, bseq, sts, sseq, _) in enumerate(NULL_ORDER_CASES):
+        rows += [(k, "state", sts, sseq), (k, "batch", bts, bseq)]
+    df = spark.createDataFrame(rows, "k long, who string, ts long, seq long")
+    got = {
+        r.k: r.who == "batch"
+        for r in latest_per_key(df, ["k"], "ts", tiebreak=["seq"], strategy=strategy)
+        .collect()
+    }
+    assert got == {k: c[4] for k, c in enumerate(NULL_ORDER_CASES)}
+
+
 def test_pit_join_per_row_asof(spark, values):
     """Each spine row gets its own cutoff (OP-16): values strictly after a
     spine row's timestamp never leak into that row."""

@@ -124,3 +124,48 @@ def test_generated_sql_parser_modes_and_awkward_names(spark, escaped):
             assert got_cos == (3.0 - 8.0) / (math.sqrt(5.0) * math.sqrt(25.0))
     finally:
         spark.conf.set(key, prior)
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+@pytest.mark.parametrize("id_col", ["doc_id", "doc`id"])
+def test_dedup_id_col_parser_modes_and_awkward_names(spark, escaped, id_col):
+    """The dedup operators that take ``id_col`` resolve it through
+    ``sqlgen.ident``: exact dedup, SimHash candidates, the Arrow MinHash
+    LSH path and the cluster verdict work for an id named ``doc`id``."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    prior = spark.conf.get(key, "false")
+    spark.conf.set(key, escaped)
+    docs = [(1, "a b c d e"), (2, "a b c d e"), (3, "x y z w"), (4, "a b c d f")]
+    df = spark.createDataFrame(
+        docs,
+        T.StructType(
+            [T.StructField(id_col, T.IntegerType()), T.StructField("my text", T.StringType())]
+        ),
+    )
+    try:
+        exact = dedup.exact_dedup_keep_min(df, ["my text"], id_col)
+        assert {(r["my text"], r[id_col]) for r in exact.collect()} == {
+            ("a b c d e", 1), ("x y z w", 3), ("a b c d f", 4),
+        }
+
+        sig = dedup.simhash_signatures(df, id_col, "my text", bits=16, portable=True)
+        cand = dedup.simhash_candidates(sig, id_col, 16, max_hamming=2)
+        sh = {d: _simhash16(s) for d, s in docs}
+        want = {
+            (a, b)
+            for a in sh
+            for b in sh
+            if a < b and any((sh[a] >> 5 * c) & 31 == (sh[b] >> 5 * c) & 31 for c in range(3))
+        }
+        assert {(r.id_a, r.id_b) for r in cand.collect()} == want and (1, 2) in want
+
+        pairs = dedup.minhash_lsh_pairs(
+            df, id_col, "my text", n=2, num_hashes=8, bands=4, portable=False
+        )
+        assert (1, 2) in {(r.id_a, r.id_b) for r in pairs.collect()}
+        verdict = dedup.cluster_survivors(df, pairs, id_col)
+        got = {r[id_col]: (r.component, r.is_keeper) for r in verdict.collect()}
+        assert got[1] == (1, True) and got[2] == (1, False) and got[3] == (3, True)
+    finally:
+        dedup.release_dedup_caches()
+        spark.conf.set(key, prior)

@@ -441,7 +441,7 @@ def test_streaming_burst_throttle_matches_batch_twin(spark, tmp_path):
 
 
 def test_streaming_decayed_counters_match_batch_twin(spark, tmp_path):
-    """state-v2 (transformWithStateInPandas) decayed counters across two
+    """Decayed counters (``applyInPandasWithState``) across two
     micro-batches equal the batch one-shot weighted sum (decay.
     decayed_counters) evaluated at each user's last event, to float
     tolerance — the incremental fold S' = S·2^(-dt/hl) + new carries
@@ -498,36 +498,6 @@ def test_streaming_decayed_counters_match_batch_twin(spark, tmp_path):
         assert math.isclose(got.decayed_count, want.decayed_count, rel_tol=1e-9)
         assert math.isclose(got.decayed_sum, want.decayed_sum, rel_tol=1e-9)
         assert got.last_us == last_us
-
-
-def test_streaming_decayed_counters_v2_state_api(spark, tmp_path):
-    """state-v2 (transformWithStateInPandas) variant — requires a working
-    google.protobuf (the TWS state-server protocol); skipped where the
-    environment ships a broken one (this container does)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unavailable: transformWithState "
-                    "state-server protocol cannot start")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    d = tmp_path / "decay2_in"
-    d.mkdir()
-    (d / "b1.json").write_text(json.dumps(
-        {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "a", "value": 10.0, "props": "{}"}))
-    stream = sp.stream_events(spark, str(d))
-    out = sp.streaming_decayed_counters_v2(stream, half_life_days=7.0)
-    _run_available_now(
-        out.writeStream.format("memory").queryName("decay2_out").outputMode("update"),
-        tmp_path,
-        "decay2",
-    )
-    rows = spark.table("decay2_out").collect()
-    assert rows and rows[0].decayed_count == 1.0
 
 
 def test_streaming_postings_maintenance_matches_batch_build(spark, tmp_path):

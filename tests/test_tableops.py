@@ -1,16 +1,18 @@
-"""Direct contract tests for tableops — the transactional-table-format
-seam (round-10 VERDICT #6).  The streaming maintainers exercise these
-through foreachBatch; here the MERGE-shaped interface is pinned on its
-own so a Delta/Iceberg swap-in has an executable spec to reproduce.
+"""Direct contract tests for tableops — the plain-parquet commit layer —
+and the latest-wins merge (``stores.LatestStore.merge``) that commits
+through it.  The streaming maintainers exercise these through
+foreachBatch; here each operation is pinned on its own.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from feature_store_healthcare_spark import tableops
+from feature_store_healthcare_spark.stores import LatestStore
 
 
 def _rows(spark, path):
@@ -29,16 +31,16 @@ def test_upsert_latest_wins_and_ts_guard(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 10)], "k long, v string, ts long"
     )
-    tableops.upsert(base, state, ["k"], "ts")
+    LatestStore(spark, state).merge(base, ["k"], "ts")
     assert _rows(spark, state) == {(1, "a", 10), (2, "b", 10)}
     batch = spark.createDataFrame(
         [(1, "late", 5), (2, "newer", 20), (3, "new", 1)],
         "k long, v string, ts long",
     )
-    tableops.upsert(batch, state, ["k"], "ts")
+    LatestStore(spark, state).merge(batch, ["k"], "ts")
     assert _rows(spark, state) == {(1, "a", 10), (2, "newer", 20), (3, "new", 1)}
     # replay-idempotent: re-applying the same batch changes nothing
-    tableops.upsert(batch, state, ["k"], "ts")
+    LatestStore(spark, state).merge(batch, ["k"], "ts")
     assert _rows(spark, state) == {(1, "a", 10), (2, "newer", 20), (3, "new", 1)}
 
 
@@ -47,9 +49,31 @@ def test_upsert_tiebreak_deterministic(spark, tmp_path):
     batch = spark.createDataFrame(
         [(1, "x", 10, 1), (1, "y", 10, 2)], "k long, v string, ts long, seq long"
     )
-    tableops.upsert(batch, state, ["k"], "ts", tiebreak=["seq"])
+    LatestStore(spark, state).merge(batch, ["k"], "ts", tiebreak=["seq"])
     got = spark.read.parquet(tableops.current_dir(state)).collect()
     assert len(got) == 1 and got[0].v == "y"  # higher seq wins the ts tie
+
+
+def test_garbled_pointer_raises_instead_of_resetting(spark, tmp_path):
+    """An unparsable ``_CURRENT`` is an error, not "never committed": the
+    store must not read as empty, and a merge must not restart at
+    ``v000001`` with only the new batch."""
+    state = str(tmp_path / "state")
+    store = LatestStore(spark, state)
+    schema = "k long, v string, ts long"
+    store.merge(spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema), ["k"], "ts")
+    store.merge(spark.createDataFrame([(3, "c", 1)], schema), ["k"], "ts")
+    assert store.read().count() == 3
+    with open(os.path.join(state, "_CURRENT"), "w"):
+        pass  # emptied pointer
+    for call in (
+        store.read,
+        lambda: store.merge(spark.createDataFrame([(4, "d", 1)], schema), ["k"], "ts"),
+        lambda: LatestStore(spark, state).read(),
+    ):
+        with pytest.raises(ValueError, match="_CURRENT"):
+            call()
+    assert store.versions() == [2]
 
 
 def test_merge_fold_first_and_subsequent_commits(spark, tmp_path):
